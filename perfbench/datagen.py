@@ -172,55 +172,67 @@ def write_staging_csv(path: str, n_rows: int, seed: int) -> None:
         w.writerows(zip(*(cols[c] for c in STAGING_COLUMNS)))
 
 
+#: The corpus generator reproduces the repository's reference corpus,
+#: the sf0.1 ``documents`` (5000 rows) and ``embeddings`` (2000 rows)
+#: tables, from these measurements of it:
+#:
+#: - text: tokens drawn uniformly from the 30 words below (each 2.9-3.0%
+#:   of all tokens), 10..99 tokens per text, uniformly (500-570 texts in
+#:   every decile of that range);
+#: - near-duplicates: 250 texts (5%) are another text of the table plus
+#:   a trailing ``dup`` token. Copies of copies give 9 clusters of 3 and
+#:   one of 4 besides 223 pairs; two copies of one text give the table's
+#:   8 exact-duplicate pairs; 5 copies outlived the text they copied;
+#: - ``lang`` is independent of the text: en 41.2%, zh 15.1%, es 14.9%,
+#:   fr 14.8%, de 14.0%; ``source`` is ``src{doc_id % 20}``; ``n_chars``
+#:   is the text's length;
+#: - embeddings: 64 floats, i.i.d. normal entries scaled to unit norm
+#:   (entry std 0.125, kurtosis 2.92), no near-duplicates (the closest
+#:   pair has cosine 0.60); ``label`` uniform on 0..9.
 _WORDS = (
     "a agg batch big column customer data fast filter group hash join key "
     "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window zone"
+    "table the value vector window"
 ).split()
+DOC_TOKENS = (10, 100)
+NEAR_DUP_SHARE = 0.05
+DUP_TOKEN = "dup"
 _LANGS = ["en", "zh", "es", "fr", "de"]
-_LANG_P = [0.41, 0.15, 0.15, 0.15, 0.14]
+_LANG_P = [0.4118, 0.1506, 0.1488, 0.1484, 0.1404]
 _ABC = "abcdefghijklmnopqrstuvwxyz"
 EMB_DIM = 64
+N_LABELS = 10
 
 
-def _base_documents(rng: np.random.Generator, n: int) -> list[str]:
-    """``n`` texts over a small vocabulary, in shuffled order. 6% are
-    edited copies of an original text (10% of tokens replaced, shingle
-    Jaccard ~0.6) and 1% exact copies: the near-duplicates MinHash must
-    find. Every copy has its own original, so each duplicate cluster is
-    one pair whatever the seed, and the graph operators do the same
-    number of rounds on every seed."""
-    n_near, n_exact = n * 6 // 100, n // 100
-    n_orig = n - n_near - n_exact
-    texts = [
-        " ".join(_WORDS[k] for k in rng.integers(0, len(_WORDS), int(rng.integers(10, 101))))
-        for _ in range(n_orig)
-    ]
-    for j, src in enumerate(rng.choice(n_orig, size=n_near + n_exact, replace=False)):
-        toks = texts[src].split(" ")
-        if j < n_near:
-            for k in rng.choice(len(toks), size=max(1, len(toks) // 10), replace=False):
-                toks[k] = _WORDS[int(rng.integers(0, len(_WORDS)))]
-        texts.append(" ".join(toks))
-    return [texts[i] for i in rng.permutation(n)]
+def _base_documents(rng: np.random.Generator, n: int) -> tuple[list[str], np.ndarray]:
+    """``n`` texts and, per text, the index of the random text it was
+    derived from (its root). ``NEAR_DUP_SHARE`` of the positions, taken
+    in random order, are overwritten with a copy of a random text plus
+    ``DUP_TOKEN``; a copy may copy an earlier copy, and a copied text may
+    be overwritten later, as in the reference corpus. Texts with one
+    root are near-duplicates of each other; no other pair is."""
+    lengths = rng.integers(*DOC_TOKENS, n)
+    words = np.array(_WORDS)[rng.integers(0, len(_WORDS), int(lengths.sum()))]
+    bounds = np.concatenate(([0], np.cumsum(lengths)))
+    texts = [" ".join(words[bounds[i]:bounds[i + 1]]) for i in range(n)]
+    roots = np.arange(n)
+    for i in rng.choice(n, size=round(n * NEAR_DUP_SHARE), replace=False):
+        j = int(rng.integers(0, n))
+        texts[i] = texts[j] + " " + DUP_TOKEN
+        roots[i] = roots[j]
+    return texts, roots
 
 
 def _base_embeddings(rng: np.random.Generator, n: int) -> np.ndarray:
-    """``n`` unit vectors in shuffled order; 5% are noisy twins of their
-    own original vector (cosine ~0.99), the near-duplicates the
-    embedding LSH must find."""
-    n_twins = n // 20
-    vecs = rng.standard_normal((n, EMB_DIM)).astype(np.float32)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    src = rng.choice(n - n_twins, size=n_twins, replace=False)
-    vecs[n - n_twins:] = vecs[src] + rng.standard_normal((n_twins, EMB_DIM)).astype(np.float32) * 0.01
-    vecs = vecs[rng.permutation(n)]
+    vecs = rng.standard_normal((n, EMB_DIM))
     return (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
 
 
-def write_corpus(out_dir: str, n_docs: int, n_vecs: int, copies: int, seed: int) -> None:
+def write_corpus(out_dir: str, n_docs: int, n_vecs: int, copies: int, seed: int) -> np.ndarray:
     """``documents.parquet`` and ``embeddings.parquet`` under ``out_dir``:
-    ``copies`` perturbed copies of one seeded base corpus.
+    ``copies`` perturbed copies of one seeded base corpus. Returns the
+    root of every document (by ``doc_id``): two documents are planted
+    near-duplicates exactly when their roots are equal.
 
     Copy 0 is the base; copy c > 0 maps every text through a per-copy
     a-z bijection plus a token suffix, and flips vector signs per copy.
@@ -229,10 +241,10 @@ def write_corpus(out_dir: str, n_docs: int, n_vecs: int, copies: int, seed: int)
     while group size stays the same.
     """
     rng = np.random.default_rng([seed, 2])
-    texts = _base_documents(rng, n_docs)
+    texts, roots = _base_documents(rng, n_docs)
     langs = rng.choice(_LANGS, size=n_docs, p=_LANG_P).tolist()
     vecs = _base_embeddings(rng, n_vecs)
-    labels = rng.integers(0, 10, n_vecs).astype(np.int32)
+    labels = rng.integers(0, N_LABELS, n_vecs).astype(np.int32)
     doc_text: list[str] = []
     all_vecs = []
     for c in range(copies):
@@ -266,3 +278,4 @@ def write_corpus(out_dir: str, n_docs: int, n_vecs: int, copies: int, seed: int)
     os.makedirs(out_dir, exist_ok=True)
     pq.write_table(docs, os.path.join(out_dir, "documents.parquet"))
     pq.write_table(emb, os.path.join(out_dir, "embeddings.parquet"))
+    return np.concatenate([roots + c * n_docs for c in range(copies)])

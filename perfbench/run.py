@@ -4,9 +4,10 @@
 
 Run from the root of a checkout. One process, one client, closed loop,
 ``local[$(nproc)]``. The run sets up a Spark session, generates the
-workload's inputs from ``--seed``, runs one untimed warm-up operation, then runs
-operations until they have taken ``--seconds`` seconds in total (and at
-least two), checking every operation's output outside the timed region.
+workload's inputs from ``--seed``, runs one untimed warm-up operation on
+inputs a tenth the size, then runs operations until they have taken
+``--seconds`` seconds in total (at least one), checking every
+operation's output outside the timed region.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` turns the
 Spark event log on, alternates traced operations (each layer under its
@@ -41,11 +42,14 @@ ROOT = os.getcwd()
 #: local[n] with n = the cores this process may run on (what nproc prints)
 CPUS = len(os.sched_getaffinity(0))
 PACKAGE = "sfcrimedatapipeline_spark"
-#: driver JVM heap; pinned so memory figures compare across revisions
+#: driver JVM heap, initial = maximum (see start_session)
 DRIVER_MEMORY = "2g"
-#: timed operations per run at least, however long one takes: a run's
-#: figure is then a median over operations, not one sample
-MIN_OPS = 2
+#: timed operations per run at least, however long one takes
+MIN_OPS = 1
+#: input scale of the untimed warm-up operation: it pays the fresh JVM's
+#: class loading, code generation and most JIT compilation on the same
+#: code paths at a tenth of the work
+WARM_SCALE = 0.1
 
 END_TO_END = {
     "setup_s": "s",
@@ -61,54 +65,54 @@ END_TO_END = {
 PER_LAYER = [
     ("session.start_s", "s", "lower", "setup_s"),
     ("session.worker_warm_s", "s", "lower", "setup_s"),
-    ("sources.csv.wall_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.csv.cpu_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.csv.input_bytes", "bytes", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("operators.keys.wall_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("operators.keys.jobs", "count", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("operators.keys.shuffle_write_bytes", "bytes", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.dims.wall_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.dims.shuffle_write_bytes", "bytes", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.dims.rows_out", "rows", "higher", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.fact.build_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.fact.wall_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.fact.shuffle_read_bytes", "bytes", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.fact.spill_bytes", "bytes", "lower", "elt_refresh: op_wall_s, rows_per_s, peak_rss_mb"),
-    ("plans.fact.null_fk_rows", "rows", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.fact.serve_wall_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.fact.serve_keep_ratio", "ratio", "higher", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.build_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.exec_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.result_transfer_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.sched_leftover_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("plans.jobs", "count", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.tables.write_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.tables.bytes_written", "bytes", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.tables.files_written", "count", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.tables.write_ratio", "ratio", "lower", "elt_refresh: op_wall_s, rows_per_s"),
-    ("sources.tables.scan_bytes", "bytes", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("sources.serve.export_s", "s", "lower", "elt_refresh: op_wall_s, rows_per_s"),
+    ("sources.csv.wall_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("sources.csv.cpu_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("sources.csv.input_bytes", "bytes", "lower", "elt_refresh: rows_per_s"),
+    ("operators.keys.wall_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("operators.keys.jobs", "count", "lower", "elt_refresh: rows_per_s"),
+    ("operators.keys.shuffle_write_bytes", "bytes", "lower", "elt_refresh: rows_per_s"),
+    ("plans.dims.wall_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.dims.shuffle_write_bytes", "bytes", "lower", "elt_refresh: rows_per_s"),
+    ("plans.dims.rows_out", "rows", "higher", "elt_refresh: rows_per_s"),
+    ("plans.fact.build_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.fact.wall_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.fact.shuffle_read_bytes", "bytes", "lower", "elt_refresh: rows_per_s"),
+    ("plans.fact.spill_bytes", "bytes", "lower", "elt_refresh: rows_per_s"),
+    ("plans.fact.null_fk_rows", "rows", "lower", "elt_refresh: rows_per_s"),
+    ("plans.fact.serve_wall_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.fact.serve_keep_ratio", "ratio", "higher", "elt_refresh: rows_per_s"),
+    ("plans.build_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.exec_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.result_transfer_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.sched_leftover_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("plans.jobs", "count", "lower", "elt_refresh: rows_per_s"),
+    ("sources.tables.write_s", "s", "lower", "elt_refresh: rows_per_s"),
+    ("sources.tables.bytes_written", "bytes", "lower", "elt_refresh: rows_per_s"),
+    ("sources.tables.files_written", "count", "lower", "elt_refresh: rows_per_s"),
+    ("sources.tables.write_ratio", "ratio", "lower", "elt_refresh: rows_per_s"),
+    ("sources.tables.scan_bytes", "bytes", "lower", "corpus_curation: rows_per_s"),
+    ("sources.serve.export_s", "s", "lower", "elt_refresh: rows_per_s"),
     ("functions.caching.peak_storage_bytes", "bytes", "lower", "both: peak_rss_mb, rows_per_s"),
     ("functions.caching.cached_rdds", "count", "lower", "both: peak_rss_mb, rows_per_s"),
-    ("operators.dedup.minhash_wall_s", "s", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.dedup.candidate_pairs", "count", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.dedup.verified_pairs", "count", "higher", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.dedup.lsh_precision", "ratio", "higher", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.dedup.emb_lsh_wall_s", "s", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.corpus.cc_two_phase_wall_s", "s", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.corpus.cc_two_phase_jobs", "count", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.corpus.cc_label_prop_wall_s", "s", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.corpus.cc_label_prop_jobs", "count", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.corpus.curate_wall_s", "s", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.graph.pagerank_wall_s", "s", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("operators.graph.pagerank_jobs", "count", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("python.bytes_sent", "bytes", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("python.bytes_received", "bytes", "lower", "corpus_curation: op_wall_s, rows_per_s"),
-    ("python.rows", "rows", "lower", "corpus_curation: op_wall_s, rows_per_s"),
+    ("operators.dedup.minhash_wall_s", "s", "lower", "corpus_curation: rows_per_s"),
+    ("operators.dedup.candidate_pairs", "count", "lower", "corpus_curation: rows_per_s"),
+    ("operators.dedup.verified_pairs", "count", "higher", "corpus_curation: rows_per_s"),
+    ("operators.dedup.lsh_precision", "ratio", "higher", "corpus_curation: rows_per_s"),
+    ("operators.dedup.emb_lsh_wall_s", "s", "lower", "corpus_curation: rows_per_s"),
+    ("operators.corpus.cc_two_phase_wall_s", "s", "lower", "corpus_curation: rows_per_s"),
+    ("operators.corpus.cc_two_phase_jobs", "count", "lower", "corpus_curation: rows_per_s"),
+    ("operators.corpus.cc_label_prop_wall_s", "s", "lower", "corpus_curation: rows_per_s"),
+    ("operators.corpus.cc_label_prop_jobs", "count", "lower", "corpus_curation: rows_per_s"),
+    ("operators.corpus.curate_wall_s", "s", "lower", "corpus_curation: rows_per_s"),
+    ("operators.graph.pagerank_wall_s", "s", "lower", "corpus_curation: rows_per_s"),
+    ("operators.graph.pagerank_jobs", "count", "lower", "corpus_curation: rows_per_s"),
+    ("python.bytes_sent", "bytes", "lower", "corpus_curation: rows_per_s"),
+    ("python.bytes_received", "bytes", "lower", "corpus_curation: rows_per_s"),
+    ("python.rows", "rows", "lower", "corpus_curation: rows_per_s"),
     ("spark.jobs", "count", "lower", "both: rows_per_s"),
     ("spark.tasks", "count", "lower", "both: rows_per_s"),
     ("spark.cpu_s", "s", "lower", "both: rows_per_s"),
-    ("spark.gc_s", "s", "lower", "both: rows_per_s, peak_rss_mb"),
+    ("spark.gc_s", "s", "lower", "both: rows_per_s"),
     ("spark.shuffle_read_bytes", "bytes", "lower", "both: rows_per_s"),
     ("spark.shuffle_write_bytes", "bytes", "lower", "both: rows_per_s"),
     ("spark.spill_bytes", "bytes", "lower", "both: rows_per_s"),
@@ -193,6 +197,33 @@ class RssSampler(threading.Thread):
         return self.peak
 
 
+class StoragePoller(threading.Thread):
+    """Peak bytes held by cached RDD blocks, and peak number of cached
+    RDDs, while it runs: the JVM's storage status, polled every 0.1 s."""
+
+    def __init__(self, sc):
+        super().__init__(daemon=True)
+        self.jsc = sc._jsc.sc()
+        self.peak_bytes = 0
+        self.peak_rdds = 0
+        self._stop_event = threading.Event()
+
+    def _sample(self) -> None:
+        infos = self.jsc.getRDDStorageInfo()
+        self.peak_bytes = max(self.peak_bytes, sum(i.memSize() + i.diskSize() for i in infos))
+        self.peak_rdds = max(self.peak_rdds, len(infos))
+
+    def run(self):
+        while not self._stop_event.is_set():
+            self._sample()
+            self._stop_event.wait(0.1)
+
+    def stop(self) -> tuple[int, int]:
+        self._stop_event.set()
+        self.join(timeout=30)
+        return self.peak_bytes, self.peak_rdds
+
+
 def _revision() -> str:
     """Git sha of the checkout, or a digest of the package sources when
     the checkout is not a git repository."""
@@ -229,13 +260,13 @@ def start_session(work: str, log_dir: str | None):
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     conf = {
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.memory": DRIVER_MEMORY,
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # the whole heap is committed and touched at start-up, so peak RSS
-        # measures what the program adds beyond it (off-heap, code, Python
-        # workers) instead of when G1 happened to grow the heap
-        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
+        # a fixed heap size: with the program's growable 8g heap, peak RSS
+        # follows when G1 decides to expand it. Nothing is pre-touched, so
+        # RSS still follows how much of the heap the program reaches
+        "spark.driver.memory": DRIVER_MEMORY,
+        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY}",
     }
     if log_dir is not None:
         os.makedirs(log_dir, exist_ok=True)
@@ -310,14 +341,15 @@ def attempt(fn, check, cleanup, before_check=lambda: None):
 
 def end_to_end(setup_s, walls, problems_by_op, items, peak_rss_bytes) -> dict:
     """End-to-end metrics of one run, plus ``failed`` and
-    ``ops_failed_ratio``; an operation with any problem counts as failed."""
-    op_walls = walls["traced"] + walls["untraced"]
+    ``ops_failed_ratio``; an operation with any problem counts as failed.
+    Time and throughput are taken from the median untraced operation."""
     attempted = len(problems_by_op)
     failed = sum(1 for p in problems_by_op if p)
+    op_wall_s = statistics.median(walls["untraced"] or walls["traced"])
     return {
         "setup_s": setup_s,
-        "op_wall_s": statistics.median(walls["untraced"] or op_walls),
-        "rows_per_s": items * attempted / sum(op_walls),
+        "op_wall_s": op_wall_s,
+        "rows_per_s": items / op_wall_s,
         "peak_rss_mb": peak_rss_bytes / 2**20,
         "ops_ok_ratio": (attempted - failed) / attempted,
         "ops_failed_ratio": failed / attempted,
@@ -353,7 +385,7 @@ def layer_metrics(tracer, counters, job_spans, layer_sums, n_traced, session, wa
     m["plans.fact.wall_s"] = w("plans.fact")
     m["plans.fact.shuffle_read_bytes"] = g("plans.fact", "shuffle_read_bytes")
     m["plans.fact.spill_bytes"] = g("plans.fact", "spill_bytes")
-    m["plans.fact.serve_wall_s"] = w("plans.exec")
+    m["plans.fact.serve_wall_s"] = w("plans.serve_query")
     m["plans.build_s"] = w("plans.build")
     m["plans.exec_s"] = w("plans.exec")
     m["plans.result_transfer_s"] = w("plans.collect") - w("plans.exec")
@@ -402,7 +434,8 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     log_dir = os.path.join(work, "eventlog") if args.trace else None
-    wl = WORKLOADS[args.workload](work, args.seed)
+    wl = WORKLOADS[args.workload](os.path.join(work, "timed"), args.seed)
+    warm = WORKLOADS[args.workload](os.path.join(work, "warm"), args.seed, scale=WARM_SCALE)
     meta = {
         "revision": _revision(),
         "cpus": CPUS,
@@ -414,13 +447,13 @@ def main(argv=None) -> int:
         **wl.shape(),
     }
     try:
-        res = measure(args, wl, work, log_dir)
+        res = measure(args, wl, warm, work, log_dir)
         return report(args, meta, wl, res, log_dir)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def measure(args, wl, work: str, log_dir: str | None) -> dict:
+def measure(args, wl, warm, work: str, log_dir: str | None) -> dict:
     """Set up, generate inputs, warm up, then run operations for
     ``args.seconds``; the JVM has exited when this returns."""
     from perfbench.tracing import Tracer
@@ -442,17 +475,16 @@ def measure(args, wl, work: str, log_dir: str | None) -> dict:
 
         t = time.perf_counter()
         wl.prepare()
+        warm.prepare()
         res["inputs_s"] = time.perf_counter() - t
 
-        def op(fn, group):
+        def op(fn, group, w=wl):
             sc.setJobGroup(group, "bench")
             return attempt(
-                fn, wl.check, spark.catalog.clearCache, lambda: sc.setJobGroup("bench.check", "bench")
+                fn, w.check, spark.catalog.clearCache, lambda: sc.setJobGroup("bench.check", "bench")
             )
 
-        # one untimed operation pays the fresh JVM's class loading, code
-        # generation and most JIT compilation
-        res["warm_s"], res["warm_problems"] = op(lambda: wl.run(spark), "bench.warmup")
+        res["warm_s"], res["warm_problems"] = op(lambda: warm.run(spark), "bench.warmup", warm)
 
         tracer = res["tracer"] = Tracer(sc)
         layer_sums = res["layer_sums"] = {}
@@ -464,7 +496,12 @@ def measure(args, wl, work: str, log_dir: str | None) -> dict:
             # in a traced run, traced and untraced operations alternate
             if log_dir is not None and len(walls["traced"]) <= len(walls["untraced"]):
                 layer: dict[str, float] = {}
+                poller = StoragePoller(sc)
+                poller.start()
                 wall, found = op(lambda: wl.run_traced(spark, tracer, layer), "bench.traced")
+                peak_bytes, peak_rdds = poller.stop()
+                layer["functions.caching.peak_storage_bytes"] = float(peak_bytes)
+                layer["functions.caching.cached_rdds"] = float(peak_rdds)
                 for k, v in layer.items():
                     layer_sums[k] = layer_sums.get(k, 0.0) + v
                 walls["traced"].append(wall)

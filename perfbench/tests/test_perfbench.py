@@ -12,13 +12,14 @@ import json
 import os
 import sys
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, ROOT)
 
-from perfbench import compare, datagen, run, tracing  # noqa: E402
+from perfbench import compare, datagen, run, tracing, workloads  # noqa: E402
 from perfbench.workloads import WORKLOADS  # noqa: E402
 
 
@@ -52,21 +53,48 @@ def test_staging_csv_is_a_pure_function_of_the_seed(tmp_path):
 
 def test_corpus_is_a_pure_function_of_the_seed(tmp_path):
     dirs = {n: str(tmp_path / n) for n in "abc"}
-    datagen.write_corpus(dirs["a"], 200, 100, copies=3, seed=7)
-    datagen.write_corpus(dirs["b"], 200, 100, copies=3, seed=7)
-    datagen.write_corpus(dirs["c"], 200, 100, copies=3, seed=8)
+    roots = {n: datagen.write_corpus(dirs[n], 200, 100, copies=3, seed=s) for n, s in (("a", 7), ("b", 7), ("c", 8))}
     for table in ("documents", "embeddings"):
         files = {n: os.path.join(d, f"{table}.parquet") for n, d in dirs.items()}
         assert _digest(files["a"]) == _digest(files["b"])
         assert _digest(files["a"]) != _digest(files["c"])
         assert pq.read_metadata(files["a"]).num_rows == pq.read_metadata(files["c"]).num_rows
     docs = pq.read_table(os.path.join(dirs["a"], "documents.parquet")).to_pandas()
-    assert len(docs) == 600 and docs.doc_id.is_unique
-    # copies keep the within-copy duplicate structure: the same number
-    # of exact duplicate texts in every copy, none across copies
-    per_copy = [docs.text[i * 200:(i + 1) * 200].duplicated().sum() for i in range(3)]
-    assert per_copy[0] > 0 and len(set(per_copy)) == 1
-    assert docs.text.duplicated().sum() == sum(per_copy)
+    ra = roots["a"]
+    assert len(docs) == len(ra) == 600 and docs.doc_id.is_unique
+    # 5% of the base texts are copies carrying the near-duplicate marker
+    assert docs.text[:200].str.endswith(" " + datagen.DUP_TOKEN).sum() == 10
+    # copies keep the within-copy duplicate structure and add none across
+    # copies: documents with one root lie in one copy, equal texts share
+    # a root, and every copy has as many roots as the base
+    assert all(len(set(np.flatnonzero(ra == r) // 200)) == 1 for r in set(ra))
+    per_copy = [len(set(ra[i * 200:(i + 1) * 200])) for i in range(3)]
+    assert per_copy[0] < 200 and len(set(per_copy)) == 1
+    for _, ids in docs.groupby("text").doc_id:
+        assert len(set(ra[ids.values])) == 1
+
+
+def test_corpus_check_holds_outputs_to_the_planted_duplicates():
+    wl = WORKLOADS["corpus_curation"]("unused", seed=1)
+    # documents 0, 3 and 4 share a root; 3 and 4 are exact copies
+    wl.planted = workloads._pairs_by_key([0, 1, 2, 0, 0, 5])
+    wl.exact = {(3, 4)}
+    wl.emb_true = workloads._cosine_pairs(
+        np.array([[1.0, 0.0], [0.0, 1.0], [1.0, 0.001]]), threshold=0.95
+    )
+    assert wl.planted == {(0, 3), (0, 4), (3, 4)} and wl.emb_true == {(0, 2)}
+    cc = [(0, 0), (3, 0), (4, 0)]
+    good = {"pairs": [(0, 3), (0, 4), (3, 4)], "cc_two_phase": cc, "cc_label_prop": cc, "emb_pairs": [(0, 2, 0.99)]}
+    assert wl._check(good) == []
+    assert workloads._components([(3, 4), (0, 3)]) == cc
+    bad = [
+        {**good, "pairs": [(0, 3), (0, 4), (3, 4), (1, 2)]},  # not planted
+        {**good, "pairs": [(0, 3), (0, 4)]},  # misses the exact copy
+        {**good, "cc_label_prop": [(0, 0), (3, 3), (4, 3)]},
+        {**good, "emb_pairs": []},
+    ]
+    for out in bad:
+        assert wl._check(out), out
 
 
 def test_tracer_self_time_and_nesting():
@@ -178,8 +206,8 @@ def test_benchmark_json_names_every_reported_metric():
 
 def test_compare_refuses_runs_of_different_shape():
     meta = {"workload": "elt_refresh", "cpus": 4, "rows": 50_000, "copies": 1, "revision": "x", "seed": 1, "trace": 0}
-    a = {"meta": meta, "end_to_end": {"op_wall_s": 10.0}}
-    b = {"meta": {**meta, "seed": 2}, "end_to_end": {"op_wall_s": 12.0}}
+    a = {"meta": meta, "end_to_end": {"rows_per_s": 10.0}}
+    b = {"meta": {**meta, "seed": 2}, "end_to_end": {"rows_per_s": 12.0}}
     assert any("1.200x" in line for line in compare.compare(a, b))
     for key, value in (("cpus", 32), ("rows", 1_000_000), ("copies", 10)):
         with pytest.raises(ValueError, match=key):

@@ -37,19 +37,23 @@ def _dir_bytes(path: str) -> tuple[int, int]:
     return sum(os.path.getsize(f) for f in files), len(files)
 
 
-def storage_sample(spark) -> tuple[int, int]:
-    """(bytes held by cached RDD blocks, number of cached RDDs) now."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return sum(i.memSize() + i.diskSize() for i in infos), len(infos)
+#: the pipeline's dims, in the argument order of build_fact_crime
+DIMS = ("DimDate", "DimTime", "DimLocation", "DimIncident", "DimReportType")
+FACT_FKS = (
+    "IncidentDateID", "IncidentTimeID", "ReportDateID", "ReportTimeID",
+    "LocationID", "IncidentID", "ReportTypeID",
+)
 
 
 class Workload:
     name = ""
     uses_python = False
 
-    def __init__(self, work_dir: str, seed: int):
+    def __init__(self, work_dir: str, seed: int, scale: float = 1.0):
+        """``scale`` shrinks the inputs; the warm-up runs at 0.1."""
         self.work = work_dir
         self.seed = seed
+        self.scale = scale
         #: input rows one operation processes (rows_per_s counts these)
         self.items = 0
         self.first_outputs = None
@@ -78,14 +82,15 @@ class EltRefresh(Workload):
     ROWS = 50_000
 
     def shape(self) -> dict:
-        return {"rows": self.ROWS, "copies": 1}
+        return {"rows": round(self.ROWS * self.scale), "copies": 1}
 
     def prepare(self) -> None:
         self.csv = os.path.join(self.work, "staging", "staging.csv")
         self.out = os.path.join(self.work, "star")
         self.serve_dir = os.path.join(self.work, "serve")
-        datagen.write_staging_csv(self.csv, self.ROWS, self.seed)
-        self.items = self.ROWS
+        self.rows = round(self.ROWS * self.scale)
+        datagen.write_staging_csv(self.csv, self.rows, self.seed)
+        self.items = self.rows
         self.csv_bytes = os.path.getsize(self.csv)
         src = (
             f"read_csv('{self.csv}', delim='|', header=true, all_varchar=true, "
@@ -120,9 +125,9 @@ class EltRefresh(Workload):
         problems = []
         fact = pq.read_table(os.path.join(self.out, "FactCrime"), columns=["CrimeID"])
         ids = fact.column("CrimeID").to_numpy()
-        if len(ids) != self.ROWS:
-            problems.append(f"FactCrime has {len(ids)} rows, staging has {self.ROWS}")
-        elif not (ids.min() == 1 and ids.max() == self.ROWS and len(np.unique(ids)) == self.ROWS):
+        if len(ids) != self.rows:
+            problems.append(f"FactCrime has {len(ids)} rows, staging has {self.rows}")
+        elif not (ids.min() == 1 and ids.max() == self.rows and len(np.unique(ids)) == self.rows):
             problems.append("CrimeID is not dense 1..N")
         for name, want in self.expected_dims.items():
             got = pq.ParquetDataset(os.path.join(self.out, name)).read(columns=[]).num_rows
@@ -141,84 +146,71 @@ class EltRefresh(Workload):
         return _dir_bytes(self.out)[0] / self.csv_bytes
 
     def run_traced(self, spark, tracer, layer: dict) -> None:
-        """The refresh as ``run_pipeline`` orders it, one layer per span.
+        """The refresh through the calls ``run_pipeline`` makes, in its
+        order, with each stage forced under its own span.
 
-        Each stage's output is persisted and forced inside its span, so
-        the next stage reads it from cache and every layer's executor
-        work is counted once. The program itself persists the keyed
-        staging frame and the two generated dims; the raw staging frame,
-        the three derived dims and the fact are persisted here for the
-        attribution only.
+        Nothing is persisted here: ``transform`` persists the keyed
+        staging frame and the two generated dims, as it does in every
+        refresh, and the later stages read those caches. The one extra
+        pass is ``sources.csv``, a parse of the staging file alone; the
+        refresh itself parses the file inside ``load_order_id`` (the
+        ``operators.keys`` span), which scans its input twice.
         """
+        from pyspark.sql import functions as F
         from sfcrimedatapipeline_spark.operators.keys import load_order_id
-        from sfcrimedatapipeline_spark.plans import dims
-        from sfcrimedatapipeline_spark.plans.fact import build_fact_crime, serve_initial_reports
+        from sfcrimedatapipeline_spark.plans.dims import generate_dim_date, generate_dim_time
+        from sfcrimedatapipeline_spark.plans.fact import serve_initial_reports
+        from sfcrimedatapipeline_spark.plans.pipeline import transform
         from sfcrimedatapipeline_spark.sources.csv import read_staging_csv
         from sfcrimedatapipeline_spark.sources.serve import export_csv
         from sfcrimedatapipeline_spark.sources.tables import write_table
-        from pyspark.sql import functions as F
 
-        sc = spark.sparkContext
-        storage = [storage_sample(spark)]
         with tracer.span("sources.csv"):
-            staging = read_staging_csv(spark, self.csv).persist()
-            staging.count()
+            staging = read_staging_csv(spark, self.csv)
+            staging.write.mode("overwrite").format("noop").save()
         with tracer.span("operators.keys"):
-            keyed = load_order_id(staging, "id").persist()
+            keyed = load_order_id(staging, "id")
+            tables = transform(
+                keyed, generate_dim_date(spark, *DATE_RANGE), generate_dim_time(spark)
+            )
+            # transform persisted this very frame (persist returns self)
             keyed.count()
-        storage.append(storage_sample(spark))
-        sc.setJobGroup("bench.unpersist", "bench")
-        staging.unpersist(blocking=True)
         with tracer.span("plans.dims"):
-            tables = {
-                "DimDate": dims.generate_dim_date(spark, *DATE_RANGE).persist(),
-                "DimTime": dims.generate_dim_time(spark).persist(),
-                "DimLocation": dims.build_dim_location(keyed).persist(),
-                "DimIncident": dims.build_dim_incident(keyed).persist(),
-                "DimReportType": dims.build_dim_report_type(keyed).persist(),
-            }
-            layer["plans.dims.rows_out"] = float(sum(t.count() for t in tables.values()))
-        storage.append(storage_sample(spark))
-        dim_args = [tables[k] for k in ("DimDate", "DimTime", "DimLocation", "DimIncident", "DimReportType")]
+            layer["plans.dims.rows_out"] = float(sum(tables[k].count() for k in DIMS))
+        fact = tables["FactCrime"]
         with tracer.span("plans.fact") as fact_span:
-            fact = build_fact_crime(keyed, *dim_args)
             fact._jdf.queryExecution().executedPlan()
             layer["plans.fact.build_s"] = _since(fact_span)
-            fact = fact.persist()
-            n_fact = fact.count()
-        storage.append(storage_sample(spark))
-        sc.setJobGroup("bench.check", "bench")
-        fks = ["IncidentDateID", "IncidentTimeID", "ReportDateID", "ReportTimeID", "LocationID", "IncidentID", "ReportTypeID"]
+            fact.write.mode("overwrite").format("noop").save()
+        spark.sparkContext.setJobGroup("bench.check", "bench")
+        n_fact = fact.count()
         layer["plans.fact.null_fk_rows"] = float(
-            fact.filter(F.greatest(*[F.col(c).isNull().cast("int") for c in fks]) == 1).count()
+            fact.filter(F.greatest(*[F.col(c).isNull().cast("int") for c in FACT_FKS]) == 1).count()
         )
-        # the serve star query, split into plan build, execution (noop
-        # sink) and result transfer (collect minus noop)
-        with tracer.span("plans.build"):
-            serve = serve_initial_reports(fact, *dim_args)
-            serve._jdf.queryExecution().executedPlan()
-        with tracer.span("plans.exec"):
-            serve.write.mode("overwrite").format("noop").save()
-        with tracer.span("plans.collect"):
-            n_serve = len(serve.collect())
+        # the whole serve star query, split into plan build, execution
+        # (noop sink) and result transfer (collect minus noop)
+        with tracer.span("plans.serve_query"):
+            with tracer.span("plans.build"):
+                serve = serve_initial_reports(fact, *[tables[k] for k in DIMS])
+                serve._jdf.queryExecution().executedPlan()
+            with tracer.span("plans.exec"):
+                serve.write.mode("overwrite").format("noop").save()
+            with tracer.span("plans.collect"):
+                n_serve = len(serve.collect())
         layer["plans.fact.serve_keep_ratio"] = n_serve / n_fact
+        tables["ServeInitialReports"] = serve
         with tracer.span("sources.serve"):
             export_csv(serve, self.serve_dir)
-        tables["FactCrime"] = fact
-        tables["ServeInitialReports"] = serve
         with tracer.span("sources.tables.write"):
             for name, df in tables.items():
                 write_table(df, os.path.join(self.out, name))
-        storage.append(storage_sample(spark))
         layer["sources.tables.bytes_written"], layer["sources.tables.files_written"] = map(
             float, _dir_bytes(self.out)
         )
         layer["sources.tables.write_ratio"] = self.write_ratio()
-        layer["functions.caching.peak_storage_bytes"] = float(max(s[0] for s in storage))
-        layer["functions.caching.cached_rdds"] = float(max(s[1] for s in storage))
-        sc.setJobGroup("bench.unpersist", "bench")
-        for df in (keyed, *tables.values()):
-            df.unpersist(blocking=True)
+        # dropping the fact releases transform's caches, as in run()
+        del tables, fact, serve, keyed
+        gc.collect()
 
 
 class CorpusCuration(Workload):
@@ -228,17 +220,30 @@ class CorpusCuration(Workload):
 
     name = "corpus_curation"
     uses_python = True
-    BASE_DOCS = 500
-    BASE_VECS = 500
-    COPIES = 2
+    #: one copy is the size of the sf0.1 reference corpus
+    BASE_DOCS = 5000
+    BASE_VECS = 2000
+    COPIES = 1
+    #: least share of the planted near-duplicate pairs the MinHash LSH
+    #: must find (16 hashes in 4 bands find a pair of Jaccard 0.9 with
+    #: probability 0.98), and of the true embedding pairs the LSH must find
+    MIN_RECALL = 0.9
 
     def shape(self) -> dict:
-        return {"rows": self.BASE_DOCS * self.COPIES, "copies": self.COPIES}
+        return {"rows": round(self.BASE_DOCS * self.scale) * self.COPIES, "copies": self.COPIES}
 
     def prepare(self) -> None:
+        from sfcrimedatapipeline_spark.plans.llmops import EMB_DEDUP_THRESHOLD
+
         self.dir = os.path.join(self.work, "corpus")
-        datagen.write_corpus(self.dir, self.BASE_DOCS, self.BASE_VECS, self.COPIES, self.seed)
-        self.items = self.BASE_DOCS * self.COPIES
+        n_docs, n_vecs = round(self.BASE_DOCS * self.scale), round(self.BASE_VECS * self.scale)
+        roots = datagen.write_corpus(self.dir, n_docs, n_vecs, self.COPIES, self.seed)
+        self.items = n_docs * self.COPIES
+        self.planted = _pairs_by_key(roots)
+        texts = pq.read_table(os.path.join(self.dir, "documents.parquet"), columns=["text"])
+        self.exact = _pairs_by_key(texts.column("text").to_pylist())
+        vecs = pq.read_table(os.path.join(self.dir, "embeddings.parquet")).column("embedding")
+        self.emb_true = _cosine_pairs(np.array(vecs.to_pylist(), dtype=np.float64), EMB_DEDUP_THRESHOLD)
 
     def _inputs(self, spark):
         from sfcrimedatapipeline_spark.functions.partitioning import ensure_min_partitions
@@ -270,16 +275,17 @@ class CorpusCuration(Workload):
             docs, emb = self._inputs(spark)
         out = {}
         with span("operators.dedup.minhash"):
+            # persisted, as the program's own dup-graph queries do
+            # (plans.corpus_queries._dup_pairs): CC and PageRank share it
             pairs = dedup.minhash_near_duplicates(docs).persist()
-            out["pairs"] = pairs.count()
+            out["pairs"] = sorted(tuple(r) for r in pairs.select("doc_a", "doc_b").collect())
         if layer is not None:
             spark.sparkContext.setJobGroup("bench.candidates", "bench")
             sigs = dedup.minhash_signatures(dedup.shingle_sets(docs, drop_empty=True))
             n_cand = dedup.lsh_candidate_pairs(sigs.select("doc_id", "signature")).count()
             layer["operators.dedup.candidate_pairs"] = float(n_cand)
-            layer["operators.dedup.verified_pairs"] = float(out["pairs"])
-            layer["operators.dedup.lsh_precision"] = out["pairs"] / n_cand if n_cand else 0.0
-            storage = [storage_sample(spark)]
+            layer["operators.dedup.verified_pairs"] = float(len(out["pairs"]))
+            layer["operators.dedup.lsh_precision"] = len(out["pairs"]) / n_cand if n_cand else 0.0
         with span("operators.corpus.cc_two_phase"):
             out["cc_two_phase"] = sorted(
                 tuple(r) for r in corpus.connected_components(pairs, algorithm="two_phase").collect()
@@ -293,8 +299,6 @@ class CorpusCuration(Workload):
                 pairs, iters=PAGERANK_ITERS, damping=PAGERANK_DAMPING, deterministic=True
             ).collect()
             out["pagerank"] = sorted(tuple(r) for r in ranks)
-        if layer is not None:
-            storage.append(storage_sample(spark))
         with span("operators.corpus.curate"):
             report = corpus.llm_training_pipeline(
                 docs, MIX_WEIGHTS, MIX_BUDGET, cap=PIPE_CAP, n_shards=PIPE_SHARDS
@@ -308,10 +312,6 @@ class CorpusCuration(Workload):
                 target_bucket_rows=EMB_DEDUP_TARGET_BUCKET,
             ).collect()
             out["emb_pairs"] = sorted(tuple(r) for r in emb_pairs)
-        if layer is not None:
-            storage.append(storage_sample(spark))
-            layer["functions.caching.peak_storage_bytes"] = float(max(s[0] for s in storage))
-            layer["functions.caching.cached_rdds"] = float(max(s[1] for s in storage))
         pairs.unpersist()
         return out
 
@@ -320,15 +320,65 @@ class CorpusCuration(Workload):
 
     def _check(self, out) -> list[str]:
         problems = []
-        if out["cc_two_phase"] != out["cc_label_prop"]:
-            problems.append("connected components: two_phase map != label_prop map")
-        if out["pairs"] == 0 or not out["emb_pairs"]:
-            problems.append("planted near-duplicates were not found")
+        found = {(a, b) for a, b in out["pairs"]}
+        if not found <= self.planted:
+            problems.append(f"{len(found - self.planted)} MinHash pairs are not planted near-duplicates")
+        if not self.exact <= found:
+            problems.append(f"{len(self.exact - found)} exact-copy pairs were not found")
+        if len(found) < self.MIN_RECALL * len(self.planted):
+            problems.append(f"MinHash found {len(found)} of {len(self.planted)} planted pairs")
+        cc = _components(found)
+        if out["cc_two_phase"] != cc:
+            problems.append("connected components: two_phase map != the components of the pairs")
+        if out["cc_label_prop"] != cc:
+            problems.append("connected components: label_prop map != the components of the pairs")
+        emb = {(a, b) for a, b, _cos in out["emb_pairs"]}
+        if not emb <= self.emb_true or len(emb) < self.MIN_RECALL * len(self.emb_true):
+            problems.append(
+                f"embedding LSH found {len(emb)} pairs, {len(emb - self.emb_true)} false; "
+                f"{len(self.emb_true)} pairs reach the threshold"
+            )
         return problems
 
     def _stable(self, out):
         digest = hashlib.sha256(repr((out["pagerank"], out["emb_pairs"], out["cc_two_phase"])).encode())
-        return {"pairs": out["pairs"], "curation": out["curation"], "hash": digest.hexdigest()[:16]}
+        return {"pairs": len(out["pairs"]), "curation": out["curation"], "hash": digest.hexdigest()[:16]}
+
+
+def _pairs_by_key(keys) -> set[tuple[int, int]]:
+    """Every (i, j), i < j, of positions holding equal keys."""
+    groups: dict = {}
+    for i, k in enumerate(keys):
+        groups.setdefault(k, []).append(i)
+    return {(a, b) for g in groups.values() for x, a in enumerate(g) for b in g[x + 1:]}
+
+
+def _cosine_pairs(vecs: np.ndarray, threshold: float) -> set[tuple[int, int]]:
+    """Every (i, j), i < j, with cosine at least ``threshold``, exactly."""
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    out = set()
+    for lo in range(0, len(unit), 1024):
+        sims = unit[lo:lo + 1024] @ unit.T
+        for a, b in zip(*np.nonzero(sims >= threshold)):
+            if lo + a < b:
+                out.add((int(lo + a), int(b)))
+    return out
+
+
+def _components(pairs) -> list[tuple[int, int]]:
+    """(node, smallest node of its component), sorted, for an edge set."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return sorted((n, find(n)) for n in parent)
 
 
 def _since(span: dict) -> float:
