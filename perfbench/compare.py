@@ -6,7 +6,8 @@ Refuses (exit code 2) when the two runs differ in workload, cpus, input
 rows or corpus copies: their numbers do not measure the same thing.
 Otherwise prints every metric both artifacts carry, B relative to A.
 When exactly one of the two was traced, it also prints the tracing
-overhead: traced minus untraced median operation time.
+overhead: traced minus untraced median operation time, with the host's
+steal taken out as in ``run.py``.
 """
 
 from __future__ import annotations
@@ -36,8 +37,8 @@ def compare(a: dict, b: dict) -> list[str]:
             lines.append(f"{name:45s} {va:14.6g} {vb:14.6g}  {ratio}")
     if a["meta"]["trace"] != b["meta"]["trace"]:
         traced, plain = (a, b) if a["meta"]["trace"] else (b, a)
-        overhead = statistics.median(traced["ops"]["walls_s"]["traced"]) - statistics.median(
-            plain["ops"]["walls_s"]["untraced"]
+        overhead = statistics.median(o["undisturbed_s"] for o in traced["ops"]["traced"]) - statistics.median(
+            o["undisturbed_s"] for o in plain["ops"]["untraced"]
         )
         lines.append(f"{'tracing overhead (traced - untraced op)':45s} {overhead:14.6g} s")
     return lines

@@ -4,10 +4,19 @@
 
 Run from the root of a checkout. One process, one client, closed loop,
 ``local[$(nproc)]``. The run sets up a Spark session, generates the
-workload's inputs from ``--seed``, runs one untimed warm-up operation on
-inputs a tenth the size, then runs operations until they have taken
-``--seconds`` seconds in total (at least one), checking every
-operation's output outside the timed region.
+workload's inputs from ``--seed``, runs the workload's ``warm_ops``
+untimed warm-up operations on inputs a tenth the size, then runs
+operations until they have taken ``--seconds`` seconds in total (at
+least one), checking every operation's output outside the timed region.
+
+Set-up and operation times are reported as they would read on a host of
+the benchmark's own: on a virtual machine that shares its host, the
+hypervisor hands a varying share of the CPU time this machine asks for
+to other tenants (the steal column of /proc/stat), and every interval
+stretches with it. Each interval's wall time is multiplied by one minus
+the share stolen during it, slice by slice (see ``UndisturbedClock``).
+The wall time and the stolen share of the set-up and of every operation
+are printed and kept in the artifact.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` turns the
 Spark event log on, alternates traced operations (each layer under its
@@ -44,9 +53,7 @@ CPUS = len(os.sched_getaffinity(0))
 PACKAGE = "sfcrimedatapipeline_spark"
 #: driver JVM heap, initial = maximum (see start_session)
 DRIVER_MEMORY = "2g"
-#: timed operations per run at least, however long one takes
-MIN_OPS = 1
-#: input scale of the untimed warm-up operation: it pays the fresh JVM's
+#: input scale of the untimed warm-up operations: they pay the fresh JVM's
 #: class loading, code generation and most JIT compilation on the same
 #: code paths at a tenth of the work
 WARM_SCALE = 0.1
@@ -245,6 +252,82 @@ def _revision() -> str:
     return "src-" + h.hexdigest()[:12]
 
 
+def cpu_times() -> tuple[float, float]:
+    """(busy, stolen) CPU seconds of this machine so far, summed over its
+    CPUs, from /proc/stat. Stolen time is time a CPU here was ready to run
+    while the hypervisor ran another tenant; (0, 0) where the kernel does
+    not report it."""
+    try:
+        with open("/proc/stat") as fh:
+            ticks = [int(x) for x in fh.readline().split()[1:9]]
+        user, nice, system, _idle, _iowait, irq, softirq, steal = ticks
+    except (OSError, ValueError):
+        return 0.0, 0.0
+    hz = os.sysconf("SC_CLK_TCK")
+    return (user + nice + system + irq + softirq) / hz, steal / hz
+
+
+def stolen_share(before, after) -> float:
+    """Share of the CPU time this machine asked for between two
+    ``cpu_times()`` readings that the host gave to other tenants."""
+    busy, stolen = after[0] - before[0], after[1] - before[1]
+    return stolen / (busy + stolen) if busy + stolen > 0 else 0.0
+
+
+class UndisturbedClock(threading.Thread):
+    """A clock that runs at the speed this machine's work ran. When a
+    share s of the CPU time this machine asked for goes to other tenants,
+    its work runs at 1 - s of full speed, so each slice of wall time
+    counts 1 - s of its length: the clock reads the time the work would
+    have taken on a host of its own. The share is taken per slice, every
+    0.2 s and at every read, since it changes within seconds."""
+
+    PERIOD = 0.2
+
+    def __init__(self, start: float):
+        """``start``: the ``time.perf_counter()`` the clock reads 0 at"""
+        super().__init__(daemon=True)
+        self._lock = threading.Lock()
+        self._stop_event = threading.Event()
+        self.start_wall, self.start_cpu = start, cpu_times()
+        self._t, self._cpu = self.start_wall, self.start_cpu
+        self._value = 0.0
+
+    def read(self) -> float:
+        with self._lock:
+            t, cpu = time.perf_counter(), cpu_times()
+            self._value += (t - self._t) * (1.0 - stolen_share(self._cpu, cpu))
+            self._t, self._cpu = t, cpu
+            return self._value
+
+    def run(self):
+        while not self._stop_event.wait(self.PERIOD):
+            self.read()
+
+    def stop(self) -> None:
+        self._stop_event.set()
+        self.join(timeout=5)
+
+
+class Interval:
+    """Wall time, undisturbed time and stolen share of one interval, from
+    now or from when ``clock`` read 0."""
+
+    def __init__(self, clock: UndisturbedClock, from_clock_start: bool = False):
+        self.clock = clock
+        if from_clock_start:
+            self._wall, self._clock, self._cpu = clock.start_wall, 0.0, clock.start_cpu
+        else:
+            self._wall, self._clock, self._cpu = time.perf_counter(), clock.read(), cpu_times()
+
+    def stop(self) -> dict:
+        return {
+            "wall_s": time.perf_counter() - self._wall,
+            "undisturbed_s": self.clock.read() - self._clock,
+            "steal_share": stolen_share(self._cpu, cpu_times()),
+        }
+
+
 def _warm_batches(batches):
     yield from batches
 
@@ -417,6 +500,16 @@ def layer_metrics(tracer, counters, job_spans, layer_sums, n_traced, session, wa
 
 
 def main(argv=None) -> int:
+    # set-up is timed from the start of the process
+    clock = UndisturbedClock(start=T_START)
+    clock.start()
+    try:
+        return _main(argv, clock)
+    finally:
+        clock.stop()
+
+
+def _main(argv, clock: UndisturbedClock) -> int:
     args = _args(argv)
     if not os.path.isdir(os.path.join(ROOT, PACKAGE)):
         print(f"perfbench: no {PACKAGE}/ in {ROOT}; run from the root of a checkout", file=sys.stderr)
@@ -447,13 +540,13 @@ def main(argv=None) -> int:
         **wl.shape(),
     }
     try:
-        res = measure(args, wl, warm, work, log_dir)
+        res = measure(args, wl, warm, work, log_dir, clock)
         return report(args, meta, wl, res, log_dir)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def measure(args, wl, warm, work: str, log_dir: str | None) -> dict:
+def measure(args, wl, warm, work: str, log_dir: str | None, clock: UndisturbedClock) -> dict:
     """Set up, generate inputs, warm up, then run operations for
     ``args.seconds``; the JVM has exited when this returns."""
     from perfbench.tracing import Tracer
@@ -471,46 +564,61 @@ def measure(args, wl, warm, work: str, log_dir: str | None) -> dict:
             sc.setJobGroup("bench.warmup", "bench")
             spark.range(4 * CPUS, numPartitions=CPUS).mapInPandas(_warm_batches, "id long").count()
             res["session"]["worker_warm_s"] = time.perf_counter() - t
-        res["setup_s"] = time.perf_counter() - T_START
+        res["setup"] = Interval(clock, from_clock_start=True).stop()
 
         t = time.perf_counter()
         wl.prepare()
         warm.prepare()
         res["inputs_s"] = time.perf_counter() - t
 
-        def op(fn, group, w=wl):
+        def op(fn, group, kind, w=wl):
+            """Run and check one operation; its problems, and its wall
+            time into ``res["ops"][kind]``"""
             sc.setJobGroup(group, "bench")
-            return attempt(
-                fn, w.check, spark.catalog.clearCache, lambda: sc.setJobGroup("bench.check", "bench")
-            )
+            interval = {}
 
-        res["warm_s"], res["warm_problems"] = op(lambda: warm.run(spark), "bench.warmup", warm)
+            def timed():
+                span = Interval(clock)
+                try:
+                    return fn()
+                finally:
+                    interval.update(span.stop())
+
+            _wall, found = attempt(
+                timed, w.check, spark.catalog.clearCache, lambda: sc.setJobGroup("bench.check", "bench")
+            )
+            res["ops"][kind].append(interval)
+            return found
+
+        res["ops"] = {"warmup": [], "traced": [], "untraced": []}
+        res["warm_problems"] = []
+        for _ in range(wl.warm_ops):
+            res["warm_problems"] += op(lambda: warm.run(spark), "bench.warmup", "warmup", warm)
 
         tracer = res["tracer"] = Tracer(sc)
         layer_sums = res["layer_sums"] = {}
-        walls = res["walls"] = {"traced": [], "untraced": []}
+        ops = res["ops"]
         problems = res["problems"] = []
         sampler = RssSampler(sc._gateway.proc.pid)
         sampler.start()
         while True:
             # in a traced run, traced and untraced operations alternate
-            if log_dir is not None and len(walls["traced"]) <= len(walls["untraced"]):
+            if log_dir is not None and len(ops["traced"]) <= len(ops["untraced"]):
                 layer: dict[str, float] = {}
                 poller = StoragePoller(sc)
                 poller.start()
-                wall, found = op(lambda: wl.run_traced(spark, tracer, layer), "bench.traced")
+                found = op(lambda: wl.run_traced(spark, tracer, layer), "bench.traced", "traced")
                 peak_bytes, peak_rdds = poller.stop()
                 layer["functions.caching.peak_storage_bytes"] = float(peak_bytes)
                 layer["functions.caching.cached_rdds"] = float(peak_rdds)
                 for k, v in layer.items():
                     layer_sums[k] = layer_sums.get(k, 0.0) + v
-                walls["traced"].append(wall)
             else:
-                wall, found = op(lambda: wl.run(spark), "bench.untraced")
-                walls["untraced"].append(wall)
+                found = op(lambda: wl.run(spark), "bench.untraced", "untraced")
             problems.append(found)
-            done = sum(walls["traced"]) + sum(walls["untraced"]) >= args.seconds
-            if done and len(problems) >= MIN_OPS and (log_dir is None or walls["untraced"]):
+            measured = sum(o["wall_s"] for o in ops["traced"] + ops["untraced"])
+            # a traced run needs one operation of each kind
+            if measured >= args.seconds and (log_dir is None or ops["untraced"]):
                 break
         res["peak_rss"] = sampler.stop()
         sampler = None
@@ -528,15 +636,16 @@ def report(args, meta: dict, wl, res: dict, log_dir: str | None) -> int:
     one-line JSON result."""
     from perfbench import tracing
 
-    walls, problems = res["walls"], res["problems"]
-    e2e = end_to_end(res["setup_s"], walls, problems, wl.items, res["peak_rss"])
+    problems = res["problems"]
+    walls = {kind: [o["undisturbed_s"] for o in res["ops"][kind]] for kind in ("traced", "untraced")}
+    e2e = end_to_end(res["setup"]["undisturbed_s"], walls, problems, wl.items, res["peak_rss"])
     attempted, failed = len(problems), e2e.pop("failed")
     correct = failed == 0 and not res["warm_problems"]
     record = {
         "meta": meta,
-        "setup": {"setup_s": res["setup_s"], **res["session"], "inputs_s": res["inputs_s"]},
-        "warmup": {"wall_s": res["warm_s"], "problems": res["warm_problems"]},
-        "ops": {"walls_s": walls, "problems": problems},
+        "setup": {**res["setup"], **res["session"], "inputs_s": res["inputs_s"]},
+        "warmup": {"ops": res["ops"]["warmup"], "problems": res["warm_problems"]},
+        "ops": {"traced": res["ops"]["traced"], "untraced": res["ops"]["untraced"], "problems": problems},
         "end_to_end": e2e,
         "write_ratio": res["write_ratio"],
     }
@@ -556,7 +665,15 @@ def report(args, meta: dict, wl, res: dict, log_dir: str | None) -> int:
     for name, m in metrics.items():
         print(f"{args.workload} {name} = {m['value']:.6g} {m['unit']}")
     print(f"{args.workload} ops_failed_ratio = {e2e['ops_failed_ratio']:.6g} ratio")
-    print(f"{args.workload} warm-up {res['warm_s']:.3f} s; {attempted} timed operations, {failed} failed")
+    print(f"{args.workload} {attempted} timed operations, {failed} failed")
+    intervals = [("set-up", res["setup"])] + [
+        (f"{kind} operation", o) for kind, rows in res["ops"].items() for o in rows
+    ]
+    for what, o in intervals:
+        print(
+            f"{args.workload} {what}: {o['wall_s']:.3f} s wall, {o['steal_share']:.1%} stolen, "
+            f"{o['undisturbed_s']:.3f} s undisturbed"
+        )
     print(f"{args.workload} output check: {'PASS' if correct else 'FAIL'}")
     for i, found in enumerate([res["warm_problems"]] + problems):
         for msg in found:

@@ -136,6 +136,22 @@ def test_failed_check_and_exception_count_as_failed_operations():
     assert e2e["peak_rss_mb"] == 1024.0
 
 
+def test_undisturbed_clock_takes_out_the_stolen_share_slice_by_slice(monkeypatch):
+    # (busy, stolen) CPU seconds: 10 of 40 stolen in the first 10 s, none
+    # of the 40 in the next 10 s
+    cpus = iter([(0.0, 0.0), (30.0, 10.0), (70.0, 10.0), (70.0, 10.0)])
+    walls = iter([10.0, 20.0, 20.0])
+    monkeypatch.setattr(run, "cpu_times", lambda: next(cpus))
+    monkeypatch.setattr(run.time, "perf_counter", lambda: next(walls))
+    clock = run.UndisturbedClock(start=0.0)
+    assert clock.read() == pytest.approx(7.5)
+    span = run.Interval(clock, from_clock_start=True).stop()
+    assert span["wall_s"] == 20.0
+    assert span["undisturbed_s"] == pytest.approx(17.5)
+    assert span["steal_share"] == pytest.approx(10 / 80)
+    assert run.stolen_share((5.0, 1.0), (5.0, 1.0)) == 0.0
+
+
 @pytest.fixture(scope="module")
 def toy_event_log(tmp_path_factory):
     """Event log of a session that ran two job groups with known task

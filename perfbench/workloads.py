@@ -48,6 +48,8 @@ FACT_FKS = (
 class Workload:
     name = ""
     uses_python = False
+    #: untimed warm-up operations on inputs a tenth the size
+    warm_ops = 1
 
     def __init__(self, work_dir: str, seed: int, scale: float = 1.0):
         """``scale`` shrinks the inputs; the warm-up runs at 0.1."""
@@ -79,6 +81,10 @@ class EltRefresh(Workload):
     ids -> 5 dims + the 7-join fact -> serve query -> parquet tables."""
 
     name = "elt_refresh"
+    #: the first full refresh after one small one runs 15-25% slower than
+    #: the next, on a part of the JIT's warm-up that varies from run to
+    #: run; a second small refresh moves the timed one past it
+    warm_ops = 2
     ROWS = 50_000
 
     def shape(self) -> dict:
@@ -220,9 +226,11 @@ class CorpusCuration(Workload):
 
     name = "corpus_curation"
     uses_python = True
-    #: one copy is the size of the sf0.1 reference corpus
-    BASE_DOCS = 5000
-    BASE_VECS = 2000
+    #: one copy is half the sf0.1 reference corpus (5000 documents, 2000
+    #: vectors), drawn from its measured distributions: at full size the
+    #: runs overrun the benchmark's time budget on a contended host
+    BASE_DOCS = 2500
+    BASE_VECS = 1000
     COPIES = 1
     #: least share of the planted near-duplicate pairs the MinHash LSH
     #: must find (16 hashes in 4 bands find a pair of Jaccard 0.9 with
