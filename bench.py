@@ -4,15 +4,18 @@
 
     {"metric": "total_query_wall", "value": N, "unit": "sec",
      "n_queries": N, "queries": {<top-10 slowest>}, "sf": ...,
-     "full": "BENCH_FULL_r8.json"}
+     "full": "BENCH_FULL_c32_sf0.1.json"}
 
 The stdout line is deliberately SMALL: rounds 4-6 shipped a driver
 artifact with ``"parsed": null`` because the full 300-query map made
 the single line longer than the driver's stdout capture, so the tail
-truncated mid-JSON (VERDICT r6 #1). The COMPLETE per-query map is
-always written to ``BENCH_FULL_r8.json`` at the repo root (override
-with $SPARK_GRAFT_BENCH_OUT); stdout carries the total, the count, and
-the top-10 slowest — enough for the round-over-round ledger to parse.
+truncated mid-JSON (VERDICT r6 #1). The COMPLETE per-query map of an
+unfiltered run is written to ``BENCH_FULL_c{cpus}_sf{sf}.json`` at the
+repo root (override with $SPARK_GRAFT_BENCH_OUT). An existing artifact
+is never overwritten: the next free ``_2``, ``_3``… suffix is taken,
+so runs at different core counts or scales cannot clobber each other.
+stdout carries the total, the count, and the top-10 slowest — enough
+for the round-over-round ledger to parse.
 
 Per-query time = full plan build + execution + collect at the driver
 (the same surface the correctness gate measures, minus the oracle).
@@ -57,9 +60,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARM_SF_DIR = "/root/testdata/sf0.001"
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 REPO = os.path.dirname(os.path.abspath(__file__))
-FULL_OUT = os.environ.get(
-    "SPARK_GRAFT_BENCH_OUT", os.path.join(REPO, "BENCH_FULL_r12.json")
-)
 
 #: Correctness-gate-only entries excluded from the bench: their wall
 #: time measures test-harness fixture work (rewriting the input as
@@ -134,6 +134,26 @@ def _sf_from_dir(path: str) -> float:
         return float(tail.removeprefix("sf"))
     except ValueError:
         return -1.0
+
+
+def _write_new_artifact(payload: dict, cpus: int, sf: float) -> str:
+    """Write ``payload`` to ``$SPARK_GRAFT_BENCH_OUT`` or
+    ``BENCH_FULL_c{cpus}_sf{sf}.json``, or — if that file exists — to
+    the first free ``<stem>_<n>.json``; never overwrites. Returns the
+    path written."""
+    base = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
+        REPO, f"BENCH_FULL_c{cpus}_sf{sf:g}.json"
+    )
+    stem, ext = os.path.splitext(base)
+    path, n = base, 1
+    while True:
+        try:
+            with open(path, "x") as fh:
+                json.dump(payload, fh, indent=1, sort_keys=True)
+            return path
+        except FileExistsError:
+            n += 1
+            path = f"{stem}_{n}{ext}"
 
 
 def _run_one(spark, fn, reps: int, noop_sink: bool = False) -> float:
@@ -253,22 +273,24 @@ def main() -> None:
             sys.stderr.write(f"BENCH ERROR {name}: {errors[name]}\n")
 
     total = round(sum(timings.values()), 3)
+    cpus = spark.sparkContext.defaultParallelism
     full = {
         "metric": "total_query_wall",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": _sf_from_dir(SF_DIR),
+        "cpus": cpus,
         "reps": REPS,
         "n_queries": len(timings),
         "errors": errors,
         "noop_sink": sorted(BENCH_NOOP_SINK & set(timings)),
     }
     # the COMPLETE map lives in the repo artifact (driver tails
-    # truncate); filtered debug runs must not clobber the full record
+    # truncate); filtered debug runs write no artifact
+    artifact = None
     if not only:
-        with open(FULL_OUT, "w") as fh:
-            json.dump(full, fh, indent=1, sort_keys=True)
+        artifact = _write_new_artifact(full, cpus, _sf_from_dir(SF_DIR))
     top10 = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
@@ -282,8 +304,9 @@ def main() -> None:
                 "queries": top10,
                 "sf": _sf_from_dir(SF_DIR),
                 "reps": REPS,
+                "cpus": cpus,
                 "n_errors": len(errors),
-                "full": os.path.basename(FULL_OUT),
+                "full": artifact and os.path.basename(artifact),
             }
         )
     )

@@ -13,10 +13,11 @@ triangle_count its edge list, exact_quantiles_by its ranked frame).
 the result object itself: when the caller drops its last reference to
 the returned frame — which in CPython happens deterministically, right
 after ``collect()``/``toPandas()``/write in every normal call shape —
-the intermediates are unpersisted (non-blocking). Iterative operators
-(connected_components, pagerank) that materialize eagerly in-loop keep
-their explicit in-loop unpersists; this helper is for one-shot lazy
-plans only.
+the intermediates are unpersisted (non-blocking). It is for one-shot
+lazy plans; iterative operators (connected components, pagerank, BFS,
+k-core, label propagation, HITS) run through :func:`fixpoint`, which
+cuts every round's lineage through :func:`truncate_lineage` on one
+cadence.
 """
 
 from __future__ import annotations
@@ -55,6 +56,38 @@ def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = False)
             sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def fixpoint(state, step, rounds: int, probe=None, checkpoint_dir: str | None = None):
+    """Iterate ``state = step(state)`` for at most ``rounds`` rounds →
+    ``(state, probes)``. The one round loop behind every iterative
+    graph operator: it owns the round cap, the lineage cut and its
+    cadence, and the convergence stop.
+
+    Lineage is cut through :func:`truncate_lineage` (reliable under
+    ``checkpoint_dir``, else executor-local) on one cadence. With a
+    ``probe``, every round is cut lazily and ``probe(prev_state,
+    state)`` — an action over the new state — materializes the cut; its
+    value is appended to ``probes`` and the loop stops as soon as a
+    value equals the previous round's. A probe must therefore repeat
+    only at a fixed point (monotone scalars do; an exact check can live
+    in the value's ``__eq__``). Without a probe nothing would force a
+    lazy cut, so every second round and the last one are cut eagerly:
+    two rounds share one plan (a lazy cut in between would only add
+    jobs — adaptive execution runs a plan's shuffle stages when the cut
+    is taken), and the returned state no longer depends on the
+    caller's cached inputs."""
+    probes: list = []
+    for r in range(rounds):
+        prev = state
+        state = step(prev)
+        if probe is not None or r % 2 == 1 or r == rounds - 1:
+            state = truncate_lineage(state, checkpoint_dir, eager=probe is None)
+        if probe is not None:
+            probes.append(probe(prev, state))
+            if len(probes) > 1 and probes[-1] == probes[-2]:
+                break
+    return state, probes
 
 
 def keep_alive_until_released(result, *holders):

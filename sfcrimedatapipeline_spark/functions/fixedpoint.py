@@ -59,11 +59,6 @@ def sql_fx(term_expr: str) -> str:
     return f"CAST(floor(({term_expr}) * {FX_SCALE!r}) AS DECIMAL(38,0))"
 
 
-def sql_fx_sum(term_expr: str) -> str:
-    """DuckDB side of :func:`fx_sum`."""
-    return f"sum({sql_fx(term_expr)})"
-
-
 def sql_unfx(total_expr: str) -> str:
     """DuckDB side of :func:`unfx`."""
     return f"(CAST({total_expr} AS DOUBLE) / {FX_SCALE!r})"

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
+from sfcrimedatapipeline_spark.functions.caching import fixpoint, truncate_lineage
 
 
 def connected_components(
@@ -60,7 +60,7 @@ def connected_components(
     in DECIMAL(38) — a long sum would overflow once node-count ×
     id-magnitude passes 2^63 at corpus scale. ``checkpoint_dir``
     selects a RELIABLE checkpoint for lineage truncation (cluster
-    setting); default is executor-local (see ``_truncate_lineage``).
+    setting); default is executor-local (functions/caching.py:fixpoint).
     """
     if algorithm == "two_phase":
         return _cc_two_phase(pairs, src_col, dst_col, max_iters, checkpoint_dir)
@@ -80,22 +80,27 @@ def connected_components(
         both.union(nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
         .persist()
     )
-    labels = nodes.withColumn("label", F.col("id"))
-    prev_sum = None
-    for _ in range(max_iters):
-        labels = truncate_lineage(
+
+    def _round(labels: DataFrame) -> DataFrame:
+        return (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
             .agg(F.min("label").alias("label"))
-            .withColumnRenamed("src", "id"),
-            checkpoint_dir,
+            .withColumnRenamed("src", "id")
         )
-        cur_sum = labels.agg(
+
+    def _label_sum(_, labels: DataFrame):
+        return labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).first()["s"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+
+    labels, _ = fixpoint(
+        nodes.withColumn("label", F.col("id")),
+        _round,
+        max_iters,
+        _label_sum,
+        checkpoint_dir,
+    )
     both.unpersist()
     edges.unpersist()
     nodes.unpersist()
@@ -127,10 +132,8 @@ def _cc_two_phase(
     both keep the hi>lo orientation invariant. Fixed point ⟺ the graph
     is a union of stars rooted at component minima.
 
-    Convergence probe: a cheap (n_edges, Σ hi, Σ lo) signature per
-    round (one 3-scalar aggregate, never a row collect); on a signature
-    match the fixed point is CONFIRMED with an exact anti-join count —
-    signature collision alone can never terminate the loop early.
+    Convergence probe: :class:`_EdgeSet` — a cheap signature per
+    round, confirmed by an exact anti-join on a match.
     """
     raw = pairs.select(
         F.col(src_col).cast("long").alias("a"),
@@ -152,16 +155,7 @@ def _cc_two_phase(
         F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
     ).distinct()
 
-    def _round_sig(e: DataFrame):
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("hi").cast("decimal(38,0)")).alias("sh"),
-            F.sum(F.col("lo").cast("decimal(38,0)")).alias("sl"),
-        ).first()
-        return (row["n"], row["sh"], row["sl"])
-
-    prev_sig, prev_edges = None, None
-    for _ in range(max_iters):
+    def _round(edges: DataFrame) -> DataFrame:
         # large-star: group the MIRRORED neighborhood of u (u on the
         # "hi" slot, each neighbor w on "lo"); every strictly-larger
         # neighbor points at the neighborhood min. Each undirected edge
@@ -180,13 +174,11 @@ def _cc_two_phase(
             .filter(F.col("hi") != F.col("lo"))
             .distinct()
         )
-        # mid-round lineage cut (OPTIMIZATION r13, guide §5): the
-        # small-star step consumes the large-star output TWICE (the m2
-        # aggregate and the rewire join), so without materialization the
-        # whole large-star subtree — two shuffles deep — recomputes per
-        # consumer, ~3× work per round (measured 2.91→1.42 s per
-        # two_phase call at sf0.1, identical output). Lazy: the round's
-        # signature job materializes it.
+        # mid-round lineage cut: the small-star step consumes the
+        # large-star output TWICE (the m2 aggregate and the rewire
+        # join), so without materialization the whole large-star
+        # subtree — two shuffles deep — recomputes per consumer. Lazy:
+        # the round's probe materializes it.
         edges = truncate_lineage(edges, checkpoint_dir)
 
         # small-star: edges already point hi→lo; every smaller neighbor
@@ -197,22 +189,15 @@ def _cc_two_phase(
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
         )
         self_edge = m2.select(F.col("hi"), F.col("m").alias("lo"))
-        edges = truncate_lineage(
+        return (
             rewired.union(self_edge)
             .filter(F.col("hi") != F.col("lo"))
-            .distinct(),
-            checkpoint_dir,
+            .distinct()
         )
-        sig = _round_sig(edges)  # also materializes the checkpoint
-        if sig == prev_sig and prev_edges is not None:
-            # exact confirmation: same count (in sig) + empty anti-join
-            # ⟺ identical sets; a signature collision cannot early-stop
-            if (
-                edges.join(prev_edges, ["hi", "lo"], "left_anti").count()
-                == 0
-            ):
-                break
-        prev_sig, prev_edges = sig, edges
+
+    edges, _ = fixpoint(
+        edges, _round, max_iters, lambda _, e: _EdgeSet(e), checkpoint_dir
+    )
 
     # converged: stars rooted at component minima; isolated-from-pairs
     # nodes cannot occur (every input row is an edge), but nodes whose
@@ -225,6 +210,29 @@ def _cc_two_phase(
     fwd.unpersist(blocking=False)
     all_nodes.unpersist(blocking=False)
     return out
+
+
+class _EdgeSet:
+    """``two_phase``'s round probe: the edge set's (n_edges, Σ hi, Σ lo)
+    signature, one 3-scalar aggregate (never a row collect) that also
+    materializes the round's lazy cut. Equality compares signatures and
+    CONFIRMS a match with an exact anti-join count (same count + no new
+    edge ⟺ identical sets), so a signature collision can never stop
+    the loop early."""
+
+    def __init__(self, edges: DataFrame):
+        row = edges.agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("hi").cast("decimal(38,0)")).alias("sh"),
+            F.sum(F.col("lo").cast("decimal(38,0)")).alias("sl"),
+        ).first()
+        self.edges, self.sig = edges, (row["n"], row["sh"], row["sl"])
+
+    def __eq__(self, other: _EdgeSet) -> bool:
+        return (
+            self.sig == other.sig
+            and self.edges.join(other.edges, ["hi", "lo"], "left_anti").count() == 0
+        )
 
 
 def deterministic_uniform(key: Column) -> Column:

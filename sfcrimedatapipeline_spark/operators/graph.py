@@ -16,11 +16,14 @@ skipped — two joins per round become one. The edge partition count
 tracks edge volume (bounded by the session parallelism) instead of
 inheriting the static shuffle setting, so a tiny graph schedules a
 handful of tasks per round while a cluster-scale graph still fans
-out. Lineage is truncated every second round exactly as in
-connected_components — executor-local by default, or a RELIABLE
-checkpoint dir via ``checkpoint_dir=`` for cluster jobs. Dangling-node
-mass is redistributed uniformly via a 1-row aggregate, never a collect
-of rows.
+out. Every round loop here (pagerank, BFS, k-core, label propagation,
+HITS) and both connected-components loops run on one round loop,
+functions/caching.py:fixpoint: lineage is cut each round
+(executor-local by default, or a RELIABLE checkpoint dir via
+``checkpoint_dir=`` for cluster jobs), materialized by the convergence
+probe where there is one, else eagerly every second round and on the
+last. Dangling-node mass is redistributed uniformly via a 1-row
+aggregate, never a collect of rows.
 
 Rank values are IEEE double sums whose low bits depend on aggregation
 order, so the driver query is rows-only by design; the numeric
@@ -30,8 +33,16 @@ mass ≈ 1) is pinned in tests/test_graph.py.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sfcrimedatapipeline_spark.functions.caching import (
+    fixpoint,
+    truncate_lineage,
+    unpersist_when_released,
+)
 
 
 def pagerank(
@@ -91,8 +102,7 @@ def pagerank(
     # mass — far below any ranking decision.
     from sfcrimedatapipeline_spark.functions.fixedpoint import sql_fx, sql_unfx
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for it in range(iters):
+    def _round(ranks: DataFrame) -> DataFrame:
         joined = edges_deg.join(ranks, edges_deg.src == ranks.id)
         if deterministic:
             contribs = (
@@ -134,19 +144,15 @@ def pagerank(
             # mirrored edges ⇒ every node has in-degree ≥ 1 ⇒ contribs
             # already covers the full node set; the backfill join is a
             # provable no-op, so each round is one join + one agg.
-            ranks = contribs.select("id", new_rank)
-        else:
-            ranks = nodes.join(contribs, "id", "left").select("id", new_rank)
-        # truncate lineage every SECOND round (and on the last): a
-        # 2-round-deep plan is still tiny, and halving the eager
-        # checkpoint actions halves the wall time on small graphs,
-        # where per-action scheduling dominates
-        if it % 2 == 1 or it == iters - 1:
-            from sfcrimedatapipeline_spark.functions.caching import (
-                truncate_lineage,
-            )
+            return contribs.select("id", new_rank)
+        return nodes.join(contribs, "id", "left").select("id", new_rank)
 
-            ranks = truncate_lineage(ranks, checkpoint_dir, eager=True)
+    ranks, _ = fixpoint(
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        _round,
+        iters,
+        checkpoint_dir=checkpoint_dir,
+    )
     edges.unpersist()
     edges_deg.unpersist()
     nodes.unpersist()
@@ -166,10 +172,6 @@ def triangle_count(
     relational formulation; at scale the joins hash-partition on the
     shared node and AQE handles hub skew).
     """
-    from sfcrimedatapipeline_spark.functions.caching import (
-        unpersist_when_released,
-    )
-
     e = (
         pairs.select(
             F.least(F.col(src_col), F.col(dst_col)).cast("long").alias("lo"),
@@ -207,10 +209,6 @@ def clustering_coefficients(
     integer arithmetic to one final divide. Degree-1 nodes (no possible
     wedge) report coeff 0.0.
     """
-    from sfcrimedatapipeline_spark.functions.caching import (
-        unpersist_when_released,
-    )
-
     e = (
         pairs.select(
             F.least(F.col(src_col), F.col(dst_col)).cast("long").alias("lo"),
@@ -298,33 +296,34 @@ def bfs_distances(
         .persist()
     )
     nodes = edges.select(F.col("src").alias("id")).distinct()
-    labels = nodes.filter(seed_pred(F.col("id"))).withColumn(
-        "distance", F.lit(0).cast("int")
-    )
-    from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
 
-    prev_probe = None
-    for _ in range(max_hops):
+    def _round(labels: DataFrame) -> DataFrame:
         via_nbr = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
             .agg((F.min("distance") + 1).cast("int").alias("distance"))
             .withColumnRenamed("src", "id")
         )
-        labels = truncate_lineage(
-            labels.unionByName(via_nbr).groupBy("id").agg(
-                F.min("distance").alias("distance")
-            ),
-            checkpoint_dir,
+        return labels.unionByName(via_nbr).groupBy("id").agg(
+            F.min("distance").alias("distance")
         )
+
+    def _probe(_, labels: DataFrame) -> tuple:
         row = labels.agg(
             F.count("*").alias("n"),
             F.sum(F.col("distance").cast("decimal(38,0)")).alias("s"),
         ).first()
-        probe = (row["n"], row["s"])
-        if probe == prev_probe:
-            break
-        prev_probe = probe
+        return (row["n"], row["s"])
+
+    labels, _ = fixpoint(
+        nodes.filter(seed_pred(F.col("id"))).withColumn(
+            "distance", F.lit(0).cast("int")
+        ),
+        _round,
+        max_hops,
+        _probe,
+        checkpoint_dir,
+    )
     edges.unpersist()
     return labels.select(F.col("id").alias("doc_id"), "distance")
 
@@ -349,10 +348,10 @@ def k_core(
     two left-semi joins against the node-cardinality survivor frame.
     The survivor set shrinks monotonically, so an unchanged COUNT (an
     aggregate scalar probe, never a row collect) proves an unchanged
-    SET and the fixed point. Lineage is truncated per round
-    (functions/caching.py — executor-local, or reliable via
-    ``checkpoint_dir=``). Rounds are bounded by the peel depth, not
-    |V|: each round removes every currently sub-k node at once.
+    SET and the fixed point. Rounds run through
+    functions/caching.py:fixpoint (executor-local cuts, or reliable via
+    ``checkpoint_dir=``) and are bounded by the peel depth, not |V|:
+    each round removes every currently sub-k node at once.
 
     The output (doc_id, degree within the k-core) is exact integers,
     and the peel is IDEMPOTENT past its fixed point: once no node is
@@ -381,9 +380,8 @@ def k_core(
     at both gate SFs each run, so silent erosion of the margin fails
     CI before it can break the gate.
     """
-    return _k_core_loop(
-        pairs, k, src_col, dst_col, max_iters, checkpoint_dir
-    )[0]
+    core, _ = _k_core_loop(pairs, k, src_col, dst_col, max_iters, checkpoint_dir)
+    return core.select(F.col("src").alias("doc_id"), "degree")
 
 
 def k_core_peel_depth(
@@ -400,14 +398,14 @@ def k_core_peel_depth(
     dominate for the unrolled oracle to equal run-to-convergence
     (VERDICT r9 #9). Raises if ``max_iters`` rounds don't converge, so
     a passing call IS a convergence proof at that bound."""
-    _, depth, converged = _k_core_loop(
-        pairs, k, src_col, dst_col, max_iters, checkpoint_dir
-    )[0:3]
-    if not converged:
+    _, sizes = _k_core_loop(pairs, k, src_col, dst_col, max_iters, checkpoint_dir)
+    if len(sizes) < 2 or sizes[-1] != sizes[-2]:
         raise RuntimeError(
             f"k-core peel did not converge within {max_iters} rounds"
         )
-    return depth
+    # the closing equal-count round is the idempotence witness, not a
+    # productive round
+    return len(sizes) - 1
 
 
 def _k_core_loop(
@@ -417,44 +415,41 @@ def _k_core_loop(
     dst_col: str,
     max_iters: int,
     checkpoint_dir: str | None,
-) -> tuple[DataFrame, int, bool]:
-    """Shared peel loop → (core frame, productive-round count,
-    converged flag). ``depth`` counts rounds whose survivor set
-    CHANGED; the terminating equal-count round is the idempotence
-    witness, not a productive round."""
-    from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
-
+) -> tuple[DataFrame, list[int]]:
+    """Shared peel loop → (survivors ``(src, degree)``, per-round
+    survivor counts). The state is the survivor set: survivor sets only
+    shrink, so a round's alive edges are exactly the input edges with
+    both endpoints in the previous survivors. Round 1 starts from every
+    node, so the counts are the survivors of peel 1, 2, … and the loop
+    stops on the first unchanged count."""
     fwd = pairs.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    alive = (
+    edges = (
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .persist()
     )
-    prev = -1
-    core = None
-    depth = 0
-    converged = False
-    for rnd in range(max_iters):
-        deg = alive.groupBy("src").agg(F.count("*").cast("long").alias("degree"))
-        core = deg.filter(F.col("degree") >= k)
-        n = core.count()
-        if n == prev:
-            converged = True
-            break
-        depth = rnd + 1
-        prev = n
-        keep = core.select("src")
-        alive = truncate_lineage(
-            alive.join(keep, "src", "left_semi").join(
-                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            ),
-            checkpoint_dir,
+
+    def _peel(survivors: DataFrame) -> DataFrame:
+        keep = survivors.select("src")
+        alive = edges.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
-    out = core.select(F.col("src").alias("doc_id"), "degree")
-    return out, depth, converged
+        deg = alive.groupBy("src").agg(F.count("*").cast("long").alias("degree"))
+        return deg.filter(F.col("degree") >= k)
+
+    core, sizes = fixpoint(
+        edges.select("src").distinct(),
+        _peel,
+        max_iters,
+        lambda _, core: core.count(),
+        checkpoint_dir,
+    )
+    edges.unpersist()
+    return core, sizes
 
 
 def label_propagation(
@@ -463,7 +458,6 @@ def label_propagation(
     dst_col: str = "doc_b",
     rounds: int = 3,
     checkpoint_dir: str | None = None,
-    adaptive: bool = False,
 ) -> DataFrame:
     """Synchronous LABEL PROPAGATION community detection (Raghavan et
     al. 2007) over the pair graph → ``(doc_id, community_id)``.
@@ -481,8 +475,9 @@ def label_propagation(
     COMBINABLE aggregates — ``groupBy(node, label).count`` and the
     argmax via ``groupBy(node).max(struct(cnt, -label))``. No window:
     a celebrity node's degree never becomes one task's sort buffer.
-    Lineage truncated every second round (``checkpoint_dir`` switches
-    to reliable checkpoints for the cluster setting).
+    Rounds run through functions/caching.py:fixpoint
+    (``checkpoint_dir`` switches to reliable checkpoints for the
+    cluster setting).
 
     Round-count guidance (VERDICT r6 #5): a fixed ``rounds`` keeps the
     output deterministic and hash-gateable, but label information only
@@ -493,33 +488,15 @@ def label_propagation(
     the smallest round where ``n_changed`` reaches its fixpoint plateau
     (0, or the stable oscillation floor — synchronous LPA can 2-cycle
     on bipartite-ish structures, so a small non-zero plateau is the
-    converged state, not a bug). On the gated MinHash near-dup graph
-    the probe shows the plateau inside 3 rounds
+    converged state, not a bug). Past a fixpoint (``n_changed = 0``)
+    the labels map to themselves, so any larger ``rounds`` returns the
+    same communities. On the gated MinHash near-dup graph the probe
+    shows the plateau inside 3 rounds
     (tests/test_graph.py::test_lpa_convergence_probe pins it); near-dup
     clusters are dense and low-diameter, so this transfers to 100 TB —
     duplicate-cluster diameter doesn't grow with corpus size.
-
-    ``adaptive=True`` (VERDICT r7 #6) USES the convergence probe's
-    measurement instead of asking the operator to guess: the loop stops
-    at the first round where ``n_changed = 0`` (a true fixpoint —
-    labels that didn't change under a synchronous update never change
-    again), with ``rounds`` acting as the hard cap (synchronous LPA can
-    2-cycle on bipartite-ish structures, where changed never hits 0 and
-    the cap is the stop). Costs one scalar count per round — the same
-    bounded action the probe already pays. The gated queries keep the
-    fixed deterministic 3-round twin (an oracle must unroll a STATIC
-    round count); adaptive is the production entry point for graphs
-    whose diameter is unknown.
     """
-    labels, _ = _lpa_run(
-        pairs,
-        src_col,
-        dst_col,
-        rounds,
-        checkpoint_dir,
-        track_changes=False,
-        adaptive=adaptive,
-    )
+    labels, _ = _lpa_run(pairs, src_col, dst_col, rounds, checkpoint_dir)
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("community_id")
     )
@@ -539,12 +516,24 @@ def lpa_convergence(
     you the fixed round count has reached the fixpoint; a value still
     falling at the last round means communities are fragmented and
     ``rounds`` must grow. Driver cost: one scalar count per round
-    (bounded — never a row collect)."""
+    (bounded — never a row collect), which also materializes the
+    round's lineage cut."""
+    round_no = itertools.count(1)
+
+    def _changed(prev: DataFrame, labels: DataFrame) -> tuple[int, int]:
+        # the round number keeps every probe value distinct, so the
+        # measurement always runs all ``rounds``: a repeated NON-ZERO
+        # count is not a fixpoint
+        old = prev.select("id", F.col("label").alias("__old"))
+        n = labels.join(old, "id").filter(F.col("label") != F.col("__old")).count()
+        return next(round_no), n
+
     labels, changed = _lpa_run(
-        pairs, src_col, dst_col, rounds, checkpoint_dir, track_changes=True
+        pairs, src_col, dst_col, rounds, checkpoint_dir, _changed
     )
-    spark = labels.sparkSession
-    return spark.createDataFrame(changed, "round_no int, n_changed long")
+    return labels.sparkSession.createDataFrame(
+        changed, "round_no int, n_changed long"
+    )
 
 
 def _lpa_run(
@@ -553,13 +542,10 @@ def _lpa_run(
     dst_col: str,
     rounds: int,
     checkpoint_dir: str | None,
-    track_changes: bool,
-    adaptive: bool = False,
-) -> tuple[DataFrame, list[tuple[int, int]]]:
-    """Shared synchronous-LPA loop. Returns (final labels, per-round
-    changed counts — empty unless track_changes/adaptive). With
-    ``adaptive``, stops early at the first changed = 0 round (``rounds``
-    is the cap)."""
+    probe=None,
+) -> tuple[DataFrame, list]:
+    """Shared synchronous-LPA rounds → (final labels, per-round probe
+    values from :func:`fixpoint`)."""
     fwd = pairs.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
@@ -574,18 +560,13 @@ def _lpa_run(
     )
     edges_p = edges.repartition(parts, "src").persist()
     edges_p.count()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    changed: list[tuple[int, int]] = []
-    for r in range(rounds):
+
+    def _round(labels: DataFrame) -> DataFrame:
         nb = edges_p.join(labels, edges_p.src == labels.id).select(
             F.col("dst").alias("node"), "label"
         )
         cnt = nb.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-        new_labels = (
+        return (
             cnt.groupBy("node")
             .agg(
                 F.max(
@@ -594,31 +575,19 @@ def _lpa_run(
             )
             .select(F.col("node").alias("id"), (-F.col("m.neg")).alias("label"))
         )
-        if track_changes or adaptive or r % 2 == 1 or r == rounds - 1:
-            from sfcrimedatapipeline_spark.functions.caching import (
-                truncate_lineage,
-            )
 
-            # when probing, truncate EVERY round so the per-round count
-            # below doesn't recompute the chain it just measured
-            new_labels = truncate_lineage(new_labels, checkpoint_dir, eager=True)
-        if track_changes or adaptive:
-            prev = labels.select("id", F.col("label").alias("__old"))
-            n = (
-                new_labels.join(prev, "id")
-                .filter(F.col("label") != F.col("__old"))
-                .count()  # bounded: one scalar per round
-            )
-            changed.append((r + 1, n))
-            if adaptive and n == 0:
-                # synchronous fixpoint: an unchanged label vector maps
-                # to itself every following round — stop here
-                labels = new_labels
-                break
-        labels = new_labels
+    labels, probes = fixpoint(
+        edges.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("label", F.col("id")),
+        _round,
+        rounds,
+        probe,
+        checkpoint_dir,
+    )
     edges.unpersist()
     edges_p.unpersist()
-    return labels, changed
+    return labels, probes
 
 
 def hits(
@@ -648,19 +617,15 @@ def hits(
 
     Scale shape: one join + one map-side-combined aggregate per
     half-round over an edge list pre-partitioned on its join key; the
-    L1 totals are 1-row aggregates (never a collect); lineage is
-    truncated every second round (executor-local, or reliable via
-    ``checkpoint_dir=``).
+    L1 totals are 1-row aggregates (never a collect); rounds run
+    through functions/caching.py:fixpoint (executor-local cuts, or
+    reliable via ``checkpoint_dir=``).
     """
-    from sfcrimedatapipeline_spark.functions.caching import (
-        truncate_lineage,
-        unpersist_when_released,
-    )
     from sfcrimedatapipeline_spark.functions.fixedpoint import sql_fx, sql_unfx
 
     if iters < 1:
-        # with zero rounds `a` would stay None below and the output
-        # join would crash; half a round is also not HITS (ADVICE r9)
+        # zero rounds would return the unnormalized start vector with
+        # no authorities; half a round is also not HITS (ADVICE r9)
         raise ValueError(f"hits() needs iters >= 1, got {iters}")
 
     edges = (
@@ -687,42 +652,44 @@ def hits(
     fx_sum_v = sql_unfx("sum(" + sql_fx("v") + ")") + " + 0.0"
     fx_sum_raw = sql_unfx("sum(" + sql_fx("raw") + ")") + " + 0.0"
 
-    def _contrib(joined: DataFrame, key: str) -> DataFrame:
-        g = joined.groupBy(F.col(key).alias("id"))
-        if deterministic:
-            return g.agg(F.expr(fx_sum_v).alias("raw"))
-        return g.agg(F.sum("v").alias("raw"))
-
     # the loop works on SPARSE vectors (only nodes with a nonzero
     # value): a missing entry is exactly 0 and contributes nothing to
     # the next half-round's join, so the per-round dense spine backfill
     # would be a provable no-op — the dense frame materializes ONCE at
-    # output. Each half-round's raw frame is eagerly lineage-truncated
-    # (persisted) BEFORE its L1 total is taken, so the total and every
-    # downstream consumer ride the cache instead of re-deriving the
-    # full iteration chain per action.
-    def _normalize(raw: DataFrame) -> DataFrame:
-        raw = truncate_lineage(raw, checkpoint_dir, eager=True)
-        if deterministic:
-            tot = raw.agg(F.expr(fx_sum_raw).alias("t"))
-        else:
-            tot = raw.agg(F.sum("raw").alias("t"))
+    # output. The raw frame feeds both its L1 total and the division
+    # (and the round's output through two consumers), so it is cut
+    # lazily; the total's broadcast materializes it.
+    def _half(vec: DataFrame, frm: str, to: str) -> DataFrame:
+        g = edges.join(vec, edges[frm] == vec.id).groupBy(F.col(to).alias("id"))
+        raw_sum = F.expr(fx_sum_v) if deterministic else F.sum("v")
+        raw = truncate_lineage(g.agg(raw_sum.alias("raw")), checkpoint_dir)
+        tot_sum = F.expr(fx_sum_raw) if deterministic else F.sum("raw")
+        tot = raw.agg(tot_sum.alias("t"))
         return raw.crossJoin(F.broadcast(tot)).select(
             "id", (F.col("raw") / F.col("t")).alias("v")
         )
 
-    h = nodes.select("id", F.lit(1.0).alias("v"))
-    a = None
-    for _ in range(iters):
-        a = _normalize(
-            _contrib(edges.join(h, edges.src == h.id).select("dst", "v"), "dst")
+    # one state frame per round: the hub and authority vectors stacked
+    # under a ``side`` tag, so the whole round is one fixpoint step
+    def _side(state: DataFrame, name: str) -> DataFrame:
+        return state.filter(F.col("side") == name).select("id", "v")
+
+    def _round(state: DataFrame) -> DataFrame:
+        a = _half(_side(state, "h"), "src", "dst")
+        h = _half(a, "dst", "src")
+        return h.withColumn("side", F.lit("h")).unionByName(
+            a.withColumn("side", F.lit("a"))
         )
-        h = _normalize(
-            _contrib(edges.join(a, edges.dst == a.id).select("src", "v"), "src")
-        )
+
+    state, _ = fixpoint(
+        nodes.select("id", F.lit(1.0).alias("v"), F.lit("h").alias("side")),
+        _round,
+        iters,
+        checkpoint_dir=checkpoint_dir,
+    )
     out = (
-        nodes.join(h.select("id", F.col("v").alias("hub")), "id", "left")
-        .join(a.select("id", F.col("v").alias("authority")), "id", "left")
+        nodes.join(_side(state, "h").withColumnRenamed("v", "hub"), "id", "left")
+        .join(_side(state, "a").withColumnRenamed("v", "authority"), "id", "left")
         .select(
             F.col("id").alias("doc_id"),
             F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
@@ -733,6 +700,6 @@ def hits(
     # here would make every downstream action re-derive the distinct
     # mirrored edge list and node spine from source (ADVICE r9). Tie
     # the caches' lifetime to the returned frame instead — the last
-    # h/a half-rounds are already eagerly truncated, so the output
-    # joins read cached inputs exactly once per action.
+    # round's state is already eagerly cut, so the output joins read
+    # cached inputs exactly once per action.
     return unpersist_when_released(out, edges, nodes)

@@ -546,7 +546,9 @@ def _pq_assign_arrow(
         C = np.array(cbl, dtype=np.float64)  # (m, k, sub)
         CO = np.array(cl, dtype=np.float64) if cl is not None else None
         for batch in batches:
-            ids = batch.column(0)
+            # the output schema declares the id as long: widen an int
+            # (or any integral) id column instead of passing it through
+            ids = batch.column(0).cast(pa.int64())
             flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
             V = np.asarray(flat, dtype=np.float64).reshape(-1, dim)
             n = len(batch)

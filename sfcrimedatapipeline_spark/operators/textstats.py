@@ -83,11 +83,6 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(text_col: str = "text") -> dict[str, Column]:
-    toks = tokens(F.col(text_col))
-    return {lang: stopword_hits(toks, lang) for lang in sorted(STOPWORDS)}
-
-
 def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: argmax of per-language stopword hits,
     alphabetical tie-break, 'und' when nothing matches.
@@ -113,11 +108,6 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.withColumn("lang_pred", pred).drop(
         "__toks", *[f"__s_{lang}" for lang in langs]
     )
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Deterministic document fingerprint: md5 of the normalized text."""
-    return df.withColumn("fingerprint", F.md5(normalized(F.col(text_col))))
 
 
 def with_bpe_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
 from sfcrimedatapipeline_spark.functions.hashing import sql_hash64
 from sfcrimedatapipeline_spark.functions.partitioning import (
     ensure_min_partitions,
@@ -581,7 +582,7 @@ def _url_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             if e[0] is not spark or (k == sf_dir and e[1] != fp)
         ]:
             _URL_DOCS_CACHE.pop(key)
-        df = _with_url(_docs(spark, sf_dir)).localCheckpoint(eager=False)
+        df = truncate_lineage(_with_url(_docs(spark, sf_dir)))
         _URL_DOCS_CACHE[sf_dir] = (spark, fp, df)
     return _URL_DOCS_CACHE[sf_dir][2]
 

@@ -14,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import (
+    truncate_lineage,
+    unpersist_when_released,
+)
 from sfcrimedatapipeline_spark.functions.hashing import sql_hash64
 from sfcrimedatapipeline_spark.functions.text import (
     SQL_TOKENS,
@@ -131,10 +135,6 @@ def corpus_ccnet_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped by quality, tokens removed by dedup, final token yield,
     fully-emptied documents) — a regression anywhere in either stage
     or their composition breaks exactly one hash."""
-    from sfcrimedatapipeline_spark.functions.caching import (
-        unpersist_when_released,
-    )
-
     docs = _docs(spark, sf_dir)
     # the cleaned frame feeds FOUR consumers (three inside the
     # substring stage + the final join); without a persist the whole
@@ -523,10 +523,10 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = ensure_min_partitions(read_table(spark, sf_dir, "embeddings"))
     queries = ann_queries(emb)
-    exact = (
-        similarity.cosine_topk(emb, queries, k=ANN_K)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+    exact = truncate_lineage(
+        similarity.cosine_topk(emb, queries, k=ANN_K).select(
+            "query_id", "neighbor_id"
+        )
     )
     tiers = {
         "lsh": similarity.cosine_topk_lsh(emb, queries, k=ANN_K),

@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
 from sfcrimedatapipeline_spark.operators.keys import dense_ids
 from sfcrimedatapipeline_spark.sources.tables import read_table
 
@@ -1631,9 +1632,10 @@ def s14_catalog_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY event_type
             """
         )
-        return spark.sql(
-            f"SELECT event_type, n_events, sum_value FROM {tbl}"
-        ).localCheckpoint(eager=True)
+        return truncate_lineage(
+            spark.sql(f"SELECT event_type, n_events, sum_value FROM {tbl}"),
+            eager=True,
+        )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
+
 #: Explicit schema — streaming sources cannot infer (and must not:
 #: SURVEY §1.2 bans inference engine-wide).
 EVENTS_SCHEMA = StructType(
@@ -401,7 +403,7 @@ def run_incremental_agg_stream(
         else:
             merged = build_agg_state(batch_df, keys, value_col)
         # materialize BEFORE overwriting the directory being read
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+        truncate_lineage(merged, eager=True).write.mode("overwrite").parquet(
             state_path
         )
 
@@ -485,7 +487,7 @@ def run_corpus_accretion_stream(
             )
             d = d.join(prior, "fingerprint", "left_anti")
         # materialize BEFORE touching the state directory the plan reads
-        kept = d.select("doc_id", "fingerprint").localCheckpoint(eager=True)
+        kept = truncate_lineage(d.select("doc_id", "fingerprint"), eager=True)
         kept.select("fingerprint").write.mode("overwrite").parquet(
             os.path.join(state_path, f"batch={batch_key}")
         )

@@ -346,7 +346,10 @@ def test_pq_adc_matches_numpy_exact(spark):
     """PQ encode + ADC distances recomputed with numpy against the
     same fixed codebooks: codes and rounded distances must be equal,
     and on codebook-coincident vectors the ADC distance to the exact
-    vector is the true squared L2 of the query to it."""
+    vector is the true squared L2 of the query to it. Run for a
+    ``long`` and an ``int`` id column: the Arrow assignment pass
+    declares a long id, so an int id must be widened, not passed
+    through."""
     import numpy as np
 
     from sfcrimedatapipeline_spark.operators import similarity
@@ -356,25 +359,30 @@ def test_pq_adc_matches_numpy_exact(spark):
         # deterministic, non-degenerate vectors
         vec = [((i * 37 + j * 13) % 97) / 97.0 for j in range(64)]
         rng_rows.append((i, vec))
-    emb = spark.createDataFrame(rng_rows, "vec_id long, embedding array<float>")
-    cb = similarity.default_pq_codebooks(emb)  # 16 lowest ids, 8x8
-
-    codes = {r.vec_id: list(r.code) for r in similarity.pq_encode(emb, cb).collect()}
     V = np.array([v for _, v in rng_rows], dtype=np.float32).astype(np.float64)
-    CB = np.array(cb, dtype=np.float64)  # (m, k, sub)
-    for i in range(40):
-        for s in range(8):
-            d = ((V[i, s * 8 : (s + 1) * 8] - CB[s]) ** 2).sum(axis=1)
-            assert codes[i][s] == int(np.argmin(d))  # ties → lowest id
-
-    out = similarity.pq_topk(emb, emb.filter("vec_id < 2"), k=3)
-    for r in out.collect():
-        q = V[r.query_id]
-        adc = sum(
-            ((q[s * 8 : (s + 1) * 8] - CB[s][codes[r.neighbor_id][s]]) ** 2).sum()
-            for s in range(8)
+    for id_type in ("long", "int"):
+        emb = spark.createDataFrame(
+            rng_rows, f"vec_id {id_type}, embedding array<float>"
         )
-        assert abs(r.approx_dist - adc) < 1e-6
+        cb = similarity.default_pq_codebooks(emb)  # 16 lowest ids, 8x8
+
+        codes = {
+            r.vec_id: list(r.code) for r in similarity.pq_encode(emb, cb).collect()
+        }
+        CB = np.array(cb, dtype=np.float64)  # (m, k, sub)
+        for i in range(40):
+            for s in range(8):
+                d = ((V[i, s * 8 : (s + 1) * 8] - CB[s]) ** 2).sum(axis=1)
+                assert codes[i][s] == int(np.argmin(d)), id_type  # ties → lowest id
+
+        out = similarity.pq_topk(emb, emb.filter("vec_id < 2"), k=3)
+        for r in out.collect():
+            q = V[r.query_id]
+            adc = sum(
+                ((q[s * 8 : (s + 1) * 8] - CB[s][codes[r.neighbor_id][s]]) ** 2).sum()
+                for s in range(8)
+            )
+            assert abs(r.approx_dist - adc) < 1e-6, id_type
 
 
 def test_pq_recall_on_clustered_data(spark):

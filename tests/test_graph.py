@@ -4,8 +4,16 @@ iteration, rank-mass conservation, and dangling-node handling."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
-from sfcrimedatapipeline_spark.operators.graph import pagerank
+from sfcrimedatapipeline_spark.operators.corpus import connected_components
+from sfcrimedatapipeline_spark.operators.graph import (
+    bfs_distances,
+    hits,
+    k_core,
+    label_propagation,
+    pagerank,
+)
 
 
 def _numpy_pagerank(n, edges, damping=0.85, iters=10, undirected=True):
@@ -91,51 +99,47 @@ def test_cc_two_phase_long_chain_beats_diameter(spark):
     assert any(r.canonical_id != 0 for r in capped)  # diameter-bound, by design
 
 
-def test_cc_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation to a reliable
-    checkpoint: files appear under the directory and results are
-    unchanged (both algorithms)."""
+#: every operator whose rounds run through functions/caching.py:fixpoint
+_FIXPOINT_CONSUMERS = {
+    "cc_label_prop": lambda df, ckpt: connected_components(
+        df, algorithm="label_prop", checkpoint_dir=ckpt
+    ),
+    "cc_two_phase": lambda df, ckpt: connected_components(
+        df, algorithm="two_phase", checkpoint_dir=ckpt
+    ),
+    "pagerank": lambda df, ckpt: pagerank(df, iters=4, checkpoint_dir=ckpt),
+    "bfs_distances": lambda df, ckpt: bfs_distances(
+        df, lambda c: c == 1, checkpoint_dir=ckpt
+    ),
+    "k_core": lambda df, ckpt: k_core(df, k=2, checkpoint_dir=ckpt),
+    "label_propagation": lambda df, ckpt: label_propagation(
+        df, rounds=3, checkpoint_dir=ckpt
+    ),
+    "hits": lambda df, ckpt: hits(df, deterministic=True, checkpoint_dir=ckpt),
+}
+
+
+@pytest.mark.parametrize("consumer", list(_FIXPOINT_CONSUMERS))
+def test_reliable_checkpoint_dir_matches_local(spark, tmp_path, consumer):
+    """Every fixpoint consumer: ``checkpoint_dir`` switches its lineage
+    cuts to reliable checkpoints — files appear under the directory —
+    and the output equals the executor-local default exactly (same
+    dataflow, same arithmetic; only the truncation medium changes)."""
     import os
 
-    from sfcrimedatapipeline_spark.operators.corpus import connected_components
-
+    run = _FIXPOINT_CONSUMERS[consumer]
+    # a triangle with a tail (non-empty 2-core, multi-hop BFS) plus a
+    # separate pair (a second component)
     df = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
+        [(1, 2), (2, 3), (1, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
     )
-    for algo in ("label_prop", "two_phase"):
-        ckpt = str(tmp_path / f"ckpt_{algo}")
-        out = {
-            (r.doc_id, r.canonical_id)
-            for r in connected_components(
-                df, algorithm=algo, checkpoint_dir=ckpt
-            ).collect()
-        }
-        assert out == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-        found = [
-            f for root, _, fs in os.walk(ckpt) for f in fs
-        ]
-        assert found, f"no reliable checkpoint files written for {algo}"
-
-
-def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
-    """pagerank(checkpoint_dir=...) writes reliable checkpoints and
-    preserves the rank values bit-for-bit vs the local default (same
-    dataflow, same arithmetic — only the truncation medium changes)."""
-    import os
-
-    from sfcrimedatapipeline_spark.operators.graph import pagerank
-
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11)], "doc_a long, doc_b long"
+    local = sorted(tuple(r) for r in run(df, None).collect())
+    ckpt = str(tmp_path / consumer)
+    reliable = sorted(tuple(r) for r in run(df, ckpt).collect())
+    assert local and reliable == local
+    assert [f for _, _, fs in os.walk(ckpt) for f in fs], (
+        f"no reliable checkpoint files written for {consumer}"
     )
-    local = {r.doc_id: r.rank for r in pagerank(df, iters=4).collect()}
-    ckpt = str(tmp_path / "pr_ckpt")
-    reliable = {
-        r.doc_id: r.rank
-        for r in pagerank(df, iters=4, checkpoint_dir=ckpt).collect()
-    }
-    assert reliable == local
-    assert [f for _, _, fs in os.walk(ckpt) for f in fs]
 
 
 def test_bfs_multi_source_and_unreachable(spark):
@@ -288,13 +292,13 @@ def test_lpa_convergence_probe(spark):
     assert out[1] == out[2] == out[3] and out[4] == out[5] == out[6]
 
 
-def test_lpa_adaptive_reaches_fixpoint_where_fixed_rounds_do_not(spark):
-    """VERDICT r7 #6 done-criterion: on a clique-anchored path whose
-    diameter exceeds 3, the fixed 3-round cut leaves labels still
-    moving, while adaptive=True runs until changed = 0 (cap 20) and
-    lands on the true fixpoint — one community, everything labeled by
-    the clique minimum. The GATED queries keep the deterministic
-    3-round twin; this pins the production path."""
+def test_lpa_rounds_past_fixpoint_reproduce_it(spark):
+    """VERDICT r7 #6: on a clique-anchored path whose diameter exceeds
+    3, the fixed 3-round cut leaves labels still moving, while a
+    generous fixed round count runs past the synchronous fixpoint and
+    lands on it — one community, everything labeled by the clique
+    minimum. Past the fixpoint every round is a no-op, so 20 rounds
+    equal 9. The GATED queries keep the deterministic 3-round twin."""
     from sfcrimedatapipeline_spark.operators.graph import (
         label_propagation,
         lpa_convergence,
@@ -309,9 +313,11 @@ def test_lpa_adaptive_reaches_fixpoint_where_fixed_rounds_do_not(spark):
 
     probe = {
         r.round_no: r.n_changed
-        for r in lpa_convergence(pairs, rounds=4).collect()
+        for r in lpa_convergence(pairs, rounds=9).collect()
     }
+    assert set(probe) == set(range(1, 10))  # one row per round, no early stop
     assert probe[4] > 0  # still moving after round 4 — 3 rounds fragment
+    assert probe[9] == 0  # fixpoint reached inside 9 rounds
 
     fixed = {
         r.doc_id: r.community_id
@@ -319,14 +325,12 @@ def test_lpa_adaptive_reaches_fixpoint_where_fixed_rounds_do_not(spark):
     }
     assert len(set(fixed.values())) > 1  # fragmented at the fixed cut
 
-    adaptive = {
+    long_run = {
         r.doc_id: r.community_id
-        for r in label_propagation(pairs, rounds=20, adaptive=True).collect()
+        for r in label_propagation(pairs, rounds=20).collect()
     }
-    assert set(adaptive.values()) == {0}  # one community, true fixpoint
-    # and the adaptive stop IS a fixpoint: one more synchronous round
-    # (any fixed count past convergence) reproduces it exactly
-    assert adaptive == {
+    assert set(long_run.values()) == {0}  # one community, true fixpoint
+    assert long_run == {
         r.doc_id: r.community_id
         for r in label_propagation(pairs, rounds=9).collect()
     }
