@@ -218,14 +218,14 @@ _DEFERRED = [
     "emb_power_iteration",
     "events_markov_stationary",
     # round-9c iterative additions (k-means trainer loops / multi-job
-    # graph rounds / the CC-memo-riding funnel) — same budget rationale
+    # graph rounds / the CC-consuming funnel) — same budget rationale
     "graph_hits_dup",
     "ann_ivf_imbalance_audit",
     "emb_cluster_silhouette",
     "corpus_curation_funnel",
     # round-10: persisted-index build+append at plan time (the
-    # docs_bm25_index_search precedent); the composed web E2E rides
-    # the iterative CC memo
+    # docs_bm25_index_search precedent); the composed web E2E runs
+    # the iterative CC
     "ann_ivfpq_index_delta",
     "corpus_web_e2e",
     # round-11: the composed paragraph-filter -> substring-dedup chain

@@ -18,11 +18,22 @@ lazy plans; iterative operators (connected components, pagerank, BFS,
 k-core, label propagation, HITS) run through :func:`fixpoint`, which
 cuts every round's lineage through :func:`truncate_lineage` on one
 cadence.
+
+On-disk intermediates a query reads lazily (a persisted index, a stream
+fixture directory) cannot be deleted when the query returns either;
+:func:`exit_temp_dir` creates them and :func:`reap_temp_dirs` removes
+them all at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import weakref
+
+#: temp dirs created by exit_temp_dir and not yet reaped
+_EXIT_DIRS: set[str] = set()
 
 
 def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = False):
@@ -136,3 +147,24 @@ def unpersist_when_released(result, *cached):
 
     weakref.finalize(result, _release)
     return result
+
+
+def exit_temp_dir(prefix: str) -> str:
+    """A fresh ``tempfile.mkdtemp(prefix=prefix)`` directory that
+    :func:`reap_temp_dirs` removes at interpreter exit. For directories
+    a returned lazy frame still reads, so they must outlive the call."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _EXIT_DIRS.add(d)
+    return d
+
+
+def reap_temp_dirs() -> None:
+    """Remove every directory :func:`exit_temp_dir` has created so far.
+    Registered with ``atexit``; safe to call early (frames still reading
+    a removed directory then fail)."""
+    for d in list(_EXIT_DIRS):
+        shutil.rmtree(d, ignore_errors=True)
+    _EXIT_DIRS.clear()
+
+
+atexit.register(reap_temp_dirs)

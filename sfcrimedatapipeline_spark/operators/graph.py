@@ -376,7 +376,7 @@ def k_core(
     the realistic growth model (SCALE_PROBE unique mode — duplicate
     GROUP COUNT grows, group size doesn't) replicates the within-group
     structure per copy and leaves the depth scale-invariant.
-    ``tests/test_round10_fixes.py`` asserts depth + 2 ≤ KCORE_ROUNDS
+    ``tests/test_graph.py`` asserts depth + 2 ≤ KCORE_ROUNDS
     at both gate SFs each run, so silent erosion of the margin fails
     CI before it can break the gate.
     """

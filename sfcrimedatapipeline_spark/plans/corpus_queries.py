@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import unpersist_when_released
 from sfcrimedatapipeline_spark.functions.hashing import sql_hash64
 from sfcrimedatapipeline_spark.functions.text import (
     SQL_NORMALIZED,
@@ -39,54 +40,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ensure_min_partitions(read_table(spark, sf_dir, "documents"))
 
 
-#: sf_dir → (session, MinHash near-dup pair graph, default-CC map).
-#: The memoized star-build precedent (plans/fact_queries.py:_tables)
-#: applied to the dup graph (VERDICT r7 #5): twelve downstream queries
-#: (dedup_clusters/_2phase/_keep_best/_cluster_sizes, pagerank, BFS,
-#: triangles, clustering coeff, k-core, LPA ×2, modularity) each
-#: re-derived minhash_near_duplicates(docs) — and most of them the
-#: default connected_components on top — once PER QUERY. One
-#: derivation per (session, sf_dir) now serves them all: the pair
-#: frame is persist()ed (first action materializes it; the correctness
-#: gate and bench reps share it), and the CC map's iterative build —
-#: whose per-round actions dominate the swing-class wall — runs once.
-#: After an external spark.catalog.clearCache() (the bench does this
-#: between reps) the memoized frames recompute correctly through their
-#: lineage; keyed on session identity so a new SparkSession rebuilds.
-_DUP_MEMO: dict[str, tuple[SparkSession, DataFrame, DataFrame]] = {}
-
-
 def _dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized MinHash+LSH near-dup pair graph over documents
-    (the gated dedup default) — the shared prefix of every dup-graph
-    query below."""
-    entry = _DUP_MEMO.get(sf_dir)
-    if entry is None or entry[0] is not spark:
-        # Evict EVERY stale-session entry before rebuilding (ADVICE r8):
-        # replacing in place leaked the old persisted pair frame's
-        # bookkeeping, and entries for other sf_dirs keyed to dead
-        # sessions lingered forever in long-lived processes that cycle
-        # sessions. unpersist() on a stopped session can throw — the
-        # frame is already gone with its session, so best-effort.
-        for key in [k for k, e in _DUP_MEMO.items() if e[0] is not spark]:
-            stale = _DUP_MEMO.pop(key)
-            try:
-                stale[1].unpersist()
-            except Exception:
-                pass
-        pairs = dd.minhash_near_duplicates(_docs(spark, sf_dir)).persist()
-        cc = corpus.connected_components(pairs)
-        entry = (spark, pairs, cc)
-        _DUP_MEMO[sf_dir] = entry
-    return entry[1]
-
-
-def _dup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized default connected components over _dup_pairs
-    (label propagation to min reachable id) — the (doc_id,
-    canonical_id) map shared by the cluster-consuming queries."""
-    _dup_pairs(spark, sf_dir)
-    return _DUP_MEMO[sf_dir][2]
+    """MinHash+LSH near-dup pair graph over documents (the gated dedup
+    default) — the shared prefix of every dup-graph query below. Each
+    query derives it afresh. The iterative graph operators read their
+    input more than once (mirrored edge unions), so a query feeding
+    one persists the pairs itself and releases them with its result
+    (functions/caching.py:unpersist_when_released)."""
+    return dd.minhash_near_duplicates(_docs(spark, sf_dir))
 
 
 #: stratified-sample rates: downsample the dominant language, keep the
@@ -106,7 +67,9 @@ TFIDF_K = 3
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair graph (MinHash+LSH, the gated dedup default) →
     connected components → (doc_id, canonical_id)."""
-    return _dup_cc(spark, sf_dir).orderBy("doc_id")
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = corpus.connected_components(pairs).orderBy("doc_id")
+    return unpersist_when_released(out, pairs)
 
 
 KCORE_K = 2
@@ -132,13 +95,15 @@ def graph_kcore_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     even needing the fx trick — everything here is BIGINT).
     Peel-depth coverage is pinned by a convergence test
     (tests/test_graph.py), the pure-Python peel parity test, and the
-    round-10 MARGIN assertion (tests/test_round10_fixes.py): measured
+    MARGIN assertion (tests/test_graph.py): measured
     depth is 1 round at all three SFs (dense LSH cliques peel in one
     pass — see operators/graph.py:k_core for why depth tracks chain
     structure, not data volume), vs the 12 unrolled rounds."""
     from sfcrimedatapipeline_spark.operators.graph import k_core
 
-    return k_core(_dup_pairs(spark, sf_dir), k=KCORE_K, max_iters=KCORE_ROUNDS)
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = k_core(pairs, k=KCORE_K, max_iters=KCORE_ROUNDS)
+    return unpersist_when_released(out, pairs)
 
 
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,7 +116,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. Output (doc_id, cluster_id, keeper_id, keeper_quality) —
     keeper selection is exact-integer, so the map hash-gates."""
     docs = _docs(spark, sf_dir)
-    cc = _dup_cc(spark, sf_dir)
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    cc = corpus.connected_components(pairs)
     scored = textstats.with_quality(docs).select("doc_id", "quality_score")
     member = cc.join(scored, "doc_id")
     best = corpus.top_k_per_group(
@@ -164,12 +130,13 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("keeper_id"),
         F.col("quality_score").alias("keeper_quality"),
     )
-    return member.join(best, F.col("canonical_id") == F.col("__cid")).select(
+    out = member.join(best, F.col("canonical_id") == F.col("__cid")).select(
         "doc_id",
         F.col("canonical_id").alias("cluster_id"),
         "keeper_id",
         "keeper_quality",
     )
+    return unpersist_when_released(out, pairs)
 
 
 def dedup_clusters_2phase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,11 +145,10 @@ def dedup_clusters_2phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of graph diameter, the adversarial-long-chain answer)
     and gated by the SAME recursive-CTE oracle as dedup_clusters: both
     algorithms must produce the identical (doc_id, canonical_id) map.
-    Shares the memoized pair graph but deliberately NOT the memoized CC
-    — running the second algorithm is this query's whole point."""
-    return corpus.connected_components(
-        _dup_pairs(spark, sf_dir), algorithm="two_phase"
-    ).orderBy("doc_id")
+    Same pair graph, the second algorithm."""
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = corpus.connected_components(pairs, algorithm="two_phase")
+    return unpersist_when_released(out.orderBy("doc_id"), pairs)
 
 
 PAGERANK_ITERS = 5
@@ -205,12 +171,11 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 5 iterations: the dup clusters are tiny-diameter, ranks settle
     # fast; the numeric contract at 10 iters lives in the tests
-    return pagerank(
-        _dup_pairs(spark, sf_dir),
-        iters=PAGERANK_ITERS,
-        damping=PAGERANK_DAMPING,
-        deterministic=True,
-    ).orderBy("doc_id")
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = pagerank(
+        pairs, iters=PAGERANK_ITERS, damping=PAGERANK_DAMPING, deterministic=True
+    )
+    return unpersist_when_released(out.orderBy("doc_id"), pairs)
 
 
 HITS_ITERS = 4
@@ -252,11 +217,11 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULLY hash-gated against a recursive-CTE oracle."""
     from sfcrimedatapipeline_spark.operators.graph import bfs_distances
 
-    return bfs_distances(
-        _dup_pairs(spark, sf_dir),
-        lambda c: c % BFS_SEED_MOD == 0,
-        max_hops=BFS_MAX_HOPS,
-    ).orderBy("doc_id")
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = bfs_distances(
+        pairs, lambda c: c % BFS_SEED_MOD == 0, max_hops=BFS_MAX_HOPS
+    )
+    return unpersist_when_released(out.orderBy("doc_id"), pairs)
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1673,9 +1638,10 @@ def graph_modularity_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-row float accumulation, so the table hash-gates. Scale:
     degrees and e_in are map-side-combined groupBys on the pair list;
     m is a 1-row broadcast."""
-    # memoized prefix: the 2-col projection rides the persisted frame
-    pairs = _dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    cc = _dup_cc(spark, sf_dir)
+    # read five times: the CC rounds, m, both degree sides and e_in
+    raw = _dup_pairs(spark, sf_dir).persist()
+    pairs = raw.select("doc_a", "doc_b")
+    cc = corpus.connected_components(raw)
     m_row = pairs.agg(F.count("*").cast("long").alias("m"))
     # per-node degree from the mirrored edge list
     deg = (
@@ -1699,9 +1665,10 @@ def graph_modularity_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = comm.join(e_in, "community").crossJoin(F.broadcast(m_row))
     half = F.col("d_c").cast("double") / (F.lit(2).cast("long") * F.col("m")).cast("double")
     term = F.col("e_in").cast("double") / F.col("m").cast("double") - half * half
-    return j.select(
+    out = j.select(
         "community", "n_nodes", "e_in", "d_c", "m", term.alias("modularity_term")
     )
+    return unpersist_when_released(out, raw)
 
 
 QUERIES["graph_modularity_dup"] = graph_modularity_dup
@@ -1882,7 +1849,9 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     order)."""
     from sfcrimedatapipeline_spark.operators.graph import label_propagation
 
-    return label_propagation(_dup_pairs(spark, sf_dir), rounds=LPA_ROUNDS)
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = label_propagation(pairs, rounds=LPA_ROUNDS)
+    return unpersist_when_released(out, pairs)
 
 
 QUERIES["graph_lpa_communities"] = graph_lpa_communities
@@ -1926,9 +1895,9 @@ def graph_lpa_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same rounds and diffs consecutive label CTEs."""
     from sfcrimedatapipeline_spark.operators.graph import lpa_convergence
 
-    return lpa_convergence(
-        _dup_pairs(spark, sf_dir), rounds=LPA_ROUNDS
-    ).orderBy("round_no")
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    out = lpa_convergence(pairs, rounds=LPA_ROUNDS)
+    return unpersist_when_released(out.orderBy("round_no"), pairs)
 
 
 QUERIES["graph_lpa_convergence"] = graph_lpa_convergence
@@ -2068,14 +2037,15 @@ def corpus_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup cluster keep themselves), with the removed-token count exact
     and the savings ratio the only double. This is the number that
     justifies (or kills) a dedup pass at 100 TB — pairs found is
-    vanity, training tokens removed is budget. Rides the memoized CC
+    vanity, training tokens removed is budget. The dedup_clusters CC
     map; two map-side-combined aggregates over the doc frame."""
     from sfcrimedatapipeline_spark.functions.text import tokens
 
     docs = _docs(spark, sf_dir).select(
         "doc_id", "source", F.size(tokens(F.col("text"))).cast("long").alias("__t")
     )
-    cc = _dup_cc(spark, sf_dir)
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    cc = corpus.connected_components(pairs)
     j = docs.join(cc, "doc_id", "left")
     kept = F.col("canonical_id").isNull() | (
         F.col("canonical_id") == F.col("doc_id")
@@ -2087,7 +2057,7 @@ def corpus_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("tokens_kept"),
     )
-    return agg.select(
+    out = agg.select(
         "source",
         "n_docs",
         "tokens_total",
@@ -2101,6 +2071,7 @@ def corpus_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("savings_ratio"),
     )
+    return unpersist_when_released(out, pairs)
 
 
 QUERIES["corpus_dedup_token_savings"] = corpus_dedup_token_savings
@@ -2137,7 +2108,7 @@ def corpus_quality_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFram
     DUPLICATION — the hypothesis check behind quality-aware dedup ("do
     duplicates skew low-quality?"): r_pb = (M_dup − M_nondup)/σ_q ·
     sqrt(p·q) over the integer quality score (0-3) and the is-in-a-dup-
-    cluster flag from the memoized CC map. Every sum is an exact
+    cluster flag from the dedup_clusters CC map. Every sum is an exact
     BIGINT from one global aggregate (1-row output); the final formula
     is a FIXED-ORDER double expression written identically in the
     oracle, so even the correlation hash-gates. A strong negative r on
@@ -2147,7 +2118,10 @@ def corpus_quality_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFram
     q = textstats.with_quality(docs).select(
         "doc_id", F.col("quality_score").cast("long").alias("q")
     )
-    dup = _dup_cc(spark, sf_dir).select("doc_id", F.lit(1).alias("__dup"))
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    dup = corpus.connected_components(pairs).select(
+        "doc_id", F.lit(1).alias("__dup")
+    )
     j = q.join(dup, "doc_id", "left").select(
         "q", F.coalesce("__dup", F.lit(0)).alias("d")
     )
@@ -2167,7 +2141,7 @@ def corpus_quality_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("sum_q").cast("double") / n
     ) * (F.col("sum_q").cast("double") / n)
     r = (m1 - m0) / F.sqrt(var) * F.sqrt((n1 / n) * (n0 / n))
-    return agg.select(
+    out = agg.select(
         "n",
         "n_dup",
         F.when((F.col("n_dup") > 0) & (F.col("n_dup") < F.col("n")), m1)
@@ -2191,6 +2165,7 @@ def corpus_quality_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFram
         .otherwise(F.lit(None).cast("double"))
         .alias("r_pointbiserial"),
     )
+    return unpersist_when_released(out, pairs)
 
 
 QUERIES["corpus_quality_dup_correlation"] = corpus_quality_dup_correlation
@@ -2255,7 +2230,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (diagonal = within-source duplication). The triage view a corpus
     owner reads before choosing dedup scope — heavy off-diagonal mass
     means cross-source syndication and per-source dedup won't cut it.
-    Rides the memoized pair graph; output is bounded by source-pair
+    Over the _dup_pairs graph; output is bounded by source-pair
     count (≤ S²/2), never data cardinality. Exact integers end to end."""
     docs = _docs(spark, sf_dir).select("doc_id", "source")
     pairs = _dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -2438,16 +2413,18 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate). Two map-side-combined aggregates over the CC output —
     the histogram key is the component size, bounded by the largest
     cluster, never data cardinality."""
-    cc = _dup_cc(spark, sf_dir)
+    pairs = _dup_pairs(spark, sf_dir).persist()
+    cc = corpus.connected_components(pairs)
     sizes = cc.groupBy("canonical_id").agg(
         F.count("*").cast("long").alias("cluster_size")
     )
-    return (
+    out = (
         sizes.filter(F.col("cluster_size") >= 2)
         .groupBy("cluster_size")
         .agg(F.count("*").cast("long").alias("n_clusters"))
         .orderBy("cluster_size")
     )
+    return unpersist_when_released(out, pairs)
 
 
 QUERIES["dedup_cluster_sizes"] = dedup_cluster_sizes
@@ -2470,8 +2447,8 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_assign_splits_grouped (group-keyed splits) over the per-doc
     split — every off-diagonal pair here is an eval item whose near-
     twin sits in train, i.e. leaked evaluation signal the per-doc split
-    permits BY CONSTRUCTION. Rides the memoized MinHash pair graph (the
-    _dup_pairs invariant) and the exact md5 split assignment; output is
+    permits BY CONSTRUCTION. Over the MinHash pair graph (_dup_pairs)
+    and the exact md5 split assignment; output is
     a ≤6-row (split_lo, split_hi) matrix of exact counts, pair order
     normalized lexicographically so the matrix is symmetric-free."""
     pairs = _dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -2517,20 +2494,21 @@ def graph_dup_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     separates a corpus of scattered twins (mass at d=1-2) from
     boilerplate storms (a heavy tail of hub documents every detector
     must block on). Complements dedup_cluster_sizes (components) with
-    the per-node view; rides the memoized pair graph; output bounded
+    the per-node view over the _dup_pairs graph; output bounded
     by max degree. Exact integers throughout."""
-    pairs = _dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    nodes = pairs.select(F.col("doc_a").alias("doc_id")).unionAll(
-        pairs.select(F.col("doc_b").alias("doc_id"))
+    raw = _dup_pairs(spark, sf_dir).persist()  # read by both union sides
+    nodes = raw.select(F.col("doc_a").alias("doc_id")).unionAll(
+        raw.select(F.col("doc_b").alias("doc_id"))
     )
     deg = nodes.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("degree")
     )
-    return (
+    out = (
         deg.groupBy("degree")
         .agg(F.count("*").cast("long").alias("n_docs"))
         .orderBy("degree")
     )
+    return unpersist_when_released(out, raw)
 
 
 QUERIES["graph_dup_degree_distribution"] = graph_dup_degree_distribution

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import keep_alive_until_released
 from sfcrimedatapipeline_spark.plans import fact as fact_ops
 from sfcrimedatapipeline_spark.plans.dims import generate_dim_date, generate_dim_time
 from sfcrimedatapipeline_spark.plans.pipeline import transform
@@ -120,42 +121,23 @@ def _staging_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: sf_dir → (session, star-schema tables). One transform graph serves
-#: BOTH queries below (VERDICT r4 #7): the 7-join fact plan is analyzed
-#: once per session, and the staging/dim frames transform() persists for
-#: one query's action serve the other — in the correctness gate, which
-#: runs the two back-to-back with the cache intact, serve reuses every
-#: dim fact materialized. After an external spark.catalog.clearCache()
-#: (the bench does this between reps) the memoized graph still computes
-#: correctly — cleared cache scans recompute through their lineage — and
-#: still skips the multi-second re-analysis of the 7-join plan; callers
-#: who instead want cache-backed reruns build a fresh transform().
-#: Keyed on session identity so a new SparkSession (tests) rebuilds.
-_MEMO: dict[str, tuple[SparkSession, dict[str, DataFrame]]] = {}
-
-
-def _tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    entry = _MEMO.get(sf_dir)
-    if entry is None or entry[0] is not spark:
-        tables = transform(
-            _staging_from_events(spark, sf_dir),
-            generate_dim_date(spark, *DATE_RANGE),
-            generate_dim_time(spark),
-        )
-        entry = (spark, tables)
-        _MEMO[sf_dir] = entry
-    return entry[1]
-
-
 def fact_crime_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full FactCrime build through the real pipeline transform."""
-    return _tables(spark, sf_dir)["FactCrime"]
+    return transform(
+        _staging_from_events(spark, sf_dir),
+        generate_dim_date(spark, *DATE_RANGE),
+        generate_dim_time(spark),
+    )["FactCrime"]
 
 
 def serve_initial_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serve/analytics query over the freshly built star schema."""
-    t = _tables(spark, sf_dir)
-    return fact_ops.serve_initial_reports(
+    t = transform(
+        _staging_from_events(spark, sf_dir),
+        generate_dim_date(spark, *DATE_RANGE),
+        generate_dim_time(spark),
+    )
+    out = fact_ops.serve_initial_reports(
         t["FactCrime"],
         t["DimDate"],
         t["DimTime"],
@@ -163,6 +145,8 @@ def serve_initial_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["DimIncident"],
         t["DimReportType"],
     )
+    # transform's caches live as long as the FactCrime wrapper
+    return keep_alive_until_released(out, t["FactCrime"])
 
 
 def _sql_list(values) -> str:
@@ -355,12 +339,13 @@ def fact_cube_districts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OLAP CUBE over the freshly built star: incident counts across
     all four (district, resolution) grouping combinations with
     grouping_id — the dashboard rollup the reference's Tableau sheet
-    implies but never materializes. Reuses the session-memoized
-    transform graph (_tables), so the marginal cost over
-    fact_crime_build is one broadcast join + the cube aggregate."""
-    from pyspark.sql import functions as F
-
-    t = _tables(spark, sf_dir)
+    implies but never materializes: fact_crime_build's transform graph
+    plus one broadcast join and the cube aggregate."""
+    t = transform(
+        _staging_from_events(spark, sf_dir),
+        generate_dim_date(spark, *DATE_RANGE),
+        generate_dim_time(spark),
+    )
     fact = t["FactCrime"]
     dim_loc = t["DimLocation"]
     joined = fact.join(
@@ -368,7 +353,7 @@ def fact_cube_districts(spark: SparkSession, sf_dir: str) -> DataFrame:
         fact["LocationID"] == dim_loc["LocationID"],
         "left",
     )
-    return (
+    out = (
         joined.cube(
             F.col("PoliceDistrict").alias("district"),
             F.col("IncidentDescription").isNotNull().alias("has_description"),
@@ -378,6 +363,7 @@ def fact_cube_districts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping_id().cast("int").alias("gid"),
         )
     )
+    return keep_alive_until_released(out, fact)
 
 
 QUERIES["fact_cube_districts"] = fact_cube_districts

@@ -518,8 +518,8 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The gated MinHash+LSH pair list itself, riding the session-
-    memoized ``_dup_pairs`` prefix (byte-identical default config,
+    """The gated MinHash+LSH pair list itself: the ``_dup_pairs`` graph
+    every dup-graph query derives (byte-identical default config,
     VERDICT r8 #1; lazy import — corpus_queries imports from here)."""
     from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_pairs
 
@@ -633,13 +633,11 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream, never all-pairs); output ≤ 7 rows. Exact booleans and
     counts — hash-gated by composing the three pair oracles.
 
-    The MinHash arm rides the session-memoized ``_dup_pairs`` prefix
-    (plans/corpus_queries.py — the gated default config is
-    byte-identical to ``minhash_near_duplicates(docs, threshold=0.5)``,
-    VERDICT r8 #1): the pair graph is derived once per (session,
-    sf_dir) and shared with the twelve other dup-graph consumers
-    instead of re-running the shingle→sign→band→verify pipeline here.
-    Lazy import — corpus_queries imports from this module at top level.
+    The MinHash arm is ``_dup_pairs`` (plans/corpus_queries.py — the
+    gated default config is byte-identical to
+    ``minhash_near_duplicates(docs, threshold=0.5)``, VERDICT r8 #1),
+    the same pair graph every dup-graph query derives. Lazy import —
+    corpus_queries imports from this module at top level.
     """
     from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_pairs
 
@@ -712,9 +710,9 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recover? One row: n_exact, n_lsh, n_common — the recall/precision
     numerators a corpus team watches when tuning bands and thresholds.
 
-    The LSH arm rides the session-memoized ``_dup_pairs`` prefix
-    (plans/corpus_queries.py, byte-identical config — VERDICT r8 #1);
-    lazy import to avoid the top-level import cycle.
+    The LSH arm is ``_dup_pairs`` (plans/corpus_queries.py,
+    byte-identical config — VERDICT r8 #1); lazy import to avoid the
+    top-level import cycle.
     """
     from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_pairs
 
@@ -784,31 +782,6 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=ANN_IVF_CENTROIDS,
         n_probe=ANN_IVF_PROBE,
     )
-
-
-def _parquet_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(relative-name, size, mtime_ns) of every data file under the
-    table path — one os.stat per file, no Spark job. Parquet rewrites
-    (even same-size) bump mtime_ns; a missing path degrades to a
-    sentinel rather than raising (the read itself will surface it)."""
-    import os
-
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    out = []
-    try:
-        if os.path.isfile(root):
-            st = os.stat(root)
-            return ((table, st.st_size, st.st_mtime_ns),)
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                if name.startswith((".", "_")):
-                    continue
-                st = os.stat(os.path.join(dirpath, name))
-                rel = os.path.relpath(os.path.join(dirpath, name), root)
-                out.append((rel, st.st_size, st.st_mtime_ns))
-    except OSError:
-        return ("unstattable",)
-    return tuple(sorted(out))
 
 
 def _trained_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
@@ -3318,81 +3291,29 @@ ORACLE_SQL["text_bpe_merges_local"] = _bpe_merges_oracle_sql(30)
 #: every 10th vector arrives as the "daily increment"
 IVFPQ_DELTA_MOD = 10
 
-#: sf_dir → (session, data fingerprint, index dir). The _INDEX_CACHE
-#: discipline (plans/llmops_ext.py) plus the _parquet_fingerprint
-#: check: build+append once per (session, sf_dir, data state),
-#: search many; stale entries evicted (and their on-disk index
-#: reclaimed) on rebuild.
-_IVFPQ_DELTA_CACHE: dict[str, tuple] = {}
-
-#: live on-disk index dirs awaiting exit-time reclaim. ONE atexit hook
-#: iterates this set (registered lazily below); eviction removes the
-#: dir from the set when its rmtree runs, so a long-lived session
-#: cycling sf_dirs doesn't accumulate one finalizer per evicted
-#: tempdir (ADVICE r11).
-_IVFPQ_LIVE_DIRS: set[str] = set()
-_IVFPQ_ATEXIT_REGISTERED = False
-
-
-def _ivfpq_reap_live_dirs() -> None:
-    import shutil
-
-    for d in list(_IVFPQ_LIVE_DIRS):
-        shutil.rmtree(d, ignore_errors=True)
-    _IVFPQ_LIVE_DIRS.clear()
-
-
-def _ivfpq_delta_index(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
-    global _IVFPQ_ATEXIT_REGISTERED
-    fp = _parquet_fingerprint(sf_dir, "embeddings")
-    entry = _IVFPQ_DELTA_CACHE.get(sf_dir)
-    if entry is None or entry[0] is not spark or entry[1] != fp:
-        import shutil
-
-        for key in [
-            k
-            for k, e in _IVFPQ_DELTA_CACHE.items()
-            if e[0] is not spark or (k == sf_dir and e[1] != fp)
-        ]:
-            stale = _IVFPQ_DELTA_CACHE.pop(key)
-            # unlike the executor-side memo frames, a stale index is
-            # real DISK under tempdir — reclaim it on eviction
-            shutil.rmtree(stale[2], ignore_errors=True)
-            _IVFPQ_LIVE_DIRS.discard(stale[2])
-        emb = _read_parallel(spark, sf_dir, "embeddings")
-        base = emb.filter(F.col("vec_id") % IVFPQ_DELTA_MOD != 0)
-        delta = emb.filter(F.col("vec_id") % IVFPQ_DELTA_MOD == 0)
-        d = tempfile.mkdtemp(prefix="ivfpq_delta_")
-        # the index is real DISK: besides the eviction rmtree above,
-        # reclaim it at normal process exit too — a long-lived session
-        # cycling many sf_dirs must not leak tempdirs (ADVICE r10)
-        _IVFPQ_LIVE_DIRS.add(d)
-        if not _IVFPQ_ATEXIT_REGISTERED:
-            import atexit
-
-            atexit.register(_ivfpq_reap_live_dirs)
-            _IVFPQ_ATEXIT_REGISTERED = True
-        # quantizers derive from BASE ONLY (lowest-id seeds / default
-        # codebooks of the base split), then freeze in meta.json
-        similarity.ivfpq_index_write(base, d, n_centroids=ANN_IVF_CENTROIDS)
-        similarity.ivfpq_index_append(d, delta)
-        _IVFPQ_DELTA_CACHE[sf_dir] = (spark, fp, d)
-    return _IVFPQ_DELTA_CACHE[sf_dir][2]
-
 
 def ann_ivfpq_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search the incrementally-grown persisted IVF+PQ index (module
     note): base build + frozen-quantizer delta append + partition-
-    pruned search, all under one value hash."""
+    pruned search, all under one value hash. The index is built on
+    every call into an exit-reaped temp dir (the search reads it
+    lazily)."""
+    from sfcrimedatapipeline_spark.functions.caching import exit_temp_dir
+
     emb = _read_parallel(spark, sf_dir, "embeddings")
+    d = exit_temp_dir("ivfpq_delta_")
+    # quantizers derive from BASE ONLY (lowest-id seeds / default
+    # codebooks of the base split), then freeze in meta.json
+    similarity.ivfpq_index_write(
+        emb.filter(F.col("vec_id") % IVFPQ_DELTA_MOD != 0),
+        d,
+        n_centroids=ANN_IVF_CENTROIDS,
+    )
+    similarity.ivfpq_index_append(
+        d, emb.filter(F.col("vec_id") % IVFPQ_DELTA_MOD == 0)
+    )
     return similarity.ivfpq_index_search(
-        spark,
-        _ivfpq_delta_index(spark, sf_dir),
-        ann_queries(emb),
-        k=ANN_K,
-        n_probe=ANN_IVF_PROBE,
+        spark, d, ann_queries(emb), k=ANN_K, n_probe=ANN_IVF_PROBE
     )
 
 

@@ -757,24 +757,18 @@ ORACLE_SQL["docs_top_fraction_per_source"] = f"""
 """
 
 
-#: sf_dir → built index dir for the session (build once, search many —
-#: the same memoization discipline as fact_queries._tables)
-_INDEX_CACHE: dict[tuple[int, str], str] = {}
-
-
 def docs_bm25_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 search over the MATERIALIZED inverted index
     (operators/textstats.py:inverted_index_write/search): same exact
     scores as docs_bm25_search — shares its oracle verbatim — but the
-    read is partition-pruned to the query terms' hash buckets."""
-    import tempfile
+    read is partition-pruned to the query terms' hash buckets. The
+    index is written on every call into an exit-reaped temp dir (the
+    search reads it lazily)."""
+    from sfcrimedatapipeline_spark.functions.caching import exit_temp_dir
 
-    key = (id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        d = tempfile.mkdtemp(prefix="bm25idx_")
-        textstats.inverted_index_write(_docs(spark, sf_dir), d)
-        _INDEX_CACHE[key] = d
-    return textstats.inverted_index_search(spark, _INDEX_CACHE[key], BM25_TERMS)
+    d = exit_temp_dir("bm25idx_")
+    textstats.inverted_index_write(_docs(spark, sf_dir), d)
+    return textstats.inverted_index_search(spark, d, BM25_TERMS)
 
 
 QUERIES["docs_bm25_index_search"] = docs_bm25_index_search

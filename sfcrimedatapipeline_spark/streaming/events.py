@@ -279,12 +279,13 @@ def cached_stream_fixture(
     "What's wrong" #1). The slicing is a pure function of
     (sf_dir, table, n_slices) — exact quantile boundaries over a static
     parquet table — so one build per session is bit-identical to a
-    rebuild. Dirs live under tempdirs the OS reclaims; the cache never
-    outlives the driver process, and a vanished dir is rebuilt.
+    rebuild. Dirs are exit-reaped temp dirs
+    (functions/caching.py:exit_temp_dir), so the cache never outlives
+    the driver process; a vanished dir is rebuilt.
     """
     import os
-    import tempfile
 
+    from sfcrimedatapipeline_spark.functions.caching import exit_temp_dir
     from sfcrimedatapipeline_spark.sources.tables import read_table
 
     key = (sf_dir, table, n_slices)
@@ -303,7 +304,7 @@ def cached_stream_fixture(
         order = F.col("doc_id")
     path = write_time_sliced_stream_dir(
         df,
-        tempfile.mkdtemp(prefix=f"sfcdp_fixture_{table}_"),
+        exit_temp_dir(f"sfcdp_fixture_{table}_"),
         n_slices=n_slices,
         order_by=order,
     )

@@ -589,3 +589,31 @@ def test_mann_kendall_hand_computed(spark):
     fr = orders_mann_kendall(spark, d2).collect()[0]
     assert fr.s_statistic == 0
     assert fr.var_s is None and fr.z is None  # all-tied variance guard
+
+
+def test_ivf_assign_keep_cos_contract(spark):
+    """ivf_assign(keep_cos=True) must expose the per-rank raw cosine
+    the audits consume: ranks are 1..limit per vector, cosines
+    non-increasing by rank, and the rank-1 centroid equals the
+    keep_cos=False argmax path (the two code branches cannot drift)."""
+    from sfcrimedatapipeline_spark.operators.similarity import ivf_assign
+
+    vecs = [
+        (i, [float((i * 7 + j * 3) % 5 - 2) for j in range(64)])
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    cents = [(k, [float((k + 1) * (j % 3) - 1) for j in range(64)]) for k in range(4)]
+
+    top2 = ivf_assign(df, cents, "vid", 2, keep_cos=True).collect()
+    by_vid = {}
+    for r in top2:
+        by_vid.setdefault(r.vid, {})[r["__r"]] = r
+    argmax = {
+        r.vid: r.centroid_id
+        for r in ivf_assign(df, cents, "vid", 1).collect()
+    }
+    for vid, ranks in by_vid.items():
+        assert set(ranks) == {1, 2}
+        assert ranks[1]["__ccos"] >= ranks[2]["__ccos"]
+        assert ranks[1].centroid_id == argmax[vid]

@@ -8,6 +8,8 @@ tie-breaks).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from sfcrimedatapipeline_spark.operators import corpus
@@ -1497,7 +1499,8 @@ def test_curation_funnel_stage_monotonicity_and_keeper_election(spark):
     standalone gate. Keeper election happens AMONG SURVIVORS: the
     number kept equals gopher-passing docs minus (surviving cluster
     members - surviving clusters)."""
-    from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_cc
+    from sfcrimedatapipeline_spark.operators.corpus import connected_components
+    from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_pairs
     from sfcrimedatapipeline_spark.plans.curation import (
         _docs,
         corpus_curation_funnel,
@@ -1519,7 +1522,7 @@ def test_curation_funnel_stage_monotonicity_and_keeper_election(spark):
 
     surv_cc = (
         gate.filter("pass_all")
-        .join(_dup_cc(spark, sf), "doc_id")
+        .join(connected_components(_dup_pairs(spark, sf)), "doc_id")
         .groupBy("canonical_id")
         .agg(F.count("*").alias("m"))
     )
@@ -1679,3 +1682,82 @@ def test_ccnet_e2e_funnel_invariants(spark):
     # both stages do real work somewhere in the corpus
     assert sum(r.paragraphs_dropped for r in rows) > 0
     assert sum(r.tokens_deduped for r in rows) > 0
+
+
+def test_quality_dup_correlation_null_on_zero_variance(spark, tmp_path):
+    """Degenerate corpus where every quality score is equal: var = 0.
+    Spark's Divide yields NULL, DuckDB ±inf/NaN — both engines must now
+    return NULL via the shared var > 0 guard (ADVICE r9 #5)."""
+    import duckdb
+
+    from sfcrimedatapipeline_spark.plans.corpus_queries import (
+        ORACLE_SQL,
+        corpus_quality_dup_correlation,
+    )
+
+    # 8 identical docs (a dup cluster) + 1 unique doc with the SAME
+    # token count and token lengths => identical quality score, var 0,
+    # and 0 < n_dup < n so only the variance guard can fire
+    rows = [(i, "qqq www eee rrr", "en", "src0", 15) for i in range(8)]
+    rows.append((8, "zzz xxx ccc vvv", "en", "src0", 15))
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    sf_dir = str(tmp_path / "sfdeg")
+    os.makedirs(sf_dir)
+    docs.coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+    row = corpus_quality_dup_correlation(spark, sf_dir).collect()[0]
+    assert 0 < row.n_dup < row.n
+    assert row.r_pointbiserial is None
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{os.path.join(sf_dir, 'documents.parquet')}/*.parquet'"
+    )
+    oracle = con.execute(ORACLE_SQL["corpus_quality_dup_correlation"]).fetchone()
+    assert oracle[1] > 0 and oracle[1] < oracle[0]
+    assert oracle[4] is None
+
+
+def test_collapse_token_runs_semantics(spark):
+    from sfcrimedatapipeline_spark.operators import textstats
+
+    df = spark.createDataFrame(
+        [(1, "a a b b a"), (2, "x x x"), (3, "no runs here"), (4, "")],
+        "doc_id long, text string",
+    )
+    rows = {
+        r.doc_id: r
+        for r in textstats.collapse_token_runs(df).collect()
+    }
+    assert rows[1].clean_text == "a b a" and rows[1].n_kept == 3
+    assert rows[2].clean_text == "x" and rows[2].n_tokens == 3
+    assert rows[3].clean_text == "no runs here"
+    assert rows[4].clean_text == "" and rows[4].n_tokens == 0
+
+
+def test_has_blocked_word_exact_token_match(spark):
+    """The C4 gate matches whole tokens only — 'slowly' must NOT
+    trigger the 'slow' entry (substring matching is the classic
+    blocklist false-positive)."""
+    from pyspark.sql import functions as F
+
+    from sfcrimedatapipeline_spark.functions.text import tokens
+    from sfcrimedatapipeline_spark.operators import textstats
+
+    df = spark.createDataFrame(
+        [(1, "a slow query"), (2, "moving slowly"), (3, "SLOW caps")],
+        "doc_id long, text string",
+    )
+    out = {
+        r.doc_id: r.b
+        for r in df.select(
+            "doc_id",
+            textstats.has_blocked_word(
+                tokens(F.col("text")), ["slow"]
+            ).alias("b"),
+        ).collect()
+    }
+    assert out == {1: True, 2: False, 3: True}  # tokens() lowercases

@@ -5,6 +5,8 @@ k docs contributes k² candidate pairs)."""
 
 from __future__ import annotations
 
+import pytest
+
 from sfcrimedatapipeline_spark.operators import dedup
 
 #: a sentence every document shares → its shingles have DF = n_docs
@@ -436,3 +438,73 @@ def test_substring_dup_passages_counts(spark):
     first8 = " ".join(PASSAGE.split()[:8])
     r = by_passage[first8]
     assert r.n_occurrences == 3 and r.n_docs == 2 and r.first_doc_id == 1
+
+
+def test_auto_lsh_clamp_warns_with_achieved_recall():
+    """auto_lsh_config / bands_for_planes: when max_bands binds, the
+    recall target is NOT met and a UserWarning must say so (the
+    no-silent-caps discipline) — silent clamping hid it pre-r8."""
+    from sfcrimedatapipeline_spark.operators.dedup import (
+        auto_lsh_config,
+        bands_for_planes,
+    )
+
+    # θ=0.5 needs exponentially many bands at p=8: the clamp binds
+    with pytest.warns(UserWarning, match="achieved recall"):
+        bands = bands_for_planes(8, threshold=0.5, recall_target=0.95, max_bands=4)
+    assert bands == 4
+    with pytest.warns(UserWarning, match="max_bands"):
+        auto_lsh_config(10_000_000, threshold=0.5, max_bands=8)
+    # the dedup-grade regime stays unclamped and quiet
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        b, p = auto_lsh_config(100_000, threshold=0.98)
+    assert b >= 1 and p >= 1
+
+
+def test_smallcorpus_lsh_guard_fires_above_bound(spark):
+    """embedding_near_duplicates_lsh (the fixed-config SMALL-CORPUS
+    variant) is n²/B within buckets: pointing it at a corpus above
+    max_corpus_rows must raise, naming the auto entry point; below the
+    bound (and with the explicit None opt-out) it runs unchanged."""
+    from sfcrimedatapipeline_spark.operators import dedup
+
+    rows = [(i, [float((i * 7 + d) % 5) for d in range(4)]) for i in range(6)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="lsh_auto"):
+        dedup.embedding_near_duplicates_lsh(
+            emb, dim=4, max_corpus_rows=3
+        )
+    # below the bound: runs; explicit opt-out: runs without counting
+    dedup.embedding_near_duplicates_lsh(emb, dim=4, max_corpus_rows=10).count()
+    dedup.embedding_near_duplicates_lsh(emb, dim=4, max_corpus_rows=None).count()
+
+
+def test_embedding_contamination_lsh_is_cross_only(spark):
+    """The semantic-contamination operator pairs eval items with TRAIN
+    near-duplicates only: two identical EVAL vectors must not pair with
+    each other, and an uncontaminated eval vector stays absent."""
+    from sfcrimedatapipeline_spark.operators import dedup
+
+    def vec(seed: int) -> list[float]:
+        return [float((seed * 31 + d * 7) % 13 - 6) for d in range(8)]
+
+    train = spark.createDataFrame(
+        [(0, vec(1)), (1, vec(2)), (2, vec(3))],
+        "vec_id long, embedding array<float>",
+    )
+    evals = spark.createDataFrame(
+        [
+            (100, vec(1)),   # contaminated: identical to train 0
+            (101, vec(99)),  # clean
+            (102, vec(99)),  # identical to eval 101 — must NOT pair
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    rows = dedup.embedding_contamination_lsh(
+        evals, train, threshold=0.99, dim=8
+    ).collect()
+    assert {(r.id_a, r.id_b) for r in rows} == {(0, 100)}
+    assert rows[0].cosine == 1.0

@@ -439,3 +439,53 @@ def test_hits_deterministic_bit_exact_python_twin(spark):
     }
     for v in nodes:
         assert got[v] == (h.get(v, 0.0), a.get(v, 0.0)), v
+
+
+def test_hits_rejects_zero_iters(spark):
+    from sfcrimedatapipeline_spark.operators.graph import hits
+
+    df = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    with pytest.raises(ValueError, match="iters >= 1"):
+        hits(df, iters=0)
+
+
+def test_hits_output_survives_repeated_actions(spark):
+    """ADVICE r9: hits() used to unpersist edges/nodes BEFORE the
+    returned lazy frame was actioned, so every downstream action
+    re-derived the distinct mirrored edge list from source. The fix
+    ties the caches to the returned frame (unpersist_when_released):
+    holding the result, two successive actions must agree and the
+    edge/node inputs must still be cached (storageLevel.useMemory)."""
+    from sfcrimedatapipeline_spark.operators.graph import hits
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (4, 1)], "doc_a long, doc_b long"
+    )
+    out = hits(df, iters=2)
+    first = {r.doc_id: (r.hub, r.authority) for r in out.collect()}
+    second = {r.doc_id: (r.hub, r.authority) for r in out.collect()}
+    assert first == second and len(first) == 4
+    # at least one persisted RDD is still alive while `out` is held
+    jsc = spark.sparkContext._jsc.sc()
+    assert jsc.getPersistentRDDs().size() > 0
+    del out  # finalizer releases the edge/node caches
+
+
+def test_kcore_rounds_dominate_measured_peel_depth(spark):
+    """The graph_kcore_dup gate unrolls KCORE_ROUNDS oracle rounds and
+    relies on fixed-round == run-to-convergence (idempotent peel).
+    That contract holds iff KCORE_ROUNDS >= the dup graph's actual
+    peel depth WITH MARGIN. Measure the depth at both gate SFs via
+    k_core_peel_depth (which raises if 50 rounds don't converge) and
+    assert a >= 2-round margin under KCORE_ROUNDS."""
+    from sfcrimedatapipeline_spark.operators.graph import k_core_peel_depth
+    from sfcrimedatapipeline_spark.plans import corpus_queries as cq
+
+    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+        pairs = cq._dup_pairs(spark, sf)
+        depth = k_core_peel_depth(pairs, k=cq.KCORE_K, max_iters=50)
+        assert depth + 2 <= cq.KCORE_ROUNDS, (
+            f"{sf}: measured peel depth {depth} leaves <2 rounds of "
+            f"margin under KCORE_ROUNDS={cq.KCORE_ROUNDS} — raise the "
+            f"constant (and the oracle unroll) before data grows"
+        )

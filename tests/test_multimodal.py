@@ -540,3 +540,97 @@ def test_perceptual_dedup_groups_keep_one(spark):
         root = find(i)
         want[i] = min(j for j in range(7) if find(j) == root)
     assert got == want
+
+
+def test_perceptual_contamination_finds_planted_reencoded_twin(spark):
+    """A re-encoded eval copy (first byte changed — different raw
+    bytes, so exact byte dedup misses it; same metadata plane) must be
+    attributed to its train source within hamming <= 3, and an
+    unrelated eval image must not match."""
+    from pyspark.sql import functions as F
+
+    from sfcrimedatapipeline_spark.operators import multimodal as mm
+
+    text0 = "the quick brown fox jumps over the lazy dog " * 4
+    text1 = "zzzz completely different content qqqq " * 5
+    docs = spark.createDataFrame(
+        [(0, text0), (3, text1)], "doc_id long, text string"
+    )
+    train = mm.synthesize_media(docs)  # both are images (doc_id % 3 == 0)
+    # re-encode twin of doc 0: one leading-byte artifact, source w/h
+    twin_docs = spark.createDataFrame(
+        [(0, "x" + text0[1:])], "doc_id long, text string"
+    )
+    eval_media = mm.synthesize_media(twin_docs).select(
+        (F.col("doc_id") + 1000).alias("doc_id"),
+        "media_type",
+        "payload",
+        "meta",
+    )
+    got = mm.perceptual_contamination(
+        eval_media, train, method="bytes", algorithm="dhash", max_hamming=3
+    ).collect()
+    assert len(got) == 1
+    r = got[0]
+    assert (r.eval_id, r.best_train_id) == (1000, 0)
+    assert r.best_hamming <= 3 and r.n_train_matches == 1
+    # and the twin's raw bytes differ from the source's (md5-exact
+    # dedup would NOT have caught this pair)
+    payloads = {row.doc_id: bytes(row.payload) for row in train.collect()}
+    twin_payload = bytes(eval_media.collect()[0].payload)
+    assert twin_payload != payloads[0]
+
+
+def test_media_contamination_query_attributes_sources(spark):
+    """The gated report at sf0.001: every planted eval twin of an
+    ASCII-leading source is contaminated, and best_train_id recovers
+    the source doc (or a hamming-tied earlier twin of it)."""
+    from sfcrimedatapipeline_spark.plans import media as media_plans
+
+    rows = media_plans.media_contamination_perceptual(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    assert len(rows) >= 10
+    by_eval = {r.eval_id: r for r in rows}
+    for eval_id, r in by_eval.items():
+        src = eval_id - media_plans.MEDIA_EVAL_OFFSET
+        assert src % media_plans.MEDIA_EVAL_MOD == 0
+        assert r.best_hamming <= 3 and r.n_train_matches >= 1
+
+
+def test_perceptual_contamination_multiplicity_weights(spark):
+    """VERDICT r11 #2: duplicate-heavy media must NOT expand
+    quadratically — both splits collapse to distinct perceptual
+    hashes with multiplicity weights before the band join. 12
+    byte-identical train copies of the eval twin's source must yield
+    ONE report row whose count carries the full weight (12) and whose
+    best twin is the lowest train id."""
+    from pyspark.sql import functions as F
+
+    from sfcrimedatapipeline_spark.operators import multimodal as mm
+
+    text0 = "the quick brown fox jumps over the lazy dog " * 4
+    base = mm.synthesize_media(
+        spark.createDataFrame([(0, text0)], "doc_id long, text string")
+    )
+    # 12 BYTE-IDENTICAL train copies (same payload AND meta, new ids)
+    train = base.crossJoin(spark.range(12)).select(
+        (F.col("id") * 3).alias("doc_id"), "media_type", "payload", "meta"
+    )
+    twin_docs = spark.createDataFrame(
+        [(0, "x" + text0[1:])], "doc_id long, text string"
+    )
+    eval_media = mm.synthesize_media(twin_docs).select(
+        (F.col("doc_id") + 1000).alias("doc_id"),
+        "media_type",
+        "payload",
+        "meta",
+    )
+    got = mm.perceptual_contamination(
+        eval_media, train, method="bytes", algorithm="dhash", max_hamming=3
+    ).collect()
+    assert len(got) == 1
+    r = got[0]
+    assert r.eval_id == 1000
+    assert r.n_train_matches == 12
+    assert r.best_train_id == 0 and r.best_hamming <= 3

@@ -681,3 +681,52 @@ def test_remove_boilerplate_no_window_and_survives_skew(spark):
     assert agg.chunks == 2 * n and agg.dropped == n
     keeper = out.filter(F.col("doc_id") == 0).collect()[0]
     assert keeper.clean_text == "uniq0" and keeper.n_dropped == 1
+
+
+def test_ivfpq_index_append_never_rewrites_base_files(spark, tmp_path):
+    """The delta append must be pure file ADDITION inside the existing
+    list_id partition directories: every pre-append data file survives
+    byte-identical (name, size, mtime), so at 100 TB a daily increment
+    costs only the new codes' write, never a base rewrite."""
+    import os
+
+    from sfcrimedatapipeline_spark.operators import similarity
+    from sfcrimedatapipeline_spark.sources.tables import read_table
+
+    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
+    base = emb.filter("vec_id % 10 != 0")
+    delta = emb.filter("vec_id % 10 = 0")
+    d = str(tmp_path / "idx")
+    similarity.ivfpq_index_write(base, d, n_centroids=8)
+
+    def snapshot():
+        out = {}
+        codes = os.path.join(d, "codes")
+        for dirpath, _dirs, files in os.walk(codes):
+            for name in files:
+                if name.startswith("part-"):
+                    p = os.path.join(dirpath, name)
+                    st = os.stat(p)
+                    out[os.path.relpath(p, codes)] = (st.st_size, st.st_mtime_ns)
+        return out
+
+    before = snapshot()
+    assert before  # base build produced data files
+    similarity.ivfpq_index_append(d, delta)
+    after = snapshot()
+    # strict superset: every base file untouched, new files added
+    assert set(before) < set(after)
+    for rel, sig in before.items():
+        assert after[rel] == sig, f"base file rewritten: {rel}"
+
+
+def test_ivfpq_delta_query_search_is_partition_pruned(spark):
+    """The gated incremental-index query's scan must carry a
+    PartitionFilters predicate on list_id (probed lists only)."""
+    from sfcrimedatapipeline_spark.plans import llmops
+
+    df = llmops.ann_ivfpq_index_delta(spark, "/root/testdata/sf0.001")
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "PartitionFilters" in plan and "list_id" in plan

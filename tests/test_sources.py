@@ -7,6 +7,7 @@ run_pipeline on a real file.
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -412,3 +413,41 @@ def test_jsonl_sink_append_is_lossless(spark, tmp_path):
     assert back.where("tag = 'a'").count() == 10
     with open(os.path.join(p, "_SUCCESS")) as fh:
         assert json.load(fh) == {"rows": 15, "files": 4}
+
+
+def test_jsonl_corrupt_success_recovers_via_journal(spark, tmp_path):
+    """Append onto a table whose _SUCCESS was corrupted: the commit
+    must WARN, rebuild prior totals from the per-file journal
+    (_SUCCESS.files — O(#files), not O(rows)), and produce exact
+    totals."""
+    from sfcrimedatapipeline_spark.sources.jsonl import register_jsonl_sink
+
+    register_jsonl_sink(spark)
+    out = str(tmp_path / "t")
+    df1 = spark.range(7).selectExpr("id", "CAST(id AS STRING) AS s")
+    df1.coalesce(2).write.format("jsonlsink").option("path", out).mode(
+        "overwrite"
+    ).save()
+    with open(os.path.join(out, "_SUCCESS")) as fh:
+        assert json.load(fh)["rows"] == 7
+    journal = os.path.join(out, "_SUCCESS.files")
+    assert os.path.exists(journal)
+    with open(os.path.join(out, "_SUCCESS"), "w") as fh:
+        fh.write("{corrupt json")
+    df2 = spark.range(100, 105).selectExpr("id", "CAST(id AS STRING) AS s")
+    # the recovery UserWarning is emitted inside the data-source COMMIT
+    # python worker (a separate process — it lands on the worker's
+    # stderr/log, not in this process's warning filters), so the test
+    # pins the observable recovery RESULT: exact totals via the journal
+    df2.coalesce(1).write.format("jsonlsink").option("path", out).mode(
+        "append"
+    ).save()
+    with open(os.path.join(out, "_SUCCESS")) as fh:
+        manifest = json.load(fh)
+    assert manifest["rows"] == 12
+    assert manifest["files"] == 3
+    # the journal now records every committed part with its row count
+    with open(journal) as fh:
+        recs = [json.loads(line) for line in fh]
+    assert sum(r["rows"] for r in recs) == 12
+    assert len(recs) == 3

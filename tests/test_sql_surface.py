@@ -398,3 +398,24 @@ def test_dp_key_threshold_suppresses_rare_private_keys(spark):
     assert all(g.startswith("h") for g in kept), sorted(kept)[:5]
     assert len(kept) == 5
     assert all(kept[g] == full[g] for g in kept)
+
+
+def test_assoc_rules_oracles_interpolate_min_support():
+    """Every basket-support HAVING clause in sql_surface.py must be
+    interpolated from BASKET_MIN_SUPPORT, never a literal — a constant
+    change that diverges Spark from the oracle is a gate time bomb."""
+    import inspect
+    import re
+
+    from sfcrimedatapipeline_spark.plans import sql_surface
+
+    src = inspect.getsource(sql_surface)
+    for m in re.finditer(r"HAVING count\(\*\) >= ([^\s]+)", src):
+        assert "BASKET_MIN_SUPPORT" in m.group(1), (
+            f"hardcoded basket support in oracle SQL: {m.group(0)!r}"
+        )
+    # and the rendered oracle carries the current constant
+    assert (
+        f">= {sql_surface.BASKET_MIN_SUPPORT}"
+        in sql_surface.ORACLE_SQL["orders_assoc_rules"]
+    )

@@ -8,6 +8,7 @@ incremental execution converges to the batch answer.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -406,3 +407,64 @@ def test_python_stream_source_exactly_once_across_batch_sizes(spark):
             q.stop()
         ids = sorted(r.id for r in spark.table(name).collect())
         assert ids == list(range(300)), batch
+
+
+def test_wm_dau_overcounts_after_eviction(spark, tmp_path):
+    """events_dau_stream_wm's state contract: a (user, day) duplicate
+    arriving within the watermark delay is dropped; once the watermark
+    passes the entry's expiration the key re-emits and the day's DAU
+    overcounts — time-bounded state trades exactly-once per corpus for
+    bounded memory (the dedup_exact_stream_wm eviction precedent,
+    applied to the DAU dedup keys)."""
+    import datetime as dt
+    import shutil
+
+    from sfcrimedatapipeline_spark.streaming.events import run_stream_to_memory
+
+    t0 = dt.datetime(2024, 1, 1)
+    # watermark lags one batch, so eviction needs a follow-up batch
+    batches = [
+        [(1, t0)],                                   # user 1 day 1: emit
+        [(1, t0 + dt.timedelta(minutes=10))],        # in horizon: drop
+        [(2, t0 + dt.timedelta(hours=5))],           # advances watermark
+        [(3, t0 + dt.timedelta(hours=5, minutes=30))],  # wm 4h30: evicts u1
+        [(1, t0 + dt.timedelta(hours=6))],           # re-emit: DAU double-counts
+    ]
+    ddl = "user_id long, ts timestamp"
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    base_t = 1_700_000_000
+    for i, rows in enumerate(batches):
+        part = tmp_path / f"part{i}"
+        spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(part))
+        [src] = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        dest = watch / f"part-{i}.parquet"
+        shutil.copy(part / src, dest)
+        os.utime(dest, (base_t + i * 10, base_t + i * 10))
+
+    def transform(stream):
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .select("user_id", F.to_date("ts").alias("day"), "ts")
+            .dropDuplicatesWithinWatermark(["user_id", "day"])
+            .select("user_id", "day")
+        )
+
+    deduped = run_stream_to_memory(
+        spark,
+        str(watch),
+        transform,
+        query_name="wm_dau_eviction",
+        output_mode="append",
+        schema=ddl,
+    )
+    dau = {
+        r.day.isoformat(): r.dau
+        for r in deduped.groupBy("day")
+        .agg(F.count("*").cast("long").alias("dau"))
+        .collect()
+    }
+    # 3 distinct users, but user 1's evicted entry re-emitted: DAU = 4
+    assert dau == {"2024-01-01": 4}

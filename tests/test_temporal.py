@@ -401,3 +401,20 @@ def test_periodogram24_detects_planted_daily_cycle(spark):
     n_hours = 24 * 14
     amp = 2 * math.sqrt(out[1].power) / n_hours
     assert abs(amp - 8.0) < 0.25
+
+
+def test_periodogram_oracle_hod_is_sign_safe():
+    """DuckDB % follows the dividend's sign; the oracle must bucket
+    pre-epoch hour indexes into [0, 24) exactly like Spark's pmod."""
+    import duckdb
+
+    from sfcrimedatapipeline_spark.plans.timeseries import (
+        _periodogram_oracle_sql,
+    )
+
+    sql = _periodogram_oracle_sql()
+    assert "((h % 24) + 24) % 24" in sql
+    # the exact expression, evaluated by the oracle engine on a
+    # negative hour index, lands in [0, 24)
+    got = duckdb.sql("SELECT ((-5 % 24) + 24) % 24").fetchone()[0]
+    assert got == 19

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from sfcrimedatapipeline_spark.sources import versioned as V
 
 
@@ -188,3 +190,57 @@ def test_stream_replayed_batch_id_commits_once(spark, tmp_path):
     q.awaitTermination(120)
     assert len(V.history(table)) == 2
     assert V.read_version(spark, table).count() == 7
+
+
+def test_versioned_replay_skips_despite_many_other_writers(spark, tmp_path, monkeypatch):
+    """Exactly-once across other-writer floods: after the sink commits
+    batch 0, MORE manifests than the fallback scan will ever read land
+    from other writers; a fresh-checkpoint replay of batch 0 must still
+    be skipped — the per-query sidecar index resolves it in O(1)."""
+    import sfcrimedatapipeline_spark.sources.versioned as V
+
+    monkeypatch.setattr(V, "REPLAY_WINDOW", 2)
+    monkeypatch.setattr(V, "TOTAL_SCAN_CAP", 4)
+
+    def _df(rng):
+        return spark.createDataFrame([(i, f"s{i}") for i in rng], "id long, s string")
+
+    table = str(tmp_path / "table")
+    src = tmp_path / "src"
+    src.mkdir()
+    _df(range(4)).coalesce(1).write.parquet(str(src / "a"))
+    for f in (src / "a").glob("*.parquet"):
+        f.rename(src / f"a_{f.name}")
+
+    def stream():
+        return (
+            spark.readStream.schema("id long, s string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+
+    q = V.versioned_stream_sink(
+        stream(), table, checkpoint_dir=str(tmp_path / "ck1"), query_name="qa"
+    )
+    q.awaitTermination(120)
+    assert len(V.history(table)) == 1
+    # flood: 6 other-writer commits (> TOTAL_SCAN_CAP) bury qa's manifest
+    for i in range(6):
+        V.append_version(_df(range(2)), table, note=f"other {i}")
+    # fresh checkpoint => Spark re-delivers batch 0; must NOT double-append
+    q = V.versioned_stream_sink(
+        stream(), table, checkpoint_dir=str(tmp_path / "ck2"), query_name="qa"
+    )
+    q.awaitTermination(120)
+    assert len(V.history(table)) == 7  # 1 stream + 6 manual, no duplicate
+
+    # pre-index table (sidecar removed): the capped scan can no longer
+    # prove the replay — it must WARN (never silently double-append)
+    for name in os.listdir(os.path.join(table, V._MANIFESTS)):
+        if name.startswith("_last_batch."):
+            os.remove(os.path.join(table, V._MANIFESTS, name))
+    with pytest.warns(UserWarning, match="capped"):
+        q = V.versioned_stream_sink(
+            stream(), table, checkpoint_dir=str(tmp_path / "ck3"), query_name="qa"
+        )
+        q.awaitTermination(120)

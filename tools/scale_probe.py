@@ -309,15 +309,15 @@ def _run_noop(df) -> None:
 
 
 def _child(name: str) -> None:
-    """One probe query in a FRESH session (VERDICT r8 #6): the round-8
-    probe ran every query in ONE shared session, so the memoized
-    prefixes (_dup_pairs/_dup_cc, _tables) made later dup-graph
-    queries' sf0.1 numerators shrink to their marginal work while the
-    first query absorbed the derivation — ratios mixed memoization
-    effects with scaling and stopped being comparable round-over-round.
-    A fresh session per query pays its own full derivation at BOTH
-    scales, so the ratio is the query's complete dataflow scaling —
-    stable against any future memo additions."""
+    """One probe query in a FRESH session (VERDICT r8 #6). In one
+    shared session, state a query leaves behind can serve a later one:
+    the stream-fixture cache (streaming/events.py:cached_stream_fixture)
+    hands every streaming query after the first a prebuilt fixture
+    directory, and caches an operator leaves persisted are reused by
+    plan matching — so a later query's sf0.1 numerator shrinks to its
+    marginal work while the first absorbs the derivation. A fresh
+    session per query pays its own full derivation at BOTH scales, so
+    the ratio is the query's complete dataflow scaling."""
     import __spark_entry__ as e
     from sfcrimedatapipeline_spark.session import get_spark
 
