@@ -44,6 +44,24 @@ def fx(term: Column) -> Column:
     return F.floor(term * F.lit(FX_SCALE)).cast("decimal(38,0)")
 
 
+def fx_int64(terms, axis: int):
+    """numpy side: ``floor(terms · 2^40)`` as int64, for vectorized
+    passes that add the quantized terms in int64 along ``axis``. Raises
+    ``OverflowError`` when a term, or the sum of the terms along
+    ``axis``, could wrap int64 (checked in float64 against 2^62, a
+    factor-2 margin for its rounding), instead of returning values
+    whose sums wrap silently."""
+    import numpy as np
+
+    q = np.floor(terms * FX_SCALE)
+    if q.size and np.abs(q).sum(axis=axis).max() >= 2.0**62:
+        raise OverflowError(
+            "fixed-point sums would overflow int64: terms up to "
+            f"{np.abs(terms).max():.3g} are too large for the 2^40 scale"
+        )
+    return q.astype(np.int64)
+
+
 def fx_sum(term: Column) -> Column:
     """Exact, order-free aggregate of ``fx(term)`` — still DECIMAL(38,0)."""
     return F.sum(fx(term))

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import unpersist_when_released
+
 
 def _nulls_last(cols: list[str | Column]) -> list[Column]:
     return [F.asc_nulls_last(c) if isinstance(c, str) else c for c in cols]
@@ -107,6 +109,11 @@ def load_order_id(df: DataFrame, key_name: str = "id") -> DataFrame:
        map-side-combined aggregate, one row per partition) cumulated
        with a window over that dim-sized frame and broadcast back.
 
+    The tagged frame has three readers (the per-partition max, both
+    sides of the offsets self-join, the id projection), so it is
+    persisted: the input is scanned once, and the cache is released
+    with the returned frame.
+
     Determinism is defined only for order-stable inputs (single-file
     reads); parquet multi-file scans order splits by size, so callers
     needing reproducible ids should pass an explicit sort or use
@@ -117,13 +124,14 @@ def load_order_id(df: DataFrame, key_name: str = "id") -> DataFrame:
         F.spark_partition_id().alias("__pid"),
         F.monotonically_increasing_id().bitwiseAND(F.lit(low_mask)).alias("__local"),
         *df.columns,
-    )
+    ).persist()
     counts = with_local.groupBy("__pid").agg((F.max("__local") + 1).alias("__n"))
     offsets = partition_offsets(counts)
-    return with_local.join(F.broadcast(offsets), "__pid").select(
+    out = with_local.join(F.broadcast(offsets), "__pid").select(
         (F.col("__local") + F.col("__offset") + 1).cast("long").alias(key_name),
         *df.columns,
     )
+    return unpersist_when_released(out, with_local)
 
 
 def running_total(

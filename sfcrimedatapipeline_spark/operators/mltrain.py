@@ -358,11 +358,14 @@ def spherical_kmeans_det(
     Scale shape (OPTIMIZATION r13, guide §4.2): per iteration ONE
     shuffle-free Arrow pass — assignment + per-(cid, dim) fx partial
     sums run vectorized in numpy, each task emits k rows of exact
-    integer partials (as strings: Python ints are unbounded, so the
-    partial can never overflow at any corpus size), and the driver
-    reduces them exactly. The r12 Catalyst form (per-row interpreted
-    decimal HOF fold + posexplode + (cid, dim) shuffle + collect per
-    iteration) measured 2.03 s for 3 iterations at sf0.1 vs 1.19 s for
+    integer partials (as strings, in unbounded Python ints), and the
+    driver reduces them exactly. Within one Arrow batch the fixed-point
+    sums are int64, so they hold values below 2^62 / 2^40 ≈ 4.2e6: a
+    batch with a squared norm, or a column sum over its rows, that large
+    raises ``OverflowError`` instead of training on wrapped values
+    (:func:`~sfcrimedatapipeline_spark.functions.fixedpoint.fx_int64`).
+    The r12 Catalyst form (per-row interpreted decimal HOF fold +
+    posexplode + (cid, dim) shuffle + collect per iteration) measured 2.03 s for 3 iterations at sf0.1 vs 1.19 s for
     this pass — and the remaining cost is the per-iteration job floor,
     not data.
 
@@ -375,7 +378,7 @@ def spherical_kmeans_det(
     divide by 1.0 (the numpy trainer's vn[vn==0]=1 rule)."""
     import math
 
-    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE
+    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE, fx_int64
 
     seeds = (
         emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
@@ -411,14 +414,15 @@ def spherical_kmeans_det(
                 V = np.asarray(flat, dtype=np.float64).reshape(-1, dims)
                 # fx norm: floor each val² term, integer-add in element
                 # order (exact ⇒ order-free), one sqrt of the double
-                nt = np.floor(V * V * FX_SCALE).astype(np.int64)
+                nt = fx_int64(V * V, axis=1)
                 acc = nt[:, 0].copy()
                 for d in range(1, dims):
                     acc = acc + nt[:, d]
                 nv = np.sqrt(acc.astype(np.float64) / FX_SCALE)
                 nv[nv == 0.0] = 1.0
                 VH = V / nv[:, None]
-                # fx dot per centroid; argmax ties → lowest cid
+                # fx dot per centroid; argmax ties → lowest cid. Both
+                # sides are unit vectors, so no term exceeds 2^40
                 dt = np.floor(
                     VH[:, :, None] * C.T[None, :, :] * FX_SCALE
                 ).astype(np.int64)
@@ -426,7 +430,7 @@ def spherical_kmeans_det(
                 for d in range(1, dims):
                     dacc = dacc + dt[:, d, :]
                 assign = np.argmax(dacc, axis=1)
-                VF = np.floor(V * FX_SCALE).astype(np.int64)
+                VF = fx_int64(V, axis=0)
                 for j in range(kk):
                     msk = assign == j
                     nm = int(msk.sum())
@@ -495,11 +499,13 @@ def pq_kmeans_det(
     Scale shape (OPTIMIZATION r13, guide §4.2): per iteration ONE
     shuffle-free Arrow pass — per-subspace assignment + per-(cid, dim)
     fx partial sums run vectorized in numpy, each task emits n_codes
-    rows of exact integer partials (strings: Python ints can never
-    overflow), and the driver reduces them exactly. The r12 shape
-    (posexplode to the (vec, dim) grain, broadcast-join the codebook
-    cells, (vec, s, cid) distance shuffle, per-(vec, s) row_number
-    window, join back, (cid, dim) mean shuffle — 4 shuffles + a sort
+    rows of exact integer partials (strings, in unbounded Python ints),
+    and the driver reduces them exactly. Within one Arrow batch the
+    sums are int64, guarded as in :func:`spherical_kmeans_det` (here
+    the bound is on subspace squared distances and column sums).
+    The r12 shape (posexplode to the (vec, dim) grain, broadcast-join
+    the codebook cells, (vec, s, cid) distance shuffle, per-(vec, s)
+    row_number window, join back, (cid, dim) mean shuffle — 4 shuffles + a sort
     per iteration) measured 3.55 s for 3 iterations at sf0.1 vs 1.41 s
     for this pass; its three previously-measured alternatives (py4j
     Column HOF, flat SQL both decimal and bigint) all lose to the
@@ -511,7 +517,7 @@ def pq_kmeans_det(
     ⇒ order-free, ``np.argmin`` takes the first minimum = lowest cid
     (the old (dist_fx ASC, cid ASC) row_number rule), and the mean is
     the same two exact divisions over exact operands."""
-    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE
+    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE, fx_int64
 
     sub = dims // m
     seeds = (
@@ -542,13 +548,11 @@ def pq_kmeans_det(
                     zero_copy_only=False
                 )
                 V = np.asarray(flat, dtype=np.float64).reshape(-1, dims)
-                VF = np.floor(V * FX_SCALE).astype(np.int64)
+                VF = fx_int64(V, axis=0)
                 for s in range(mm):
                     Vs = V[:, s * sub : (s + 1) * sub]
                     Cs = C[:, s * sub : (s + 1) * sub]
-                    term = np.floor(
-                        (Vs[:, None, :] - Cs[None, :, :]) ** 2 * FX_SCALE
-                    ).astype(np.int64)
+                    term = fx_int64((Vs[:, None, :] - Cs[None, :, :]) ** 2, axis=2)
                     acc = term[:, :, 0]
                     for d in range(1, sub):
                         acc = acc + term[:, :, d]

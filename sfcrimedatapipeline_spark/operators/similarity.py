@@ -527,7 +527,13 @@ def _pq_assign_arrow(
 
     Vectors must carry at least ``m·sub`` elements (every caller here
     passes fixed-dim embeddings; a ragged batch fails loudly in the
-    reshape instead of silently null-padding like ``slice`` did)."""
+    reshape instead of silently null-padding like ``slice`` did).
+
+    Vectors must not contain NaN. A NaN element makes its distances
+    NaN, and the two forms then disagree: ``np.argmin`` returns the
+    first NaN's index, while Spark's struct min (and the DuckDB
+    oracle's list min) orders NaN above every number and picks the
+    nearest finite centroid. Nothing here checks for NaN."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
     dim = m * sub

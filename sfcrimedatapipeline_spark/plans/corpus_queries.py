@@ -17,7 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sfcrimedatapipeline_spark.functions.caching import unpersist_when_released
+from sfcrimedatapipeline_spark.functions.caching import (
+    exit_temp_dir,
+    unpersist_when_released,
+)
 from sfcrimedatapipeline_spark.functions.hashing import sql_hash64
 from sfcrimedatapipeline_spark.functions.text import (
     SQL_NORMALIZED,
@@ -321,8 +324,6 @@ def docs_accrete_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint state and appends only new fingerprints. The emitted
     set equals batch dedup_exact's keepers, so the whole cross-batch
     loop sits under the value-hash oracle."""
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -345,7 +346,7 @@ def docs_accrete_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("n_chars", LongType()),
         ]
     )
-    state_dir = tempfile.mkdtemp(prefix="sfcdp_accrete_")
+    state_dir = exit_temp_dir("sfcdp_accrete_")
     return run_corpus_accretion_stream(spark, stream_dir, state_dir, schema)
 
 

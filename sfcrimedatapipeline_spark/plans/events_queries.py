@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import exit_temp_dir
 from sfcrimedatapipeline_spark.operators import sessionize as sz
 from sfcrimedatapipeline_spark.sources.tables import read_table
 from sfcrimedatapipeline_spark.streaming.events import hourly_event_counts
@@ -290,8 +291,6 @@ def events_incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     stream foreachBatch-merged into a persistent per-type aggregate
     state, final state gated against the oracle's full recompute
     (streaming/events.py:run_incremental_agg_stream)."""
-    import tempfile
-
     from sfcrimedatapipeline_spark.streaming.events import (
         cached_stream_fixture,
         run_incremental_agg_stream,
@@ -301,7 +300,7 @@ def events_incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     state = run_incremental_agg_stream(
         spark,
         stream_dir,
-        tempfile.mkdtemp(prefix="sfcdp_incr_agg_state_"),
+        exit_temp_dir("sfcdp_incr_agg_state_"),
         keys=["event_type"],
     )
     return state.select(
@@ -363,14 +362,12 @@ def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema (FAILFAST), then aggregated; the oracle computes the same
     aggregate straight from the parquet, so any corruption in the
     round trip (double precision, escaping, nulls) breaks the hash."""
-    import tempfile
-
     from sfcrimedatapipeline_spark.sources.jsonl import read_jsonl, write_jsonl
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.col("value").cast("double").alias("value")
     )
-    path = tempfile.mkdtemp(prefix="sfcdp_jsonl_")
+    path = exit_temp_dir("sfcdp_jsonl_")
     write_jsonl(ev, path)
     back = read_jsonl(
         spark, path, "event_id long, user_id long, event_type string, value double"
@@ -388,12 +385,10 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate (Spark's second first-class columnar format) — same contract
     as src_jsonl_roundtrip but bucketed by user to exercise integer
     modulo through the round trip as well."""
-    import tempfile
-
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.col("value").cast("double").alias("value")
     )
-    path = tempfile.mkdtemp(prefix="sfcdp_orc_")
+    path = exit_temp_dir("sfcdp_orc_")
     ev.write.mode("overwrite").orc(path)
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, value double"

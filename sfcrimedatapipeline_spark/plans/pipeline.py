@@ -37,42 +37,40 @@ def transform(
 ) -> dict[str, DataFrame]:
     """The 7-statement transform graph (dags/ELT.py:113-301) as dataflow.
 
-    The staging frame feeds the fact build AND three dim DISTINCTs, and
-    the generated dims are each joined more than once (DimTime twice in
-    the fact build alone) — persist them so one evaluation serves the
-    whole graph. This mirrors the reference, which materializes every
-    one of these as a Postgres table before joining; Spark's cache is
-    the in-memory equivalent and CacheManager transparently reuses the
-    entries across the downstream serve query too.
+    The reference materializes every dim and the fact as a Postgres
+    table before the next statement reads it; here every table of the
+    graph is persisted instead, so each is computed once. The staging
+    frame feeds the fact build and three dim DISTINCTs, the generated
+    dims are joined more than once (DimTime twice in the fact build
+    alone), and every returned table is read again by the serve query,
+    the serve export and the table writes. CacheManager substitutes the
+    caches into those plans.
+
+    The caches live as long as the returned ``FactCrime`` frame: it is
+    a projection over the cached fact (a finalizer holding the cached
+    frame itself would keep it alive forever), and dropping it releases
+    all of them. Dicts are not weakref-able, and every caller keeps the
+    fact at least as long as the dims, so a long-lived app running many
+    pipelines does not accumulate per-run caches.
     """
     from sfcrimedatapipeline_spark.functions.caching import (
         unpersist_when_released,
     )
 
     staging_with_id = staging_with_id.persist()
-    dim_date = dim_date.persist()
-    dim_time = dim_time.persist()
     dims = {
-        "DimDate": dim_date,
-        "DimTime": dim_time,
-        "DimLocation": build_dim_location(staging_with_id),
-        "DimIncident": build_dim_incident(staging_with_id),
-        "DimReportType": build_dim_report_type(staging_with_id),
+        "DimDate": dim_date.persist(),
+        "DimTime": dim_time.persist(),
+        "DimLocation": build_dim_location(staging_with_id).persist(),
+        "DimIncident": build_dim_incident(staging_with_id).persist(),
+        "DimReportType": build_dim_report_type(staging_with_id).persist(),
     }
-    fact = build_fact_crime(
-        staging_with_id,
-        dims["DimDate"],
-        dims["DimTime"],
-        dims["DimLocation"],
-        dims["DimIncident"],
-        dims["DimReportType"],
-        fix_report_time_id=fix_report_time_id,
+    inner = build_fact_crime(
+        staging_with_id, *dims.values(), fix_report_time_id=fix_report_time_id
+    ).persist()
+    fact = unpersist_when_released(
+        inner.select("*"), staging_with_id, *dims.values(), inner
     )
-    # Release the per-run caches when the caller drops the fact frame
-    # (dicts are not weakref-able; every caller keeps the fact at least
-    # as long as the dims) — a long-lived app running many pipelines
-    # must not accumulate per-run cached staging/dim frames (ADVICE r4).
-    fact = unpersist_when_released(fact, staging_with_id, dim_date, dim_time)
     return {**dims, "FactCrime": fact}
 
 

@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
+from sfcrimedatapipeline_spark.functions.caching import exit_temp_dir, truncate_lineage
 from sfcrimedatapipeline_spark.operators.keys import dense_ids
 from sfcrimedatapipeline_spark.sources.tables import read_table
 
@@ -970,14 +970,12 @@ def j10_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_quality.py) — the write-once/join-many strategy for
     a fact table joined on the same key every day. Result set is
     oracle-checked against the plain join."""
-    import tempfile
-
     from sfcrimedatapipeline_spark.operators.joins import (
         bucketed_colocated_join,
         write_bucketed,
     )
 
-    base = tempfile.mkdtemp(prefix="sfcdp_bucketed_")
+    base = exit_temp_dir("sfcdp_bucketed_")
     write_bucketed(
         read_table(spark, sf_dir, "orders"), "b_orders", f"{base}/orders", "o_custkey"
     )
@@ -1605,13 +1603,12 @@ def s14_catalog_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     longer depends on it): a fixed name raced concurrent sessions
     sharing a metastore, and each re-run's DROP of the external table
     orphaned the previous run's parquet directory (ADVICE r4)."""
-    import tempfile
     import uuid
 
     from sfcrimedatapipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
-    loc = tempfile.mkdtemp(prefix="sfcdp_catalog_")
+    loc = exit_temp_dir("sfcdp_catalog_")
     tbl = f"ev_type_stats_{uuid.uuid4().hex[:12]}"
     spark.sql(
         f"""

@@ -170,12 +170,13 @@ def test_repeat_call_runs_the_same_jobs(spark, tmp_path, name):
 
 def test_reap_removes_index_and_fixture_dirs(spark, tmp_path, monkeypatch):
     """The on-disk intermediates a query reads lazily — the bm25 and
-    IVF-PQ delta indexes, the stream fixture — are exit-reaped temp
-    dirs: each call registers its dir, and reap_temp_dirs (the atexit
-    hook) removes every one of them."""
+    IVF-PQ delta indexes, the stream fixture, a round-trip sink — are
+    exit-reaped temp dirs: each call registers its dir, and
+    reap_temp_dirs (the atexit hook) removes every one of them."""
     import shutil
 
     from sfcrimedatapipeline_spark.functions import caching
+    from sfcrimedatapipeline_spark.plans.events_queries import src_jsonl_roundtrip
     from sfcrimedatapipeline_spark.plans.llmops import ann_ivfpq_index_delta
     from sfcrimedatapipeline_spark.plans.llmops_ext import docs_bm25_index_search
     from sfcrimedatapipeline_spark.streaming.events import cached_stream_fixture
@@ -187,9 +188,11 @@ def test_reap_removes_index_and_fixture_dirs(spark, tmp_path, monkeypatch):
     assert docs_bm25_index_search(spark, sf).count() > 0
     assert ann_ivfpq_index_delta(spark, sf).count() > 0
     fixture = cached_stream_fixture(spark, sf)
+    assert src_jsonl_roundtrip(spark, sf).count() > 0
     dirs = set(caching._EXIT_DIRS)
     prefixes = sorted(os.path.basename(d).split("_")[0] for d in dirs)
-    assert prefixes == ["bm25idx", "ivfpq", "sfcdp"], dirs
+    assert prefixes == ["bm25idx", "ivfpq", "sfcdp", "sfcdp"], dirs
+    assert any(os.path.basename(d).startswith("sfcdp_jsonl_") for d in dirs)
     assert fixture in dirs and all(os.path.isdir(d) for d in dirs)
     caching.reap_temp_dirs()
     assert not any(os.path.exists(d) for d in dirs)

@@ -1761,3 +1761,33 @@ def test_has_blocked_word_exact_token_match(spark):
         ).collect()
     }
     assert out == {1: True, 2: False, 3: True}  # tokens() lowercases
+
+
+# ----------------------------------- the driver-facing id serialization
+def test_ids_to_str_parity_with_sql_twin(spark):
+    """ids_to_str (Spark) and sql_ids_to_str (DuckDB) must agree on
+    the payload cases: normal ids, empty array, NULL array."""
+    import duckdb
+
+    from sfcrimedatapipeline_spark.functions.text import (
+        ids_to_str,
+        sql_ids_to_str,
+    )
+
+    sdf = spark.createDataFrame(
+        [(1, [10, 2, 20000001]), (2, []), (3, None)],
+        "k long, ids array<long>",
+    )
+    got = {
+        r.k: r.s
+        for r in sdf.select("k", ids_to_str(F.col("ids")).alias("s")).collect()
+    }
+    con = duckdb.connect()
+    duck = con.sql(
+        "SELECT k, "
+        + sql_ids_to_str("ids")
+        + " AS s FROM (VALUES (1, [10, 2, 20000001]), (2, []), "
+        "(3, NULL)) t(k, ids)"
+    ).df()
+    want = dict(zip(duck["k"], duck["s"]))
+    assert got == want == {1: "10 2 20000001", 2: "", 3: ""}

@@ -760,3 +760,29 @@ def test_pq_kmeans_det_repeatable(spark):
     for sa, sb in zip(a, b):
         for ca_, cb_ in zip(sa, sb):
             assert ca_ == cb_
+
+
+@pytest.mark.parametrize("trainer", ["spherical", "pq"])
+def test_det_trainers_refuse_int64_wrap(spark, trainer):
+    """The trainers' in-batch fixed-point sums are int64: vectors large
+    enough to wrap them raise instead of training on wrapped values,
+    while large vectors that fit still train."""
+    from sfcrimedatapipeline_spark.operators.mltrain import (
+        pq_kmeans_det,
+        spherical_kmeans_det,
+    )
+
+    def train(scale):
+        rng = np.random.default_rng(7)
+        rows = [
+            (i, [float(x) for x in rng.standard_normal(64) * scale]) for i in range(40)
+        ]
+        sdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        if trainer == "spherical":
+            return spherical_kmeans_det(sdf, k=4, iters=1)
+        return pq_kmeans_det(sdf, m=8, n_codes=4, iters=1)
+
+    # k=4 centroids, or one codebook for each of the m=8 subspaces
+    assert len(train(10.0)) == {"spherical": 4, "pq": 8}[trainer]
+    with pytest.raises(Exception, match="overflow int64"):
+        train(1e4)

@@ -5,6 +5,11 @@ ReportTimeID."""
 
 from __future__ import annotations
 
+import gc
+import glob
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +23,7 @@ from sfcrimedatapipeline_spark.plans.dims import (
 )
 from sfcrimedatapipeline_spark.plans.fact import build_fact_crime
 from sfcrimedatapipeline_spark.plans.pipeline import run_pipeline
+from sfcrimedatapipeline_spark.sources.csv import SFPD_TIMESTAMP_FORMAT
 
 
 @pytest.fixture(scope="module")
@@ -139,3 +145,61 @@ def test_run_pipeline_observation_metrics(spark, staging):
     assert m["n_rows"] == n_fact == staging.count()
     assert 0 <= m["n_with_incident_date"] <= m["n_rows"]
     assert 0 <= m["n_null_latitude"] <= m["n_rows"]
+
+
+@pytest.fixture()
+def staging_file(staging, tmp_path) -> str:
+    """The staging fixture as one plain pipe-delimited feed file (no
+    Hadoop checksum file beside it, so reading it reads its size)."""
+    out = str(tmp_path / "staging_parts")
+    (
+        staging.coalesce(1)
+        .write.option("sep", "|")
+        .option("header", True)
+        .option("timestampFormat", SFPD_TIMESTAMP_FORMAT)
+        .csv(out)
+    )
+    (part,) = glob.glob(os.path.join(out, "part-*.csv"))
+    path = str(tmp_path / "staging.csv")
+    shutil.copyfile(part, path)
+    return path
+
+
+def _local_bytes_read(spark) -> int:
+    """Bytes the JVM has read through Hadoop's local file system so far
+    (in local mode the executors' scans run in the same JVM)."""
+    stats = spark._jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics()
+    return stats.get("file").getLong("bytesRead")
+
+
+def test_refresh_parses_the_staging_csv_once(spark, staging, staging_file, tmp_path):
+    """A refresh reads its feed through exactly one scan. Load-order ids
+    read the parsed feed three times and the star tables are read again
+    by the serve query, the export and every table write; all of them
+    read caches, so the bytes read from disk over the whole refresh are
+    the file's size."""
+    before = _local_bytes_read(spark)
+    tables = run_pipeline(
+        spark,
+        staging_file,
+        output_dir=str(tmp_path / "star"),
+        serve_export_dir=str(tmp_path / "serve"),
+    )
+    assert _local_bytes_read(spark) - before == os.path.getsize(staging_file)
+    assert tables["FactCrime"].count() == staging.count()
+
+
+def test_refresh_caches_are_released_with_its_tables(spark, staging_file, tmp_path):
+    """Every table a refresh returns is computed once from a cache, and
+    every cache it creates is released once the caller drops the tables:
+    the FactCrime frame carries the finalizer, so it must not be one of
+    the cached frames the finalizer holds. (The count may also fall
+    below the base: the generated dims are the same plans in every
+    refresh, so an earlier refresh's still-held entries are shared.)"""
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    tables = run_pipeline(spark, staging_file, output_dir=str(tmp_path / "star"))
+    assert all(tables[name].is_cached for name in tables if name.startswith("Dim"))
+    del tables
+    gc.collect()
+    assert jsc.getPersistentRDDs().size() <= base

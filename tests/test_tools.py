@@ -1,6 +1,7 @@
 """The repo's own tools and driver contract: the correctness-gate
 replica (tools/check_correctness.py), the bench regression diff
-(tools/bench_diff.py) and the query ordering of __spark_entry__.py."""
+(tools/bench_diff.py), and the query ordering and oracle output types
+of __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -11,6 +12,10 @@ import os
 import subprocess
 import sys
 import textwrap
+
+import numpy as np
+import pandas as pd
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -251,3 +256,134 @@ def test_gate_matches_memo_free_consumers():
     )
     assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-4000:]
     assert proc.stdout.rstrip().endswith("ALL MATCH"), proc.stdout[-4000:]
+
+
+# ------------------------------------------- VERDICT r10 #2: replica gate
+def test_replica_rejects_list_cells():
+    """The driver's canonicalizer sorts result frames with pandas
+    sort_values, which cannot hash list cells — the replica must FAIL
+    such a frame (round 10 it green-lit docs_span_corruption while the
+    driver crashed on it)."""
+    cc = _load_module("cc_r11", "tools/check_correctness.py")
+    bad = pd.DataFrame({"doc_id": [1, 2], "ids": [[1, 2], [3]]})
+    with pytest.raises(TypeError, match="driver-unsortable"):
+        cc.frame_sig(bad)
+
+
+def test_replica_rejects_ndarray_cells():
+    """DuckDB's pandas bridge yields np.ndarray cells for LIST columns
+    — same driver-crash class, same rejection."""
+    cc = _load_module("cc_r11", "tools/check_correctness.py")
+    bad = pd.DataFrame({"k": [1], "v": [np.array([1, 2])]})
+    with pytest.raises(TypeError, match="driver-unsortable"):
+        cc.frame_sig(bad)
+
+
+def test_replica_accepts_scalar_frames():
+    cc = _load_module("cc_r11", "tools/check_correctness.py")
+    ok = pd.DataFrame(
+        {"doc_id": [2, 1], "ids": ["1 2", "3"], "x": [1.5, None]}
+    )
+    h, cols, n = cc.frame_sig(ok)
+    assert n == 2 and len(cols) == 3 and len(h) == 16
+
+
+def test_no_complex_typed_oracle_outputs():
+    """One-off sweep the r10 judge ran by hand, now pinned: DESCRIBE
+    every registered oracle — no output column may be LIST/STRUCT/MAP
+    typed (the driver cannot sort them, so the Spark twin that must
+    match the oracle's schema couldn't be driver-green either)."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    sf = e.SMOKE_SF_DIR
+    for t in (
+        "region nation customer supplier part orders lineitem "
+        "events documents embeddings"
+    ).split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    offenders = []
+    for name, sql in e.oracle_sql().items():
+        desc = con.sql(f"DESCRIBE {sql}").df()
+        for col, typ in zip(desc["column_name"], desc["column_type"]):
+            if "[]" in typ or "STRUCT" in typ or "MAP(" in typ:
+                offenders.append(f"{name}.{col}: {typ}")
+    assert not offenders, f"complex-typed oracle outputs: {offenders}"
+
+
+# -------------------------------- VERDICT r10 #4: scheduling canaries
+def test_bench_diff_scheduling_shift_produces_zero_flags(tmp_path):
+    """A synthetic SCHEDULING-ONLY drift (multi-stage queries 2x,
+    pure scans flat — the BASELINE.md round-10 drift mode) must
+    produce zero REGRESSION flags WHEN the isolated record corroborates
+    it (ADVICE r11: the sched-factor excuse requires a second signal);
+    without an isolated record the flag must STAY; a genuine
+    single-query regression with flat canaries must still flag."""
+    bd = _load_module("bd_r11", "tools/bench_diff.py")
+    base = {c: 0.5 for c in bd.CANARIES}
+    base.update({c: 2.0 for c in bd.SCHED_CANARIES})
+    base.update({"multi_stage_q": 3.0, "scan_like_q": 0.8})
+    # scheduling drift: every multi-stage shape doubles, scans flat
+    shifted = dict(base)
+    for q in [*bd.SCHED_CANARIES, "multi_stage_q"]:
+        shifted[q] = base[q] * 2.0
+    old_p, new_p = tmp_path / "old.json", tmp_path / "new.json"
+    old_p.write_text(json.dumps({"queries": base}))
+    new_p.write_text(json.dumps({"queries": shifted}))
+    # isolated medians recorded in the CURRENT (drifted) environment
+    # read at the drifted level — the corroborating second signal
+    iso_p = tmp_path / "iso.json"
+    iso_p.write_text(json.dumps({
+        "mode": "isolate", "sf": 0.1,
+        "queries": {q: {"median": shifted[q], "samples": [shifted[q]],
+                        "reps": 1}
+                    for q in [*bd.SCHED_CANARIES, "multi_stage_q"]},
+    }))
+    env = {**os.environ, "SPARK_GRAFT_ISOLATED": str(iso_p)}
+    repo_root = bd.__file__.rsplit("/tools/", 1)[0]
+    r = subprocess.run(
+        [sys.executable, bd.__file__, str(old_p), str(new_p)],
+        capture_output=True, text=True, cwd=repo_root, env=env,
+    )
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert "REGRESSION" not in r.stdout
+    assert "sched-swing multi_stage_q" in r.stdout
+
+    # same drift, NO isolated record for the flagged query -> the
+    # sched-factor excuse is uncorroborated and the flag must stay
+    env_empty = {**os.environ, "SPARK_GRAFT_ISOLATED": str(tmp_path / "none.json")}
+    r_un = subprocess.run(
+        [sys.executable, bd.__file__, str(old_p), str(new_p)],
+        capture_output=True, text=True, cwd=repo_root, env=env_empty,
+    )
+    assert r_un.returncode == 1
+    assert "REGRESSION multi_stage_q" in r_un.stdout
+
+    # genuine regression, ALL canaries flat -> must still flag, even
+    # with the corroborating file present (iso band is exceeded)
+    genuine = dict(base)
+    genuine["multi_stage_q"] = 3.0 * 3.0
+    new_p.write_text(json.dumps({"queries": genuine}))
+    r2 = subprocess.run(
+        [sys.executable, bd.__file__, str(old_p), str(new_p)],
+        capture_output=True, text=True, cwd=repo_root, env=env,
+    )
+    assert r2.returncode == 1
+    assert "REGRESSION multi_stage_q" in r2.stdout
+
+
+def test_bench_diff_sched_canaries_are_memo_free_reference_queries():
+    """The scheduling canaries must be benched, non-deferred,
+    reference-surface queries (stable since the early rounds, no
+    memo riders)."""
+    import __spark_entry__ as e
+
+    bd = _load_module("bd_r11b", "tools/bench_diff.py")
+    bench = _load_module("bench_r11", "bench.py")
+    qs = e.queries()
+    assert len(bd.SCHED_CANARIES) >= 3
+    for c in bd.SCHED_CANARIES:
+        assert c in qs and c not in bench.BENCH_SKIP
+        assert c in e._REFERENCE_FIRST  # untouched early-round surface
