@@ -34,15 +34,6 @@ per-query variance spikes (round-1 bench recorded text_lang_id at
 10 s vs a 0.4-0.9 s steady state), and a median of 3 makes a single
 GC/compaction/noisy-neighbor event invisible instead of defining the
 recorded number.
-
-``--isolate`` mode (VERDICT r6 #3): run each named query in a FRESH
-SparkSession subprocess, 5 reps, median — removes per-round scheduling
-interference entirely so a "swing" reading can be attributed to the
-query itself rather than to whatever ran before it in the shared
-session. Usage::
-
-    python bench.py --isolate ann_pq_topk_trained text_bpe_merges
-    python bench.py --isolate-child <name>   # internal: one child run
 """
 
 from __future__ import annotations
@@ -50,7 +41,6 @@ from __future__ import annotations
 import json
 import os
 import statistics
-import subprocess
 import sys
 import time
 
@@ -180,67 +170,6 @@ def _run_one(spark, fn, reps: int, noop_sink: bool = False) -> float:
     return round(statistics.median(samples), 3)
 
 
-def _isolate_child(name: str) -> None:
-    """One query in this fresh interpreter: print its median and exit."""
-    import __spark_entry__ as e
-    from sfcrimedatapipeline_spark.session import get_spark
-
-    spark = get_spark(app_name=f"bench-iso-{name}")
-    spark.sparkContext.setLogLevel("ERROR")
-    fn = e.queries()[name]
-    sec = _run_one(spark, fn, reps=1, noop_sink=name in BENCH_NOOP_SINK)
-    print(json.dumps({"query": name, "sec": sec}))
-
-
-def _isolate(names: list[str], reps: int = 5) -> None:
-    """VERDICT r6 #3: fresh-session-per-rep timing for the swing class.
-    Each rep is a separate subprocess (cold JVM scheduling state, warm
-    OS page cache — the parquet bytes stay resident, which is the
-    steady-state a real cluster sees); median of ``reps``.
-
-    Results also MERGE into BENCH_ISOLATED.json at the repo root
-    (VERDICT r7 #3): that artifact is the adjudication record for the
-    scheduling-swing class — tools/bench_diff.py reads it and
-    reclassifies a shared-session "regression" whose new reading sits
-    inside the query's isolated steady state as a SWING, so 1.5x
-    session-interference deltas stop consuming verdict cycles."""
-    out = {}
-    for name in names:
-        samples = []
-        for _ in range(reps):
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--isolate-child", name],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-            )
-            line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
-            try:
-                samples.append(json.loads(line)["sec"])
-            except (json.JSONDecodeError, KeyError):
-                sys.stderr.write(proc.stderr[-2000:] + "\n")
-                raise SystemExit(f"isolate child failed for {name}")
-        out[name] = {
-            "median": round(statistics.median(samples), 3),
-            "samples": samples,
-            "reps": reps,
-        }
-        sys.stderr.write(f"ISOLATED {name}: {out[name]['median']}s {samples}\n")
-    payload = {"mode": "isolate", "sf": _sf_from_dir(SF_DIR), "queries": out}
-    artifact = os.path.join(REPO, "BENCH_ISOLATED.json")
-    if os.path.exists(artifact):
-        try:
-            with open(artifact) as fh:
-                prior = json.load(fh)
-            if prior.get("sf") == payload["sf"]:
-                payload["queries"] = {**prior.get("queries", {}), **out}
-        except (json.JSONDecodeError, OSError):
-            pass
-    with open(artifact, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-    print(json.dumps(payload))
-
-
 def main() -> None:
     import __spark_entry__ as e
     from sfcrimedatapipeline_spark.session import get_spark
@@ -313,9 +242,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--isolate-child":
-        _isolate_child(sys.argv[2])
-    elif len(sys.argv) > 1 and sys.argv[1] == "--isolate":
-        _isolate(sys.argv[2:])
-    else:
-        main()
+    main()

@@ -147,7 +147,6 @@ def _cc_two_phase(
         raw.select(F.col("a").alias("id"))
         .union(raw.select(F.col("b").alias("id")))
         .distinct()
-        .persist()
     )
     fwd = raw.filter(F.col("a") != F.col("b")).persist()
     # canonical undirected representation: (hi, lo) with hi > lo
@@ -208,7 +207,6 @@ def _cc_two_phase(
     ).select(F.col("id").alias("doc_id"), F.col("id").alias("canonical_id"))
     out = parents.union(roots)
     fwd.unpersist(blocking=False)
-    all_nodes.unpersist(blocking=False)
     return out
 
 

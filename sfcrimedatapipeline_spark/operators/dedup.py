@@ -1177,8 +1177,9 @@ def semantic_dedup(
     ``n_clusters`` lowest-id vectors and assignment is squared-L2
     struct-min (ties → lowest centroid id) — the same fixed-index
     contract as :func:`similarity.ivfpq_topk`, so the whole composition
-    is hash-gated; swap in :func:`similarity.train_ivf_centroids` for
-    trained clusters (rows-only). Pair verification is the exact
+    is hash-gated. Trained squared-L2 centroids come from
+    ``mltrain.pq_kmeans_det(emb, 1, n_clusters, iters)[0]``, which is
+    deterministic too. Pair verification is the exact
     6-dp-rounded cosine; groups close transitively via
     :func:`corpus.connected_components` over the tiny pair set.
 

@@ -30,11 +30,12 @@ whole-stage-codegen pass.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sfcrimedatapipeline_spark.functions.detmath import exp_det_py, with_exp_det
-from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE, sql_fx
+from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE, fx_int64, sql_fx
 
 
 def logreg_train(
@@ -120,136 +121,6 @@ def logreg_train_py(
 
 
 # ---------------------------------------------------------------------------
-# deterministic k-means (Lloyd's) — the gated IVF-quantizer trainer
-# ---------------------------------------------------------------------------
-
-
-def kmeans_train(
-    emb: DataFrame,
-    k: int,
-    iters: int,
-) -> list[tuple]:
-    """Full-batch Lloyd's k-means over an ``(vec_id, embedding)`` frame,
-    deterministic to the bit: init is the k smallest vec_ids' vectors;
-    per-point distances are Q40 fixed-point sums at the (vec, cluster)
-    grain (so the argmin is an exact-integer comparison, tie-broken on
-    cluster id); new centroids are fixed-point means. Returns final
-    centroid rows ``[(cluster, n_members, dim, centroid), ...]`` —
-    k·dims rows — exactly reproducible by the DuckDB unrolled-CTE
-    oracle and any partitioning.
-
-    Scale (100 TB): per iteration, ONE pass over the vector frame —
-    the k·dims centroids ride the plan as array literals, each row's
-    argmin is a per-row fixed-point fold (the ``pq_encode`` search-time
-    shape), and the only shuffle is the map-side-combined
-    (cluster, dim) mean aggregate. (OPTIMIZATION r12, guide §2.3/§2.4:
-    the previous shape exploded the points, broadcast-joined the
-    centroid cells, re-aggregated the (vec, cluster) distance grain and
-    sorted a per-vector window — 3 exchanges + a sort per iteration,
-    all carrying a |points|×k intermediate; the per-row fold produces
-    bit-identical fx integers with zero pair-grain shuffle.) Centroids
-    collect to the driver between iterations (k·dims values — the
-    BPE/IVF trainer precedent); empty clusters keep their previous
-    centroid (COALESCE, mirrored in the oracle)."""
-    from sfcrimedatapipeline_spark.functions.fixedpoint import (
-        FX_SCALE,
-        fx,
-        sql_fx,
-    )
-
-    vecs = emb.select("vec_id", "embedding").cache()
-    # deterministic init: the k smallest vec_ids, cluster = their rank
-    init_ids = [
-        r["vec_id"]
-        for r in vecs.select("vec_id").orderBy("vec_id").limit(k).collect()
-    ]
-    rank = {vid: c for c, vid in enumerate(init_ids)}
-    init_rows = (
-        vecs.filter(F.col("vec_id").isin(init_ids))
-        .select("vec_id", F.posexplode("embedding").alias("pos", "val_f"))
-        .select(
-            "vec_id",
-            (F.col("pos") + F.lit(1)).alias("dim"),
-            F.col("val_f").cast("double").alias("val"),
-        )
-        .collect()
-    )
-    cent: list[tuple] = sorted(
-        (rank[r["vec_id"]], 0, r["dim"], r["val"]) for r in init_rows
-    )
-    dec0 = F.lit(0).cast("decimal(38,0)")
-    for _ in range(iters):
-        cvec: dict[int, list[float]] = {}
-        for c, _n, _d, v in sorted(cent, key=lambda t: (t[0], t[2])):
-            cvec.setdefault(c, []).append(v)
-        # per-row argmin over exact fx distance integers: floor each
-        # (val-cval)^2 term like the old grouped sum, integer-add in
-        # element order (order-free), tie -> lowest cluster id. Kept as
-        # a HOF fold over ONE nested-array literal (k is small):
-        # unrolling all k*dims terms into flat SQL was tried and blows
-        # whole-stage codegen's 64 KB method limit (Janino fallback —
-        # the exact r11 failure class), costing more than it saves.
-        cent_lit = F.lit([cvec[c] for c in sorted(cvec)])
-        dist_structs = F.transform(
-            F.sequence(F.lit(1), F.lit(len(cvec))),
-            lambda j: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("embedding"),
-                        F.element_at(cent_lit, j),
-                        lambda x, y: fx(
-                            (x.cast("double") - y) * (x.cast("double") - y)
-                        ),
-                    ),
-                    dec0,
-                    lambda acc, t: acc + t,
-                ).alias("d"),
-                (j - 1).cast("bigint").alias("cluster"),
-            ),
-        )
-        # argmin in its OWN select: struct-field extraction and a
-        # generator in one projection trips analysis (field names
-        # degrade to col1/col2); the two projections collapse anyway
-        means = (
-            vecs.select(
-                F.array_min(dist_structs)["cluster"].alias("cluster"),
-                "embedding",
-            )
-            .select(
-                "cluster",
-                F.posexplode("embedding").alias("pos", "val_f"),
-            )
-            .select(
-                "cluster",
-                (F.col("pos") + F.lit(1)).alias("dim"),
-                F.col("val_f").cast("double").alias("val"),
-            )
-            .groupBy("cluster", "dim")
-            .agg(
-                F.sum(F.expr(sql_fx("val"))).alias("s_fx"),
-                F.count("*").cast("long").alias("n"),
-            )
-            .collect()
-        )
-        got = {
-            (r["cluster"], r["dim"]): (
-                (float(r["s_fx"]) / FX_SCALE) / r["n"],
-                r["n"],
-            )
-            for r in means
-        }
-        # empty clusters keep the previous centroid (n = 0)
-        cent = [
-            (c, got[(c, d)][1], d, got[(c, d)][0])
-            if (c, d) in got
-            else (c, 0, d, v)
-            for (c, _, d, v) in cent
-        ]
-    vecs.unpersist()
-    return cent
-
-
-# ---------------------------------------------------------------------------
 # deterministic power iteration — the gated PCA/top-eigenvector trainer
 # ---------------------------------------------------------------------------
 
@@ -332,8 +203,147 @@ def power_iteration(
 
 
 # ---------------------------------------------------------------------------
-# deterministic spherical k-means — the gated trained-IVF quantizer
+# deterministic k-means — one Lloyd loop behind the three gated trainers
 # ---------------------------------------------------------------------------
+
+
+def _l2_codes(V, C):
+    """Squared-L2 assignment per subspace: ``(n, m)`` codes of the rows
+    of ``V`` against the codebooks ``C`` (m, k, sub). Each term is
+    ``floor((v − c)² · 2^40)`` of the same float64 ops as the SQL
+    oracle, so the per-code sums are exact integers and the argmin is an
+    integer compare whose ties go to the lowest id (``np.argmin``'s
+    first minimum, the oracle's struct-min rule)."""
+    m, _, sub = C.shape
+    return np.stack(
+        [
+            np.argmin(
+                fx_int64(
+                    (V[:, None, s * sub : (s + 1) * sub] - C[s][None]) ** 2,
+                    axis=2,
+                ).sum(axis=2),
+                axis=1,
+            )
+            for s in range(m)
+        ],
+        axis=1,
+    )
+
+
+def _cos_codes(V, C):
+    """Cosine assignment (m = 1): ``(n, 1)`` codes. Vector and centroid
+    norms are the square root of the exact integer sum of
+    ``floor(x² · 2^40)`` terms (a zero norm divides by 1.0); the dot of
+    the two unit vectors is the same exact sum, and ``np.argmax``'s
+    first maximum sends ties to the lowest id."""
+
+    def unit(X):
+        n = np.sqrt(fx_int64(X * X, axis=1).sum(axis=1).astype(np.float64) / FX_SCALE)
+        n[n == 0.0] = 1.0
+        return X / n[:, None]
+
+    dots = fx_int64(unit(V)[:, :, None] * unit(C[0]).T[None], axis=1).sum(axis=1)
+    return np.argmax(dots, axis=1)[:, None]
+
+
+def _lloyd_fx(emb: DataFrame, k: int, iters: int, m: int, assign):
+    """Lloyd's k-means over an ``(vec_id, embedding)`` frame, run on
+    each of ``m`` contiguous subspaces at once and deterministic to the
+    bit: the result is the same for any partitioning, batch size or
+    engine that follows the same arithmetic.
+
+    Seeds are the ``k`` lowest-``vec_id`` embeddings. Each iteration is
+    ONE shuffle-free ``mapInArrow`` pass: every task assigns its rows
+    with ``assign(V, C) -> (n, m)`` codes and emits the exact
+    per-(code, dim) sums of ``floor(v · 2^40)`` (Python ints, as
+    strings) and the per-(code, subspace) counts; the driver adds them
+    exactly and divides. An empty (code, subspace) keeps its previous
+    centroid.
+
+    Within one Arrow batch the fixed-point sums are int64:
+    :func:`~sfcrimedatapipeline_spark.functions.fixedpoint.fx_int64`
+    raises ``OverflowError`` where one could wrap instead of training
+    on wrapped values. Vectors must not contain NaN (see
+    :func:`~sfcrimedatapipeline_spark.operators.similarity._pq_assign_arrow`).
+
+    Returns ``(cent, counts)``: ``cent[s][c]`` is code ``c``'s centroid
+    in subspace ``s`` and ``counts[s][c]`` its members in the last
+    iteration (0 if it was empty, or when ``iters`` is 0)."""
+    seeds = np.array(
+        [
+            r["embedding"]
+            for r in emb.select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(k)
+            .collect()
+        ],
+        dtype=np.float64,
+    )
+    k, dims = seeds.shape
+    cent = seeds.reshape(k, m, dims // m).transpose(1, 0, 2)  # (m, k, sub)
+    counts = np.zeros((m, k), dtype=np.int64)
+    for _ in range(iters):
+
+        def partials(batches, C=cent):
+            import pyarrow as pa
+
+            fsum = [0] * C.size  # Python ints: exact across batches
+            cnt = np.zeros((m, k), dtype=np.int64)
+            for batch in batches:
+                flat = batch.column(0).flatten().to_numpy(zero_copy_only=False)
+                V = np.asarray(flat, dtype=np.float64).reshape(-1, dims)
+                codes = assign(V, C)
+                VF = fx_int64(V, axis=0).reshape(len(V), m, -1)
+                part = np.zeros(C.shape, dtype=np.int64)
+                for s in range(m):
+                    for c in range(k):
+                        hit = codes[:, s] == c
+                        part[s, c] = VF[hit, s].sum(axis=0)
+                        cnt[s, c] += hit.sum()
+                fsum = [a + b for a, b in zip(fsum, part.ravel().tolist())]
+            yield pa.record_batch(
+                [
+                    pa.array([[str(x) for x in fsum]], pa.list_(pa.string())),
+                    pa.array([cnt.ravel().tolist()], pa.list_(pa.int64())),
+                ],
+                names=["fsum", "cnt"],
+            )
+
+        rows = (
+            emb.select("embedding")
+            .mapInArrow(partials, "fsum array<string>, cnt array<long>")
+            .collect()
+        )
+        # Python ints: the reduce is exact, so task order cannot matter
+        tot = [sum(int(x) for x in col) for col in zip(*(r["fsum"] for r in rows))]
+        sums = np.array([float(t) for t in tot]).reshape(cent.shape)
+        counts = np.sum([r["cnt"] for r in rows], axis=0).reshape(m, k)
+        mean = (sums / FX_SCALE) / np.maximum(counts, 1)[:, :, None]
+        cent = np.where(counts[:, :, None] > 0, mean, cent)
+    return cent.tolist(), counts.tolist()
+
+
+def kmeans_train(
+    emb: DataFrame,
+    k: int,
+    iters: int,
+) -> list[tuple]:
+    """Full-batch Lloyd's k-means (squared-L2 assignment) over an
+    ``(vec_id, embedding)`` frame, deterministic to the bit (see
+    :func:`_lloyd_fx`). Returns the final centroid rows
+    ``[(cluster, n_members, dim, centroid), ...]`` — k·dims rows, dims
+    1-based — exactly reproducible by the DuckDB unrolled-CTE oracle.
+
+    Two preconditions the Catalyst oracle does not share: a batch whose
+    int64 fixed-point distance or column sums could wrap raises
+    ``OverflowError``, and vectors must not contain NaN (``np.argmin``
+    and Spark's struct min order NaN differently)."""
+    cent, counts = _lloyd_fx(emb, k, iters, 1, _l2_codes)
+    return [
+        (c, counts[0][c], d + 1, x)
+        for c, vec in enumerate(cent[0])
+        for d, x in enumerate(vec)
+    ]
 
 
 def spherical_kmeans_det(
@@ -341,141 +351,13 @@ def spherical_kmeans_det(
     k: int,
     iters: int,
 ) -> list[tuple[int, list[float]]]:
-    """Spherical k-means (cosine assignment, unnormalized means — the
-    train_ivf_centroids semantics) made bit-deterministic: vector and
-    centroid norms are fixed-point sums, assignments are argmax over
-    exact fixed-point dot integers (ties → lowest centroid id), and
-    means divide fixed-point sums — so the trained centroids are
-    identical across partitionings AND engines, which is what upgrades
-    ``ann_cosine_topk_ivf_trained`` from rows-only to value-hash gated
-    (its old rationale: "trained float centroids are not
-    engine-reproducible by design").
-
+    """Spherical k-means — cosine assignment, unnormalized means —
+    deterministic to the bit (see :func:`_lloyd_fx`), which is what lets
+    the oracle gate ``ann_cosine_topk_ivf_trained`` by value hash.
     Returns ``[(centroid_id, vector), ...]`` in the
     :func:`~sfcrimedatapipeline_spark.operators.similarity.cosine_topk_ivf`
-    input shape (centroid ids 0..k-1).
-
-    Scale shape (OPTIMIZATION r13, guide §4.2): per iteration ONE
-    shuffle-free Arrow pass — assignment + per-(cid, dim) fx partial
-    sums run vectorized in numpy, each task emits k rows of exact
-    integer partials (as strings, in unbounded Python ints), and the
-    driver reduces them exactly. Within one Arrow batch the fixed-point
-    sums are int64, so they hold values below 2^62 / 2^40 ≈ 4.2e6: a
-    batch with a squared norm, or a column sum over its rows, that large
-    raises ``OverflowError`` instead of training on wrapped values
-    (:func:`~sfcrimedatapipeline_spark.functions.fixedpoint.fx_int64`).
-    The r12 Catalyst form (per-row interpreted decimal HOF fold +
-    posexplode + (cid, dim) shuffle + collect per iteration) measured 2.03 s for 3 iterations at sf0.1 vs 1.19 s for
-    this pass — and the remaining cost is the per-iteration job floor,
-    not data.
-
-    Bit-identity with the r12 form (pinned by the parity tests and the
-    oracle gate on the trained-search query): every fx term is
-    ``floor(term · 2^40)`` of the same float64 IEEE op sequence, the
-    per-row integer sums are order-free by exactness, ``np.argmax``
-    takes the first maximum = lowest cid (the struct-min tie rule),
-    and the mean is the same two exact divisions. Zero-norm vectors
-    divide by 1.0 (the numpy trainer's vn[vn==0]=1 rule)."""
-    import math
-
-    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE, fx_int64
-
-    seeds = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
-    )
-    cent: list[list[float]] = [
-        [float(x) for x in r["embedding"]] for r in seeds
-    ]
-    dims = len(cent[0])
-    vecs = emb.select("embedding")
-    for _ in range(iters):
-        # centroid norms with the same fx discipline, driver-side
-        # (python ints are exact — mirrors the oracle's per-cid fx sum)
-        chn: list[list[float]] = []
-        for cv in cent:
-            nc = math.sqrt(
-                float(sum(math.floor((x * x) * FX_SCALE) for x in cv))
-                / FX_SCALE
-            )
-            div = 1.0 if nc == 0.0 else nc
-            chn.append([x / div for x in cv])
-
-        def partials(batches, chn=chn, kk=k, dims=dims):
-            import numpy as np
-            import pyarrow as pa
-
-            C = np.array(chn, dtype=np.float64)  # (k, dims)
-            sums = [[0] * dims for _ in range(kk)]  # python ints: exact
-            cnts = [0] * kk
-            for batch in batches:
-                flat = batch.column(0).flatten().to_numpy(
-                    zero_copy_only=False
-                )
-                V = np.asarray(flat, dtype=np.float64).reshape(-1, dims)
-                # fx norm: floor each val² term, integer-add in element
-                # order (exact ⇒ order-free), one sqrt of the double
-                nt = fx_int64(V * V, axis=1)
-                acc = nt[:, 0].copy()
-                for d in range(1, dims):
-                    acc = acc + nt[:, d]
-                nv = np.sqrt(acc.astype(np.float64) / FX_SCALE)
-                nv[nv == 0.0] = 1.0
-                VH = V / nv[:, None]
-                # fx dot per centroid; argmax ties → lowest cid. Both
-                # sides are unit vectors, so no term exceeds 2^40
-                dt = np.floor(
-                    VH[:, :, None] * C.T[None, :, :] * FX_SCALE
-                ).astype(np.int64)
-                dacc = dt[:, 0, :].copy()
-                for d in range(1, dims):
-                    dacc = dacc + dt[:, d, :]
-                assign = np.argmax(dacc, axis=1)
-                VF = fx_int64(V, axis=0)
-                for j in range(kk):
-                    msk = assign == j
-                    nm = int(msk.sum())
-                    if nm:
-                        cnts[j] += nm
-                        cs = VF[msk].sum(axis=0)
-                        for d in range(dims):
-                            sums[j][d] += int(cs[d])
-            yield pa.record_batch(
-                [
-                    pa.array(list(range(kk)), type=pa.int64()),
-                    pa.array(
-                        [[str(x) for x in sums[j]] for j in range(kk)],
-                        type=pa.list_(pa.string()),
-                    ),
-                    pa.array(cnts, type=pa.int64()),
-                ],
-                names=["cid", "fsum", "cnt"],
-            )
-
-        rows = vecs.mapInArrow(
-            partials, "cid long, fsum array<string>, cnt long"
-        ).collect()
-        tot: dict[tuple[int, int], int] = {}
-        tc = [0] * k
-        for r in rows:
-            tc[r["cid"]] += r["cnt"]
-            for d in range(dims):
-                key = (r["cid"], d)
-                tot[key] = tot.get(key, 0) + int(r["fsum"][d])
-        cent = [
-            [
-                (float(tot[(cid, d)]) / FX_SCALE) / float(tc[cid])
-                if tc[cid] > 0
-                else cent[cid][d]
-                for d in range(dims)
-            ]
-            for cid in range(k)
-        ]
-    return [(cid, cent[cid]) for cid in range(k)]
-
-
-# ---------------------------------------------------------------------------
-# deterministic per-subspace k-means — the gated trained-PQ codebooks
-# ---------------------------------------------------------------------------
+    input shape (centroid ids 0..k-1)."""
+    return list(enumerate(_lloyd_fx(emb, k, iters, 1, _cos_codes)[0][0]))
 
 
 def pq_kmeans_det(
@@ -483,126 +365,14 @@ def pq_kmeans_det(
     m: int,
     n_codes: int,
     iters: int,
-    dims: int = 64,
 ) -> list[list[list[float]]]:
-    """Per-subspace squared-L2 k-means (the train_pq_codebooks
-    semantics) made bit-deterministic: distances are fixed-point sums
-    within each subspace (argmin = exact integer compare, ties → lowest
-    code id), means are fixed-point sums over assigned members, empty
-    codes keep their previous centroid, seeds are the lowest-
-    ``n_codes`` vectors' subvectors. Returns ``codebooks[s][c]`` in the
-    :func:`~sfcrimedatapipeline_spark.operators.similarity.pq_topk`
-    input shape — identical across partitionings AND engines, which is
-    what upgrades ``ann_pq_topk_trained`` from rows-only to value-hash
-    gated. All ``m`` subspaces train in the SAME Arrow pass.
-
-    Scale shape (OPTIMIZATION r13, guide §4.2): per iteration ONE
-    shuffle-free Arrow pass — per-subspace assignment + per-(cid, dim)
-    fx partial sums run vectorized in numpy, each task emits n_codes
-    rows of exact integer partials (strings, in unbounded Python ints),
-    and the driver reduces them exactly. Within one Arrow batch the
-    sums are int64, guarded as in :func:`spherical_kmeans_det` (here
-    the bound is on subspace squared distances and column sums).
-    The r12 shape (posexplode to the (vec, dim) grain, broadcast-join
-    the codebook cells, (vec, s, cid) distance shuffle, per-(vec, s)
-    row_number window, join back, (cid, dim) mean shuffle — 4 shuffles + a sort
-    per iteration) measured 3.55 s for 3 iterations at sf0.1 vs 1.41 s
-    for this pass; its three previously-measured alternatives (py4j
-    Column HOF, flat SQL both decimal and bigint) all lose to the
-    64 KB codegen method limit and stay rejected.
-
-    Bit-identity with the r12 form (parity tests + the trained-search
-    oracle gate): every distance term is ``floor((val−cval)²·2^40)``
-    of the same float64 ops, per-(vec, s, cid) sums are exact integers
-    ⇒ order-free, ``np.argmin`` takes the first minimum = lowest cid
-    (the old (dist_fx ASC, cid ASC) row_number rule), and the mean is
-    the same two exact divisions over exact operands."""
-    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE, fx_int64
-
-    sub = dims // m
-    seeds = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_codes).collect()
-    )
-    # cb[(cid, dim1based)] = value — full-vector layout; the m×k×sub
-    # nesting is re-sliced only at return time
-    cb: dict[tuple[int, int], float] = {}
-    for cid, r in enumerate(seeds):
-        for d, x in enumerate(r["embedding"]):
-            cb[(cid, d + 1)] = float(x)
-    vecs = emb.select("embedding")
-    for _ in range(iters):
-        cbl = [
-            [cb[(cid, d + 1)] for d in range(dims)]
-            for cid in range(n_codes)
-        ]
-
-        def partials(batches, cbl=cbl, kk=n_codes, mm=m, sub=sub, dims=dims):
-            import numpy as np
-            import pyarrow as pa
-
-            C = np.array(cbl, dtype=np.float64)  # (k, dims)
-            sums = [[0] * dims for _ in range(kk)]  # python ints: exact
-            cnts = [[0] * mm for _ in range(kk)]
-            for batch in batches:
-                flat = batch.column(0).flatten().to_numpy(
-                    zero_copy_only=False
-                )
-                V = np.asarray(flat, dtype=np.float64).reshape(-1, dims)
-                VF = fx_int64(V, axis=0)
-                for s in range(mm):
-                    Vs = V[:, s * sub : (s + 1) * sub]
-                    Cs = C[:, s * sub : (s + 1) * sub]
-                    term = fx_int64((Vs[:, None, :] - Cs[None, :, :]) ** 2, axis=2)
-                    acc = term[:, :, 0]
-                    for d in range(1, sub):
-                        acc = acc + term[:, :, d]
-                    assign = np.argmin(acc, axis=1)
-                    for j in range(kk):
-                        msk = assign == j
-                        nm = int(msk.sum())
-                        if nm:
-                            cnts[j][s] += nm
-                            cs = VF[msk, s * sub : (s + 1) * sub].sum(axis=0)
-                            for d in range(sub):
-                                sums[j][s * sub + d] += int(cs[d])
-            yield pa.record_batch(
-                [
-                    pa.array(list(range(kk)), type=pa.int64()),
-                    pa.array(
-                        [[str(x) for x in sums[j]] for j in range(kk)],
-                        type=pa.list_(pa.string()),
-                    ),
-                    pa.array(
-                        [cnts[j] for j in range(kk)],
-                        type=pa.list_(pa.int64()),
-                    ),
-                ],
-                names=["cid", "fsum", "cnt"],
-            )
-
-        rows = vecs.mapInArrow(
-            partials, "cid long, fsum array<string>, cnt array<long>"
-        ).collect()
-        tot: dict[tuple[int, int], int] = {}
-        tc: dict[tuple[int, int], int] = {}
-        for r in rows:
-            for d in range(dims):
-                key = (r["cid"], d + 1)
-                tot[key] = tot.get(key, 0) + int(r["fsum"][d])
-            for s in range(m):
-                sk = (r["cid"], s)
-                tc[sk] = tc.get(sk, 0) + r["cnt"][s]
-        for (cid, d1), v in list(cb.items()):
-            c = tc.get((cid, (d1 - 1) // sub), 0)
-            if c > 0:
-                cb[(cid, d1)] = (float(tot[(cid, d1)]) / FX_SCALE) / float(c)
-    return [
-        [
-            [cb[(cid, s * sub + d + 1)] for d in range(sub)]
-            for cid in range(n_codes)
-        ]
-        for s in range(m)
-    ]
+    """Per-subspace squared-L2 k-means for PQ codebooks, all ``m``
+    subspaces in the same pass and deterministic to the bit (see
+    :func:`_lloyd_fx`), which is what lets the oracle gate
+    ``ann_pq_topk_trained`` by value hash. Returns ``codebooks[s][c]``
+    in the :func:`~sfcrimedatapipeline_spark.operators.similarity.pq_topk`
+    input shape."""
+    return _lloyd_fx(emb, n_codes, iters, m, _l2_codes)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -160,102 +160,6 @@ def cosine_topk_lsh(
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 8,
-    n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
-) -> list[tuple[int, list[float]]]:
-    """Spherical k-means trainer for the IVF index — the missing half of
-    :func:`cosine_topk_ivf` (VERDICT r4 "What's missing" #2), which
-    takes trained centroids as input.
-
-    Lloyd iterations with cosine assignment: seed with the
-    ``n_centroids`` lowest-id corpus vectors (the same deterministic
-    default the untrained path uses), then per iteration (a) assign
-    every vector to its max-cosine centroid (ties → lowest centroid
-    index, numpy argmax's first-max rule) and (b) recompute each
-    centroid as the mean of its assigned vectors. The mean is left
-    unnormalized — cosine assignment is scale-invariant, so
-    renormalizing cannot change any downstream result.
-
-    Scale shape: each iteration is ONE corpus scan with NO shuffle —
-    an Arrow ``mapInPandas`` pass emits k×dim partial sums + counts per
-    input partition (a few hundred bytes each), and the driver reduces
-    the ≤ partitions × k partials with numpy, exactly MLlib's
-    treeAggregate shape with the tree collapsed to one level. The
-    corpus is never moved; only index metadata crosses to the driver
-    (same class as the ≤ n_centroids fetch in cosine_topk_ivf).
-
-    Deliberately NOT oracle-gated: float partial sums accumulate in
-    partition/batch order, which is not bit-reproducible across
-    partitionings — the parity test pins the numerics against a
-    single-pass numpy reference to 1e-9 instead, and the driver records
-    the weaker rows-only check for the query built on top of this
-    (the fixed-centroid assignment path stays hash-gated).
-    """
-    import numpy as np
-
-    seeds = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(n_centroids)
-        .collect()
-    ]
-    cent = np.array([v for _, v in seeds], dtype=np.float64)
-    k = len(seeds)
-    vecs = corpus.select(F.col(vec_col).alias("v"))
-
-    for _ in range(n_iters):
-        cn = np.linalg.norm(cent, axis=1)
-        cn[cn == 0] = 1.0
-        cu = cent / cn[:, None]
-
-        def partials(batches, cu=cu):
-            import numpy as np
-            import pandas as pd
-
-            sums = np.zeros((k, dim), dtype=np.float64)
-            cnts = np.zeros(k, dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                vn = np.linalg.norm(V, axis=1)
-                vn[vn == 0] = 1.0
-                assign = np.argmax((V / vn[:, None]) @ cu.T, axis=1)
-                for j in range(k):
-                    m = assign == j
-                    if m.any():
-                        sums[j] += V[m].sum(axis=0)
-                        cnts[j] += int(m.sum())
-            yield pd.DataFrame(
-                {
-                    "cid": np.arange(k, dtype=np.int64),
-                    "cnt": cnts,
-                    "s": [sums[j].tolist() for j in range(k)],
-                }
-            )
-
-        rows = vecs.mapInPandas(
-            partials, schema="cid long, cnt long, s array<double>"
-        ).collect()
-        # deterministic driver reduce: fold partials in sorted order
-        sums = np.zeros((k, dim), dtype=np.float64)
-        cnts = np.zeros(k, dtype=np.int64)
-        for r in sorted(rows, key=lambda r: (r.cid, r.cnt, tuple(r.s))):
-            sums[r.cid] += np.array(r.s, dtype=np.float64)
-            cnts[r.cid] += r.cnt
-        # empty cluster keeps its previous centroid (standard Lloyd fix)
-        nonzero = cnts > 0
-        cent[nonzero] = sums[nonzero] / cnts[nonzero, None]
-
-    return [(cid, cent[i].tolist()) for i, (cid, _) in enumerate(seeds)]
-
-
 def _ivf_seq_norm(cvec: list[float]) -> float:
     """Sequential left-fold norm, NOT math.fsum: fsum is exactly
     rounded while the JVM fold and DuckDB's list_sum accumulate in
@@ -443,12 +347,10 @@ def default_pq_codebooks(
 ) -> list[list[list[float]]]:
     """Deterministic per-subspace codebooks: the ``n_codes`` lowest-id
     corpus vectors, split into ``m`` contiguous subvectors —
-    ``codebooks[s][c]`` is centroid ``c`` of subspace ``s``. The same
-    fixed-index-input discipline as :func:`cosine_topk_ivf`: training
-    real codebooks (per-subspace k-means) is :func:`train_ivf_centroids`
-    applied per slice and is NOT bit-reproducible across partitionings;
-    encoding/search against FIXED codebooks is exact, which is what the
-    oracle gates. Driver-held index metadata (≤ n_codes rows)."""
+    ``codebooks[s][c]`` is centroid ``c`` of subspace ``s``. They are
+    also the seeds of the trained codebooks
+    (:func:`~sfcrimedatapipeline_spark.operators.mltrain.pq_kmeans_det`).
+    Driver-held index metadata (≤ n_codes rows)."""
     sub = dim // m
     rows = (
         corpus.select(id_col, vec_col).orderBy(id_col).limit(n_codes).collect()
@@ -699,91 +601,6 @@ def pq_topk(
     )
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    n_codes: int = PQ_CODEBOOK_SIZE,
-    m: int = PQ_SUBSPACES,
-    n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
-) -> list[list[list[float]]]:
-    """Per-subspace k-means trainer for PQ codebooks — the trained
-    counterpart of :func:`default_pq_codebooks`, same contract as
-    :func:`train_ivf_centroids` is to ``cosine_topk_ivf``.
-
-    Lloyd iterations with squared-L2 assignment per subspace, all ``m``
-    subspaces trained in the SAME scan: each iteration is one
-    shuffle-free Arrow ``mapInPandas`` pass emitting m×k×(dim/m)
-    partial sums + counts per input partition (a few KiB), reduced on
-    the driver in sorted order. Seeds are the lowest-``n_codes``
-    vectors' subvectors — the default codebooks — so iteration 0 of the
-    trained path IS the gated fixed path. Ties in assignment break to
-    the lowest centroid id (numpy argmin first-min). Empty clusters
-    keep their previous centroid.
-
-    NOT oracle-gated (float partial sums accumulate in partition order;
-    see train_ivf_centroids) — numerics pinned by the numpy parity
-    test; the fixed-codebook path stays hash-gated.
-    """
-    import numpy as np
-
-    sub = dim // m
-    cb = np.array(
-        default_pq_codebooks(corpus, n_codes, m, id_col, vec_col, dim),
-        dtype=np.float64,
-    )  # (m, k, sub)
-    k = cb.shape[1]
-    vecs = corpus.select(F.col(vec_col).alias("v"))
-
-    for _ in range(n_iters):
-        def partials(batches, cb=cb.copy()):
-            import numpy as np
-            import pandas as pd
-
-            sums = np.zeros((m, k, sub), dtype=np.float64)
-            cnts = np.zeros((m, k), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                for s in range(m):
-                    Vs = V[:, s * sub : (s + 1) * sub]
-                    # (n, k) squared distances; argmin ties → lowest id
-                    d = ((Vs[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
-                    assign = np.argmin(d, axis=1)
-                    for j in range(k):
-                        msk = assign == j
-                        if msk.any():
-                            sums[s, j] += Vs[msk].sum(axis=0)
-                            cnts[s, j] += int(msk.sum())
-            yield pd.DataFrame(
-                {
-                    "s": np.repeat(np.arange(m, dtype=np.int64), k),
-                    "cid": np.tile(np.arange(k, dtype=np.int64), m),
-                    "cnt": cnts.reshape(-1),
-                    "vsum": [
-                        sums[s_, j_].tolist()
-                        for s_ in range(m)
-                        for j_ in range(k)
-                    ],
-                }
-            )
-
-        rows = vecs.mapInPandas(
-            partials, schema="s long, cid long, cnt long, vsum array<double>"
-        ).collect()
-        sums = np.zeros((m, k, sub), dtype=np.float64)
-        cnts = np.zeros((m, k), dtype=np.int64)
-        for r in sorted(rows, key=lambda r: (r.s, r.cid, r.cnt, tuple(r.vsum))):
-            sums[r.s, r.cid] += np.array(r.vsum, dtype=np.float64)
-            cnts[r.s, r.cid] += r.cnt
-        nz = cnts > 0
-        cb[nz] = sums[nz] / cnts[nz][:, None]
-
-    return [[cb[s, j].tolist() for j in range(k)] for s in range(m)]
-
-
 def _coarse_dist_structs(vec: str, centroids: list[list[float]]):
     """(full-dim squared L2, centroid id) structs over a broadcast-
     literal centroid table — same shared-lambda shape as the PQ
@@ -831,9 +648,11 @@ def ivfpq_topk(
     ``n_centroids`` lowest-id corpus vectors (full-dim) and codebooks
     to :func:`default_pq_codebooks`; assignment/probe ties break to the
     lowest centroid id via struct-min; the ADC sum is a fixed-order
-    fold — fully hash-gated against the SQL twin. Swap in
-    :func:`train_ivf_centroids` / :func:`train_pq_codebooks` outputs
-    for the trained (rows-only) variant.
+    fold — fully hash-gated against the SQL twin. Trained inputs come
+    from the deterministic trainers in operators/mltrain.py:
+    ``pq_kmeans_det(corpus, m, k, iters)`` for the codebooks and
+    ``pq_kmeans_det(corpus, 1, n_centroids, iters)[0]`` for squared-L2
+    coarse centroids.
 
     Scale shape: corpus assignment + encoding is ONE shuffle-free scan
     (pure Catalyst expressions over broadcast-literal centroids +

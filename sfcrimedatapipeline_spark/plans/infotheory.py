@@ -1157,16 +1157,14 @@ def emb_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-broken on cluster id) and fixed-point centroid means, so the
     final (cluster, dim, centroid, n_members) table value-hash matches
     a DuckDB oracle that re-runs the SAME three iterations as unrolled
-    CTE stages. Upgrades the IVF coarse-quantizer story from rows-only
-    (operators/similarity.py trainer) to hash-gated: the quantizer a
-    100 TB ANN index trains is now gate-verifiable.
+    CTE stages, so the quantizer an ANN index trains is
+    gate-verifiable.
 
-    Scale: per iteration one k·dims-cell broadcast into the exploded
-    point grain, one (vec, cluster) distance aggregate, one
-    (cluster, dim) mean aggregate — all map-side combinable; the
-    driver holds k·dims doubles between iterations (BPE-trainer
-    precedent). Empty clusters keep their previous centroid
-    (COALESCE on both sides)."""
+    Scale: per iteration one shuffle-free Arrow pass over the vectors
+    (operators/mltrain.py:kmeans_train); tasks emit exact per-(cluster,
+    dim) fixed-point partial sums and the driver, which holds k·dims
+    doubles between iterations, adds them. Empty clusters keep their
+    previous centroid (COALESCE in the oracle)."""
     from sfcrimedatapipeline_spark.operators.mltrain import kmeans_train
 
     emb = ensure_min_partitions(read_table(spark, sf_dir, "embeddings"))

@@ -805,19 +805,15 @@ def _trained_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
 
 
 def ann_cosine_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE IVF story, VALUE-HASH GATED end-to-end since round
-    9b: deterministic spherical k-means training
-    (operators/mltrain.py:spherical_kmeans_det — fixed-point norms /
-    dot argmax / means, so the trained centroids ARE
-    engine-reproducible, retiring this query\'s old rows-only
-    rationale) followed by the fixed-centroid assignment/probe/score
-    path; the oracle re-trains inside its own CTE chain
+    """The complete IVF story, value-hash gated end to end:
+    deterministic spherical k-means
+    (operators/mltrain.py:spherical_kmeans_det) trains the centroids,
+    then the fixed-centroid assignment/probe/score path searches with
+    them. The oracle re-trains inside its own CTE chain
     (_ivf_trained_cent_sql) and searches with the same SQL as the
-    untrained twin. The float mapInPandas trainer
-    (operators/similarity.py:train_ivf_centroids) remains for the
-    treeAggregate-shape demo, pinned by its numpy parity test.
-    Training runs per invocation (_trained_ivf_centroids) — the same
-    timing contract as ann_pq_topk_trained."""
+    untrained twin. Training runs per invocation
+    (_trained_ivf_centroids) — the same timing contract as
+    ann_pq_topk_trained."""
     emb = _read_parallel(spark, sf_dir, "embeddings")
     queries = ann_queries(emb)
     trained = _trained_ivf_centroids(spark, sf_dir)
@@ -873,16 +869,12 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE PQ story, VALUE-HASH GATED end-to-end since round
-    9b: deterministic per-subspace k-means
-    (operators/mltrain.py:pq_kmeans_det — fixed-point distances/means
-    make the trained codebooks engine-reproducible, retiring this
-    query\'s old rows-only rationale) followed by the fixed-codebook
-    encode/ADC path; the oracle re-trains in its own CTE chain
-    (_pq_trained_cb_sql) and scores with the SAME search SQL as
-    ann_pq_topk. The float mapInPandas trainer
-    (operators/similarity.py:train_pq_codebooks) remains as the
-    treeAggregate-shape demo, pinned by its numpy parity test."""
+    """The complete PQ story, value-hash gated end to end:
+    deterministic per-subspace k-means
+    (operators/mltrain.py:pq_kmeans_det) trains the codebooks, then the
+    fixed-codebook encode/ADC path scores with them. The oracle
+    re-trains in its own CTE chain (_pq_trained_cb_sql) and scores with
+    the same search SQL as ann_pq_topk."""
     from sfcrimedatapipeline_spark.operators.mltrain import pq_kmeans_det
 
     emb = _read_parallel(spark, sf_dir, "embeddings")

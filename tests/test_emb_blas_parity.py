@@ -64,82 +64,6 @@ def test_lsh_is_exact_subset(spark, exact_pairs):
         assert exact_pairs[pair] == cos, f"cosine drift at {pair}"
 
 
-def test_ivf_trainer_numpy_parity(spark):
-    """train_ivf_centroids (distributed: Arrow partial sums per
-    partition, driver reduce) must match a single-pass numpy reference
-    of the SAME algorithm to float tolerance — partial-sum order is the
-    only permitted difference (VERDICT r4 missing #2)."""
-    import numpy as np
-
-    from sfcrimedatapipeline_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-    from sfcrimedatapipeline_spark.plans.llmops import _read_parallel
-
-    emb = _read_parallel(spark, SF_DIR, "embeddings")
-    k, iters = 4, 3
-    trained = train_ivf_centroids(emb, n_centroids=k, n_iters=iters)
-
-    rows = sorted(
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in emb.select("vec_id", "embedding").collect()
-    )
-    V = np.array([v for _, v in rows], dtype=np.float64)
-    cent = V[:k].copy()  # same lowest-id seeding
-    for _ in range(iters):
-        cu = cent / np.linalg.norm(cent, axis=1)[:, None]
-        vn = np.linalg.norm(V, axis=1)
-        vn[vn == 0] = 1.0
-        assign = np.argmax((V / vn[:, None]) @ cu.T, axis=1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                cent[j] = V[m].mean(axis=0)
-
-    got = np.array([v for _, v in trained])
-    assert got.shape == (k, V.shape[1])
-    np.testing.assert_allclose(got, cent, rtol=1e-9, atol=1e-12)
-    # seed ids preserved for the downstream fixed-centroid path
-    assert [cid for cid, _ in trained] == [vid for vid, _ in rows[:k]]
-
-
-def test_pq_trainer_numpy_parity(spark):
-    """train_pq_codebooks (distributed partial sums, driver reduce)
-    must match a single-pass numpy reference of the same per-subspace
-    Lloyd algorithm to float tolerance."""
-    import numpy as np
-
-    from sfcrimedatapipeline_spark.operators.similarity import (
-        train_pq_codebooks,
-    )
-    from sfcrimedatapipeline_spark.plans.llmops import _read_parallel
-
-    emb = _read_parallel(spark, SF_DIR, "embeddings")
-    k, m, iters, sub = 4, 8, 3, 8
-    trained = np.array(train_pq_codebooks(emb, n_codes=k, m=m, n_iters=iters))
-
-    rows = sorted(
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in emb.select("vec_id", "embedding").collect()
-    )
-    V = np.array([v for _, v in rows], dtype=np.float64)
-    cb = np.stack(
-        [V[:k, s * sub : (s + 1) * sub].copy() for s in range(m)]
-    )  # same lowest-id subvector seeding
-    for _ in range(iters):
-        for s in range(m):
-            Vs = V[:, s * sub : (s + 1) * sub]
-            d = ((Vs[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d, axis=1)
-            for j in range(k):
-                msk = assign == j
-                if msk.any():
-                    cb[s, j] = Vs[msk].mean(axis=0)
-
-    assert trained.shape == (m, k, sub)
-    np.testing.assert_allclose(trained, cb, rtol=1e-9, atol=1e-12)
-
-
 def test_standardize_embeddings_unit_stats_and_constant_dim(spark):
     import numpy as np
 

@@ -749,8 +749,12 @@ def test_spherical_kmeans_det_repeatable_and_sane(spark):
 
 def test_pq_kmeans_det_repeatable(spark):
     """The deterministic PQ-codebook trainer must be bit-identical
-    across partitionings, with the m×k×sub shape pq_topk expects."""
-    from sfcrimedatapipeline_spark.operators.mltrain import pq_kmeans_det
+    across partitionings, with the m×k×sub shape pq_topk expects; so
+    must the Lloyd trainer, which shares its loop."""
+    from sfcrimedatapipeline_spark.operators.mltrain import (
+        kmeans_train,
+        pq_kmeans_det,
+    )
 
     sdf = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     a = pq_kmeans_det(sdf, m=8, n_codes=16, iters=2)
@@ -760,14 +764,18 @@ def test_pq_kmeans_det_repeatable(spark):
     for sa, sb in zip(a, b):
         for ca_, cb_ in zip(sa, sb):
             assert ca_ == cb_
+    ka = kmeans_train(sdf, k=4, iters=3)
+    assert len(ka) == 4 * 64
+    assert kmeans_train(sdf.repartition(5), k=4, iters=3) == ka
 
 
-@pytest.mark.parametrize("trainer", ["spherical", "pq"])
+@pytest.mark.parametrize("trainer", ["spherical", "pq", "lloyd"])
 def test_det_trainers_refuse_int64_wrap(spark, trainer):
     """The trainers' in-batch fixed-point sums are int64: vectors large
     enough to wrap them raise instead of training on wrapped values,
     while large vectors that fit still train."""
     from sfcrimedatapipeline_spark.operators.mltrain import (
+        kmeans_train,
         pq_kmeans_det,
         spherical_kmeans_det,
     )
@@ -780,9 +788,12 @@ def test_det_trainers_refuse_int64_wrap(spark, trainer):
         sdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         if trainer == "spherical":
             return spherical_kmeans_det(sdf, k=4, iters=1)
+        if trainer == "lloyd":
+            return kmeans_train(sdf, k=4, iters=1)
         return pq_kmeans_det(sdf, m=8, n_codes=4, iters=1)
 
-    # k=4 centroids, or one codebook for each of the m=8 subspaces
-    assert len(train(10.0)) == {"spherical": 4, "pq": 8}[trainer]
+    # k=4 centroids, one codebook for each of the m=8 subspaces, or
+    # one row per (cluster, dim)
+    assert len(train(10.0)) == {"spherical": 4, "pq": 8, "lloyd": 4 * 64}[trainer]
     with pytest.raises(Exception, match="overflow int64"):
         train(1e4)

@@ -49,33 +49,6 @@ def test_current_round_tolerates_non_dict_progress_lines(monkeypatch, tmp_path):
     assert entry._current_round() == 7
 
 
-def test_bench_diff_old_reading_below_band_is_not_a_swing(tmp_path, monkeypatch, capsys):
-    """bench_diff swing reclassification requires the PAIR to straddle
-    the isolated steady state: a memoized old reading far below the
-    band must NOT excuse a multi-x new reading that still fits under
-    the band (ADVICE r9 #1)."""
-    bd = _load_module("bench_diff_under_test", "tools/bench_diff.py")
-    monkeypatch.setattr(bd, "load_isolated", lambda: {"qmemo": 5.0, "qswing": 5.0})
-
-    def write(path, queries):
-        path.write_text(json.dumps({"metric": "x", "queries": queries}))
-        return str(path)
-
-    # memoized old (0.5s << band floor ~3.55s) -> REGRESSION, exit 1
-    old = write(tmp_path / "old.json", {"qmemo": 0.5, "qswing": 4.0})
-    new = write(tmp_path / "new.json", {"qmemo": 5.2, "qswing": 6.6})
-    monkeypatch.setattr(
-        "sys.argv", ["bench_diff.py", old, new]
-    )
-    rc = bd.main()
-    out = capsys.readouterr().out
-    assert rc == 1
-    assert "REGRESSION qmemo" in out and "below the isolated band" in out
-    # the true swing (old 4.0 and new 6.6 both near the 5.0 median) is
-    # still auto-reclassified
-    assert "swing qswing" in out
-
-
 def test_bench_diff_canary_correction_absorbs_uniform_shift(tmp_path):
     """A synthetic 1.3x uniform environment shift across every query
     (canaries included) must produce ZERO regression flags once
@@ -311,79 +284,3 @@ def test_no_complex_typed_oracle_outputs():
             if "[]" in typ or "STRUCT" in typ or "MAP(" in typ:
                 offenders.append(f"{name}.{col}: {typ}")
     assert not offenders, f"complex-typed oracle outputs: {offenders}"
-
-
-# -------------------------------- VERDICT r10 #4: scheduling canaries
-def test_bench_diff_scheduling_shift_produces_zero_flags(tmp_path):
-    """A synthetic SCHEDULING-ONLY drift (multi-stage queries 2x,
-    pure scans flat — the BASELINE.md round-10 drift mode) must
-    produce zero REGRESSION flags WHEN the isolated record corroborates
-    it (ADVICE r11: the sched-factor excuse requires a second signal);
-    without an isolated record the flag must STAY; a genuine
-    single-query regression with flat canaries must still flag."""
-    bd = _load_module("bd_r11", "tools/bench_diff.py")
-    base = {c: 0.5 for c in bd.CANARIES}
-    base.update({c: 2.0 for c in bd.SCHED_CANARIES})
-    base.update({"multi_stage_q": 3.0, "scan_like_q": 0.8})
-    # scheduling drift: every multi-stage shape doubles, scans flat
-    shifted = dict(base)
-    for q in [*bd.SCHED_CANARIES, "multi_stage_q"]:
-        shifted[q] = base[q] * 2.0
-    old_p, new_p = tmp_path / "old.json", tmp_path / "new.json"
-    old_p.write_text(json.dumps({"queries": base}))
-    new_p.write_text(json.dumps({"queries": shifted}))
-    # isolated medians recorded in the CURRENT (drifted) environment
-    # read at the drifted level — the corroborating second signal
-    iso_p = tmp_path / "iso.json"
-    iso_p.write_text(json.dumps({
-        "mode": "isolate", "sf": 0.1,
-        "queries": {q: {"median": shifted[q], "samples": [shifted[q]],
-                        "reps": 1}
-                    for q in [*bd.SCHED_CANARIES, "multi_stage_q"]},
-    }))
-    env = {**os.environ, "SPARK_GRAFT_ISOLATED": str(iso_p)}
-    repo_root = bd.__file__.rsplit("/tools/", 1)[0]
-    r = subprocess.run(
-        [sys.executable, bd.__file__, str(old_p), str(new_p)],
-        capture_output=True, text=True, cwd=repo_root, env=env,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    assert "REGRESSION" not in r.stdout
-    assert "sched-swing multi_stage_q" in r.stdout
-
-    # same drift, NO isolated record for the flagged query -> the
-    # sched-factor excuse is uncorroborated and the flag must stay
-    env_empty = {**os.environ, "SPARK_GRAFT_ISOLATED": str(tmp_path / "none.json")}
-    r_un = subprocess.run(
-        [sys.executable, bd.__file__, str(old_p), str(new_p)],
-        capture_output=True, text=True, cwd=repo_root, env=env_empty,
-    )
-    assert r_un.returncode == 1
-    assert "REGRESSION multi_stage_q" in r_un.stdout
-
-    # genuine regression, ALL canaries flat -> must still flag, even
-    # with the corroborating file present (iso band is exceeded)
-    genuine = dict(base)
-    genuine["multi_stage_q"] = 3.0 * 3.0
-    new_p.write_text(json.dumps({"queries": genuine}))
-    r2 = subprocess.run(
-        [sys.executable, bd.__file__, str(old_p), str(new_p)],
-        capture_output=True, text=True, cwd=repo_root, env=env,
-    )
-    assert r2.returncode == 1
-    assert "REGRESSION multi_stage_q" in r2.stdout
-
-
-def test_bench_diff_sched_canaries_are_memo_free_reference_queries():
-    """The scheduling canaries must be benched, non-deferred,
-    reference-surface queries (stable since the early rounds, no
-    memo riders)."""
-    import __spark_entry__ as e
-
-    bd = _load_module("bd_r11b", "tools/bench_diff.py")
-    bench = _load_module("bench_r11", "bench.py")
-    qs = e.queries()
-    assert len(bd.SCHED_CANARIES) >= 3
-    for c in bd.SCHED_CANARIES:
-        assert c in qs and c not in bench.BENCH_SKIP
-        assert c in e._REFERENCE_FIRST  # untouched early-round surface

@@ -31,22 +31,6 @@ CANARIES = [
     "a1_distinct_2col",
 ]
 
-#: Scheduling-heavy canaries (VERDICT r10 #4): multi-stage, memo-free
-#: reference-surface queries (star joins, composite joins, the
-#: distinct+window surrogate key) untouched since the early rounds.
-#: BASELINE.md's round-10 note measured this VM's MULTI-STAGE
-#: scheduling cost drifting ~2x intra-day while the pure-scan
-#: canaries moved 1.03x — the scan factor is blind to the drift mode
-#: that dominates the swing class. The median NEW/OLD ratio over
-#: these defines a SECOND environment factor; a flagged regression
-#: that the scheduling factor fully explains is reported as
-#: sched-swing, not regression.
-SCHED_CANARIES = [
-    "j8_star_join_monthly",
-    "j7_dedup_nonkey_join",
-    "w1_surrogate_key",
-]
-
 #: Distrust the canaries outside this range: a >2.5x "environment"
 #: reading is itself a finding (wrong SF dir, broken host), not a
 #: correction to silently apply.
@@ -78,24 +62,6 @@ def load(path: str) -> dict[str, float]:
     }
 
 
-def load_isolated() -> dict[str, float]:
-    """Isolated steady-state medians from bench.py --isolate
-    (BENCH_ISOLATED.json at the repo root) — the adjudication record
-    for the scheduling-swing class (VERDICT r7 #3)."""
-    import os
-
-    path = os.environ.get("SPARK_GRAFT_ISOLATED") or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH_ISOLATED.json",
-    )
-    try:
-        with open(path) as fh:
-            doc = json.load(fh)
-        return {q: v["median"] for q, v in doc.get("queries", {}).items()}
-    except (OSError, json.JSONDecodeError, KeyError, TypeError):
-        return {}
-
-
 def env_factor(
     old: dict[str, float],
     new: dict[str, float],
@@ -119,12 +85,10 @@ def env_factor(
 
 def main() -> int:
     old, new = load(sys.argv[1]), load(sys.argv[2])
-    iso = load_isolated()
     ratio_bar = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     abs_bar = 0.3
     shared = sorted(set(old) & set(new))
     factor = env_factor(old, new)
-    sched_factor = env_factor(old, new, SCHED_CANARIES, min_n=2)
     print(f"shared queries: {len(shared)}  (old-only {len(set(old)-set(new))}, "
           f"new-only {len(set(new)-set(old))})")
     print(f"overlap totals: {sum(old[q] for q in shared):.1f}s -> "
@@ -132,80 +96,17 @@ def main() -> int:
     print(f"environment factor (canary median NEW/OLD, clamped): "
           f"{factor:.3f} over {sum(1 for c in CANARIES if c in old and c in new)} "
           f"canaries — per-query deltas corrected by it")
-    print(f"scheduling factor (multi-stage canary median NEW/OLD, clamped): "
-          f"{sched_factor:.3f} over "
-          f"{sum(1 for c in SCHED_CANARIES if c in old and c in new)} canaries")
-    regressions, swings, sched_swings = [], [], []
-    for q in shared:
-        o, n_raw = old[q], new[q]
-        n = n_raw / factor  # environment-corrected reading
-        if n > o * ratio_bar and n - o >= abs_bar:
-            # second adjudication tier (VERDICT r10 #4): when the
-            # scheduling canaries themselves drifted, a multi-stage
-            # query whose delta the scheduling factor FULLY explains
-            # is environment, not code — the drift mode the pure-scan
-            # factor cannot see
-            n_sched = n_raw / sched_factor
-            if sched_factor > factor and (
-                n_sched <= o * ratio_bar or n_sched - o < abs_bar
-            ):
-                # the sched-factor excuse must be CORROBORATED, not
-                # assumed (ADVICE r11): when an isolated median exists,
-                # the sched-corrected reading must also sit inside the
-                # isolated band — a genuine code regression in a
-                # multi-stage query landing in a round where the
-                # scheduling canaries also drifted would otherwise be
-                # auto-excused with no second signal. No isolated
-                # record → stays flagged as a regression (run
-                # bench.py --isolate to adjudicate).
-                iso_s = iso[q] / sched_factor if q in iso else None
-                if iso_s is not None and n_sched <= iso_s * 1.3 + abs_bar:
-                    sched_swings.append(
-                        (n / max(o, 1e-9), q, o, n_raw, n_sched, iso_s)
-                    )
-                    continue
-            # a "regression" is shared-session scheduling interference
-            # (not a code regression) only when the PAIR straddles the
-            # query's isolated steady state (median ± the documented
-            # ~30% isolated band + the abs bar): the new reading must
-            # sit inside the band AND the old reading must not lie far
-            # BELOW it (ADVICE r8 #1 — memo-riding queries run well
-            # under their isolated medians in shared sessions, so a
-            # genuine multi-x memo-path regression that still lands
-            # under the band would otherwise be auto-excused).
-            # iso medians are recorded in the CURRENT environment
-            # (--isolate re-runs each round); correct them into the
-            # same old-environment units as n before band tests.
-            iso_c = iso[q] / factor if q in iso else None
-            in_band_new = iso_c is not None and n <= iso_c * 1.3 + abs_bar
-            old_at_steady = iso_c is not None and o >= iso_c / 1.3 - abs_bar
-            if in_band_new and old_at_steady:
-                swings.append((n / max(o, 1e-9), q, o, n, iso_c))
-            else:
-                regressions.append((n / max(o, 1e-9), q, o, n))
+    regressions = [
+        (n / max(o, 1e-9), q, o, n)
+        for q in shared
+        for o, n in [(old[q], new[q] / factor)]  # environment-corrected
+        if n > o * ratio_bar and n - o >= abs_bar
+    ]
     for r, q, o, n in sorted(regressions, reverse=True):
-        extra = ""
-        if q in iso:
-            if n > (iso[q] / factor) * 1.3 + abs_bar:
-                extra = f" [isolated steady state {iso[q]:.2f}s EXCEEDED]"
-            else:
-                extra = (f" [old reading {o:.2f}s is below the isolated "
-                         f"band around {iso[q]:.2f}s — memoized prefix? "
-                         f"adjudicate by hand]")
         # print BOTH the measured reading (greppable in the bench
         # artifact) and the environment-corrected one the ratio uses
         print(f"  REGRESSION {q}: {o:.2f}s -> {n * factor:.2f}s raw "
-              f"/ {n:.2f}s corrected ({r:.1f}x){extra}")
-    for r, q, o, n, m in sorted(swings, reverse=True):
-        print(f"  swing {q}: {o:.2f}s -> {n * factor:.2f}s raw "
-              f"/ {n:.2f}s corrected ({r:.1f}x) — within isolated "
-              f"steady state {m:.2f}s (corrected), not a regression")
-    for r, q, o, n_raw, n_sched, iso_s in sorted(sched_swings, reverse=True):
-        print(f"  sched-swing {q}: {o:.2f}s -> {n_raw:.2f}s raw "
-              f"/ {n_sched:.2f}s sched-corrected ({r:.1f}x scan-corrected) "
-              f"— the multi-stage scheduling drift explains it, "
-              f"corroborated by isolated steady state {iso_s:.2f}s "
-              f"(sched-corrected)")
+              f"/ {n:.2f}s corrected ({r:.1f}x)")
     # improvements get the SAME correction — under a 0.75x uniformly
     # faster VM nearly everything would read "improved" otherwise
     improvements = [
