@@ -9,12 +9,13 @@ and the extension operators under
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 

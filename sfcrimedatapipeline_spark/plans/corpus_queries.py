@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from sfcrimedatapipeline_spark.functions.caching import (
     exit_temp_dir,
+    keep_alive_until_released,
     unpersist_when_released,
 )
 from sfcrimedatapipeline_spark.functions.hashing import sql_hash64
@@ -49,7 +50,9 @@ def _dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     query derives it afresh. The iterative graph operators read their
     input more than once (mirrored edge unions), so a query feeding
     one persists the pairs itself and releases them with its result
-    (functions/caching.py:unpersist_when_released)."""
+    (functions/caching.py:unpersist_when_released). The returned frame
+    releases the MinHash caches with itself, so a query holds it until
+    its own result is released."""
     return dd.minhash_near_duplicates(_docs(spark, sf_dir))
 
 
@@ -196,16 +199,14 @@ def graph_hits_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hub, authority) trace bit-identical across engines; the oracle
     unrolls the same 4 rounds (2 contribution + 2 normalization CTEs
     each, all MATERIALIZED) over the shared MinHash pair SQL."""
-    from sfcrimedatapipeline_spark.functions.caching import (
-        keep_alive_until_released,
-    )
     from sfcrimedatapipeline_spark.operators.graph import hits
 
-    base = hits(_dup_pairs(spark, sf_dir), iters=HITS_ITERS, deterministic=True)
+    pairs = _dup_pairs(spark, sf_dir)
+    base = hits(pairs, iters=HITS_ITERS, deterministic=True)
     # keep the hits() wrapper (and so its edge/node caches) alive for
     # the lifetime of the derived frame — a bare .orderBy() chain would
     # drop it and fire the unpersist finalizer before the first action
-    return keep_alive_until_released(base.orderBy("doc_id"), base)
+    return keep_alive_until_released(base.orderBy("doc_id"), base, pairs)
 
 
 BFS_SEED_MOD = 3
@@ -233,7 +234,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from sfcrimedatapipeline_spark.operators.graph import triangle_count
 
-    return triangle_count(_dup_pairs(spark, sf_dir))
+    pairs = _dup_pairs(spark, sf_dir)
+    return keep_alive_until_released(triangle_count(pairs), pairs)
 
 
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,16 +244,14 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub triage — 2·T(v)/(d(v)(d(v)−1)) from exact per-node triangle and
     degree counts, hash-gated against the relational triangle
     enumeration in SQL."""
-    from sfcrimedatapipeline_spark.functions.caching import (
-        keep_alive_until_released,
-    )
     from sfcrimedatapipeline_spark.operators.graph import (
         clustering_coefficients,
     )
 
-    base = clustering_coefficients(_dup_pairs(spark, sf_dir))
+    pairs = _dup_pairs(spark, sf_dir)
+    base = clustering_coefficients(pairs)
     # hold the wrapper so its edge-cache finalizer can't fire pre-action
-    return keep_alive_until_released(base.orderBy("doc_id"), base)
+    return keep_alive_until_released(base.orderBy("doc_id"), base, pairs)
 
 
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2234,15 +2234,16 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Over the _dup_pairs graph; output is bounded by source-pair
     count (≤ S²/2), never data cardinality. Exact integers end to end."""
     docs = _docs(spark, sf_dir).select("doc_id", "source")
-    pairs = _dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    raw = _dup_pairs(spark, sf_dir)
     sa = docs.select(
         F.col("doc_id").alias("doc_a"), F.col("source").alias("__sa")
     )
     sb = docs.select(
         F.col("doc_id").alias("doc_b"), F.col("source").alias("__sb")
     )
-    return (
-        pairs.join(sa, "doc_a")
+    out = (
+        raw.select("doc_a", "doc_b")
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
             F.least("__sa", "__sb").alias("source_a"),
@@ -2251,6 +2252,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source_a", "source_b")
         .agg(F.count("*").cast("long").alias("n_pairs"))
     )
+    return keep_alive_until_released(out, raw)
 
 
 QUERIES["dedup_cross_source_matrix"] = dedup_cross_source_matrix
@@ -2452,7 +2454,7 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact md5 split assignment; output is
     a ≤6-row (split_lo, split_hi) matrix of exact counts, pair order
     normalized lexicographically so the matrix is symmetric-free."""
-    pairs = _dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    raw = _dup_pairs(spark, sf_dir)
     splits = corpus.assign_splits(
         _docs(spark, sf_dir), "doc_id", SPLITS
     ).select("doc_id", "split")
@@ -2462,8 +2464,9 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sb = splits.select(
         F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b")
     )
-    return (
-        pairs.join(sa, "doc_a")
+    out = (
+        raw.select("doc_a", "doc_b")
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
             F.least("split_a", "split_b").alias("split_lo"),
@@ -2472,6 +2475,7 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("split_lo", "split_hi")
         .agg(F.count("*").cast("long").alias("n_pairs"))
     )
+    return keep_alive_until_released(out, raw)
 
 
 QUERIES["dedup_split_leakage"] = dedup_split_leakage

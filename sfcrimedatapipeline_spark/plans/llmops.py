@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import keep_alive_until_released
 from sfcrimedatapipeline_spark.functions.hashing import sql_hash64
 from sfcrimedatapipeline_spark.functions.text import (
     SQL_BPE_TOKENS,
@@ -524,8 +525,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_pairs
 
     pairs = _dup_pairs(spark, sf_dir)
-    return pairs.select(
-        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
+    return keep_alive_until_released(
+        pairs.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")), pairs
     )
 
 
@@ -543,9 +544,8 @@ def dedup_delta_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_cross_corpus(
         delta, corpus, threshold=JACCARD_THRESHOLD
     )
-    return pairs.select(
-        "delta_id", "corpus_id", F.round("jaccard", 6).alias("jaccard")
-    )
+    out = pairs.select("delta_id", "corpus_id", F.round("jaccard", 6).alias("jaccard"))
+    return keep_alive_until_released(out, pairs)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,11 +642,8 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sfcrimedatapipeline_spark.plans.corpus_queries import _dup_pairs
 
     docs = _read_parallel(spark, sf_dir, "documents")
-    mh = (
-        _dup_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .withColumn("__mh", F.lit(True))
-    )
+    raw = _dup_pairs(spark, sf_dir)
+    mh = raw.select("doc_a", "doc_b").withColumn("__mh", F.lit(True))
     ng = (
         dedup.ngram_jaccard_pairs(
             docs, threshold=JACCARD_THRESHOLD, max_df=NGRAM_MAX_DF
@@ -668,7 +665,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = mh.join(ng, ["doc_a", "doc_b"], "full").join(
         fz, ["doc_a", "doc_b"], "full"
     )
-    return (
+    out = (
         j.select(
             F.coalesce("__mh", F.lit(False)).alias("in_minhash"),
             F.coalesce("__ng", F.lit(False)).alias("in_ngram"),
@@ -677,6 +674,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("in_minhash", "in_ngram", "in_fuzzy")
         .agg(F.count("*").cast("long").alias("n_pairs"))
     )
+    return keep_alive_until_released(out, raw)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,17 +722,17 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = dedup.ngram_jaccard_pairs(
         docs, threshold=JACCARD_THRESHOLD, max_df=NGRAM_MAX_DF
     ).select("doc_a", "doc_b", F.lit(1).alias("__e"))
-    lsh = _dup_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b", F.lit(1).alias("__l")
-    )
+    raw = _dup_pairs(spark, sf_dir)
+    lsh = raw.select("doc_a", "doc_b", F.lit(1).alias("__l"))
     merged = exact.join(lsh, ["doc_a", "doc_b"], "full_outer")
-    return merged.agg(
+    out = merged.agg(
         F.count("__e").cast("long").alias("n_exact"),
         F.count("__l").cast("long").alias("n_lsh"),
         F.count(F.when(F.col("__e").isNotNull() & F.col("__l").isNotNull(), 1))
         .cast("long")
         .alias("n_common"),
     )
+    return keep_alive_until_released(out, raw)
 
 
 def dedup_delta_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1028,11 +1026,12 @@ def contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # id_a < id_b and every eval id is offset above the train range,
     # so id_a IS the train endpoint
-    return pairs.select(
+    out = pairs.select(
         F.col("id_b").alias("eval_id"),
         F.col("id_a").alias("train_id"),
         "cosine",
     )
+    return keep_alive_until_released(out, pairs)
 
 
 # --- oracle SQL builders ---------------------------------------------------

@@ -13,6 +13,9 @@ the same configuration:
 - UTC session timezone — required for value-identical comparison with
   the DuckDB oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled for every pandas interchange (toPandas, pandas UDFs).
+- The package's parent directory first on the Python workers' module
+  path, so a UDF or Arrow function that refers to a package function
+  runs whatever directory the driver was started from.
 """
 
 from __future__ import annotations
@@ -22,6 +25,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: the directory that holds the ``sfcrimedatapipeline_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -36,8 +42,10 @@ def get_spark(
     the environment and only the shuffle/AQE settings below matter.
     """
     n = cpus or DEFAULT_CPUS
+    worker_path = filter(None, (_PACKAGE_ROOT, os.environ.get("PYTHONPATH")))
     builder = (
         SparkSession.builder.appName(app_name)
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.default.parallelism", str(n))

@@ -88,6 +88,63 @@ def test_contamination_releases_fingerprint_caches(spark):
     assert _settled_persistent_rdds(spark, base) <= base
 
 
+def _near_dup_result(spark, op: str):
+    """A lazy result of one near-duplicate operator over a 24-row
+    fixture of 12 near-twin pairs (8-dim vectors) or 14 documents."""
+    from sfcrimedatapipeline_spark.operators import dedup
+
+    if op.startswith("minhash"):
+        tail = "the quick brown fox jumps over the lazy dog again and again"
+        docs = spark.createDataFrame(
+            [(i, f"doc {i // 2} body{i // 2} words {tail}") for i in range(14)],
+            "doc_id long, text string",
+        )
+        if op == "minhash_near_duplicates":
+            return dedup.minhash_near_duplicates(docs)
+        odd = F.col("doc_id") % 2 == 1
+        return dedup.minhash_cross_corpus(docs.filter(odd), docs.filter(~odd))
+    emb = spark.createDataFrame(
+        [
+            (i, [float(((i // 2) * 31 + d * 7) % 13 - 6) + (i % 2) * 1e-3 for d in range(8)])
+            for i in range(24)
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    kw = dict(threshold=0.99, dim=8)
+    if op == "embedding_near_duplicates_blas":
+        return dedup.embedding_near_duplicates_blas(emb, grid=3, **kw)
+    if op == "embedding_near_duplicates_lsh":
+        return dedup.embedding_near_duplicates_lsh(emb, **kw)
+    if op == "embedding_near_duplicates_lsh_auto":
+        return dedup.embedding_near_duplicates_lsh_auto(emb, target_bucket_rows=8, **kw)
+    odd = F.col("vec_id") % 2 == 1
+    return dedup.embedding_contamination_lsh(emb.filter(odd), emb.filter(~odd), **kw)
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "embedding_near_duplicates_blas",
+        "embedding_near_duplicates_lsh",
+        "embedding_near_duplicates_lsh_auto",
+        "embedding_contamination_lsh",
+        "minhash_near_duplicates",
+        "minhash_cross_corpus",
+    ],
+)
+def test_near_dup_operators_release_their_caches(spark, op):
+    """Whatever a near-duplicate operator persists is released with its
+    result, so a later call in the same session finds no cache."""
+    spark.catalog.clearCache()
+    gc.collect()
+    base = _n_persistent_rdds(spark)
+    out = _near_dup_result(spark, op)
+    assert out.collect(), "fixture produced no pairs"
+    del out
+    gc.collect()
+    assert _settled_persistent_rdds(spark, base) <= base
+
+
 def test_pipeline_transform_releases_caches(spark, staging):
     from sfcrimedatapipeline_spark.operators.keys import load_order_id
     from sfcrimedatapipeline_spark.plans.dims import (

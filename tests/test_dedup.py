@@ -107,11 +107,11 @@ def test_lsh_auto_scaling_and_recall(spark):
 
 
 def test_emb_lsh_mega_bucket_is_split_and_bounded(spark):
-    """Skew bound for the embedding-LSH path (VERDICT r2 #6): when one
-    hyperplane bucket holds the whole corpus, the adaptive sub-grid
-    must (a) cap every applyInPandas group at ~2*max_bucket_rows rows —
-    an un-split mega-bucket would land all n rows and an n x n tile in
-    ONE task — and (b) still cover every pair exactly once."""
+    """Skew bound for the embedding-LSH path: when one hyperplane
+    bucket holds the whole corpus, the adaptive sub-grid must (a) cap
+    every applyInPandas group at ~2*max_bucket_rows rows — an un-split
+    mega-bucket would land all n rows and an n x n tile in ONE task —
+    and (b) still cover every pair exactly once."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -131,14 +131,6 @@ def test_emb_lsh_mega_bucket_is_split_and_bounded(spark):
     assert len(pairs) == n * (n - 1) // 2
     assert all(r.cosine == 1.0 for r in pairs)
     assert all(r.id_a < r.id_b for r in pairs)
-
-    # parity: the split plan returns the same pairs as the unsplit one
-    unsplit = dedup.embedding_near_duplicates_lsh(
-        emb, n_bands=1, planes_per_band=3, max_bucket_rows=10**9
-    ).collect()
-    assert {(r.id_a, r.id_b, r.cosine) for r in pairs} == {
-        (r.id_a, r.id_b, r.cosine) for r in unsplit
-    }
 
     # boundedness: replay the operator's own blocking arithmetic and
     # assert no (band, bucket, gi, gj) group exceeds 2*cap(+slack for
@@ -237,14 +229,11 @@ def test_semantic_dedup_keeps_one_per_group(spark):
     assert out[0].cluster_id != out[1].cluster_id
 
 
-def test_semantic_dedup_subsplit_matches_unsplit(spark):
-    """A mega-cluster larger than max_cluster_rows sub-splits into
-    grid-block pairs; the pair set — hence every disposition — must be
-    identical to the single-tile plan."""
-    from sfcrimedatapipeline_spark.operators.dedup import semantic_dedup
-
+def _one_direction_rows(n: int = 40):
+    """n vectors near one axis: ids 0..9 a near-dup group (cosine ≈ 1),
+    every other id leaning into its own dimension."""
     rows = []
-    for i in range(40):  # ONE cluster; ids 0..9 a near-dup group
+    for i in range(n):
         vec = [0.0] * 64
         vec[0] = 1.0
         if i < 10:
@@ -252,15 +241,61 @@ def test_semantic_dedup_subsplit_matches_unsplit(spark):
         else:
             vec[5 + i] = 0.8
         rows.append((i, vec))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = [[1.0] + [0.0] * 63]
-    kw = dict(threshold=0.99, centroids=cents)
-    whole = sorted(map(tuple, semantic_dedup(emb, **kw).collect()))
-    split = sorted(map(tuple, semantic_dedup(
-        emb, max_cluster_rows=7, **kw).collect()))
-    assert whole == split
-    kept = [r for r in whole if r[3]]
-    assert len(kept) == 31  # 40 - (10 dups - 1 survivor)
+    return rows
+
+
+@pytest.mark.parametrize(
+    "op, cap",
+    [
+        # <= 8 buckets per band hold 40 rows: some bucket exceeds 3
+        pytest.param("embedding_near_duplicates_lsh", 3, id="lsh"),
+        # one cluster of 40 rows
+        pytest.param("semantic_dedup", 7, id="semantic_dedup"),
+        # 54 rows, 1 plane per band: some bucket holds >= 27
+        pytest.param("embedding_contamination_lsh", 7, id="contamination"),
+    ],
+)
+def test_split_matches_unsplit(spark, op, cap):
+    """A bucket or cluster above the row cap is scored as sub-block
+    tiles — (gi <= gj) block pairs for self pairs, (train block, eval
+    block) for contamination. The output must equal the one-tile plan's,
+    and each fixture is built so that the cap forces the split."""
+    from pyspark.sql import functions as F
+
+    emb = spark.createDataFrame(
+        _one_direction_rows(), "vec_id long, embedding array<float>"
+    )
+    if op == "semantic_dedup":
+        cents = [[1.0] + [0.0] * 63]
+
+        def run(rows):
+            return dedup.semantic_dedup(
+                emb, threshold=0.99, centroids=cents, max_cluster_rows=rows
+            )
+    elif op == "embedding_near_duplicates_lsh":
+
+        def run(rows):
+            return dedup.embedding_near_duplicates_lsh(
+                emb, threshold=0.99, max_bucket_rows=rows
+            )
+    else:
+        # every third vector re-enters as an eval item under id + 100
+        evals = emb.filter(F.col("vec_id") % 3 == 0).select(
+            (F.col("vec_id") + 100).alias("vec_id"), "embedding"
+        )
+
+        def run(rows):
+            return dedup.embedding_contamination_lsh(
+                evals, emb, threshold=0.99, max_bucket_rows=rows
+            )
+
+    split = sorted(map(tuple, run(cap).collect()))
+    whole = sorted(map(tuple, run(10**9).collect()))
+    assert split == whole
+    if op == "semantic_dedup":
+        assert sum(not r[3] for r in whole) == 9  # 10 dups, 1 survivor
+    else:
+        assert whole, "fixture produced no pairs: test is vacuous"
 
 
 def test_planted_twin_corpus_and_auto_lsh_default(spark):

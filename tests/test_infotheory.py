@@ -661,10 +661,11 @@ def test_no_raw_transcendentals_in_any_oracle():
     arguments (the round-9 landmine), so any gated log/exp must compile
     to the detmath sqrt/squaring chains. This guard keeps a future
     'simplification' from re-arming the coin flip."""
+    import os
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     pat = re.compile(r"(?<![a-zA-Z_])(ln|exp|log|log2|log10)\s*\(")

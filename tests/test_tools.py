@@ -231,6 +231,39 @@ def test_gate_matches_memo_free_consumers():
     assert proc.stdout.rstrip().endswith("ALL MATCH"), proc.stdout[-4000:]
 
 
+def test_workers_import_package_from_any_directory(tmp_path):
+    """A driver started outside the checkout, with no PYTHONPATH, runs
+    an Arrow operator whose worker function refers to package code:
+    get_spark puts the package on the Python workers' module path."""
+    code = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from sfcrimedatapipeline_spark.operators import dedup
+        from sfcrimedatapipeline_spark.session import get_spark
+
+        spark = get_spark(cpus=1)
+        emb = spark.createDataFrame(
+            [(i, [1.0, float(i % 3), 0.5]) for i in range(6)],
+            "vec_id long, embedding array<float>",
+        )
+        print(len(dedup.embedding_near_duplicates_lsh(emb, dim=3, threshold=0.5).collect()))
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert int(proc.stdout.split()[-1]) > 0
+
+
 # ------------------------------------------- VERDICT r10 #2: replica gate
 def test_replica_rejects_list_cells():
     """The driver's canonicalizer sorts result frames with pandas

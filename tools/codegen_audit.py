@@ -35,7 +35,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ONLY = set(sys.argv[2:])
@@ -84,7 +85,7 @@ def main() -> int:
         print("ERROR: zero queries ran")
         return 2
     out_path = os.environ.get(
-        "SPARK_GRAFT_CODEGEN_OUT", "/root/repo/CODEGEN_AUDIT.json"
+        "SPARK_GRAFT_CODEGEN_OUT", os.path.join(REPO, "CODEGEN_AUDIT.json")
     )
     payload = {
         "sf_dir": SF_DIR,

@@ -44,10 +44,11 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.scale_probe/sf1"
+DST = os.path.join(REPO, ".scale_probe", "sf1")
 #: SPARK_GRAFT_PROBE_COPIES=100 probes the ~sf10 frontier (VERDICT r10
 #: #8) — the artifact's "sf1" keys then mean "the scaled copy" and the
 #: recorded ``copies`` field names the actual multiplier.
@@ -414,7 +415,7 @@ def main() -> None:
                 payload["queries"] = {**prior.get("queries", {}), **results}
         with open(sys.argv[1], "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
-    shutil.rmtree("/root/repo/.scale_probe", ignore_errors=True)
+    shutil.rmtree(os.path.dirname(DST), ignore_errors=True)
 
 
 if __name__ == "__main__":
