@@ -33,7 +33,9 @@ and the MEDIAN is reported: this container shows real 10-20 s
 per-query variance spikes (round-1 bench recorded text_lang_id at
 10 s vs a 0.4-0.9 s steady state), and a median of 3 makes a single
 GC/compaction/noisy-neighbor event invisible instead of defining the
-recorded number.
+recorded number. The artifact's ``compiles`` map counts the generated
+classes each query compiled during its timed runs; a nonzero count
+means the sf0.001 warm-up did not warm that query.
 """
 
 from __future__ import annotations
@@ -146,8 +148,16 @@ def _write_new_artifact(payload: dict, cpus: int, sf: float) -> str:
             path = f"{stem}_{n}{ext}"
 
 
-def _run_one(spark, fn, reps: int, noop_sink: bool = False) -> float:
-    """Warm at sf0.001, then ``reps`` timed runs at SF_DIR; median."""
+def _compiled_classes(spark) -> int:
+    """Generated classes the session's JVM has compiled so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _run_one(spark, fn, reps: int, noop_sink: bool = False) -> tuple[float, int]:
+    """Warm at sf0.001, then ``reps`` timed runs at SF_DIR → (median,
+    classes compiled during the timed runs). A nonzero count means the
+    warm-up did not warm that query."""
 
     def run(df):
         if noop_sink:
@@ -159,6 +169,7 @@ def _run_one(spark, fn, reps: int, noop_sink: bool = False) -> float:
         run(fn(spark, WARM_SF_DIR))  # compile/JIT warm-up (module doc)
         spark.catalog.clearCache()
     samples = []
+    compiled = _compiled_classes(spark)
     for _ in range(reps):
         t0 = time.perf_counter()
         run(fn(spark, SF_DIR))
@@ -167,7 +178,7 @@ def _run_one(spark, fn, reps: int, noop_sink: bool = False) -> float:
         # frames); drop them between runs so storage memory from one
         # run doesn't evict/execute-spill the next
         spark.catalog.clearCache()
-    return round(statistics.median(samples), 3)
+    return round(statistics.median(samples), 3), _compiled_classes(spark) - compiled
 
 
 def main() -> None:
@@ -188,13 +199,14 @@ def main() -> None:
     spark.range(64, numPartitions=64).mapInPandas(_noop, "id long").count()
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
     only = set(sys.argv[1:])
     for name, fn in e.queries().items():
         if (only and name not in only) or (not only and name in BENCH_SKIP):
             continue
         try:
-            timings[name] = _run_one(
+            timings[name], compiles[name] = _run_one(
                 spark, fn, REPS, noop_sink=name in BENCH_NOOP_SINK
             )
         except Exception as ex:  # one bad query must not zero the artifact
@@ -208,6 +220,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "compiles": compiles,
         "sf": _sf_from_dir(SF_DIR),
         "cpus": cpus,
         "reps": REPS,

@@ -39,7 +39,7 @@ _EXIT_DIRS: set[str] = set()
 def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = False):
     """Lineage truncation for iterative loops: a RELIABLE checkpoint
     when a directory is given (written to that path — survives executor
-    loss, the cluster setting; VERDICT r4 #6), else ``localCheckpoint``
+    loss, the cluster setting), else ``localCheckpoint``
     (blocks live only in executor storage — fine for local mode, lost
     on executor death). Lazy either way; the caller's next action
     materializes it."""
@@ -51,7 +51,7 @@ def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = False)
         # Compare the parent path exactly — a substring test
         # false-positives on prefix-sharing dirs ('/data/ckpt' inside
         # 'file:/data/ckpt2/<uuid>') and silently checkpoints to the
-        # wrong mount (round-5 review).
+        # wrong mount.
         want = "/" + checkpoint_dir.strip("/")
         parent = None
         if current is not None:
@@ -107,8 +107,8 @@ def keep_alive_until_released(result, *holders):
     :func:`unpersist_when_released` result — the derived frame
     references the PLAN, not the Python wrapper, so chaining
     ``op(...).orderBy(...)`` would otherwise drop the wrapper and fire
-    its unpersist finalizer before any action runs (round-10 review:
-    graph_hits_dup made the hits() cache fix inert this way). Returns
+    its unpersist finalizer before any action runs, so the derived
+    frame would recompute what the cache was kept for. Returns
     ``result``."""
 
     def _noop(hs=list(holders)):

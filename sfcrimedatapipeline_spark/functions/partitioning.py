@@ -8,61 +8,7 @@ they fan work out across cores before CPU-heavy per-row operators
 
 from __future__ import annotations
 
-import math
-import os
-
 from pyspark.sql import DataFrame
-
-#: (scan path, mtime_ns fingerprint, target) → estimated scan
-#: partition count. Pure filesystem metadata, never query results; the
-#: mtime fingerprint invalidates the entry when the parquet is
-#: regenerated in place.
-_EST_CACHE: dict[tuple, int] = {}
-
-
-def _data_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    out = []
-    for dirpath, _dirs, files in os.walk(path):
-        out += [
-            os.path.join(dirpath, f)
-            for f in files
-            if not f.startswith((".", "_"))
-        ]
-    return out
-
-
-def _estimated_scan_partitions(spark, path: str) -> int | None:
-    """Replays Spark's FilePartition packing math (maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))) from
-    os.stat alone — the same estimate the scan node will produce,
-    without converting the plan to an RDD. Returns None when the path
-    can't be statted (caller falls back to df.rdd)."""
-    try:
-        files = _data_files(path)
-        if not files:
-            return None
-        stats = [os.stat(f) for f in files]
-    except OSError:
-        return None
-    key = (path, tuple(s.st_mtime_ns for s in stats))
-    hit = _EST_CACHE.get(key)
-    if hit is not None:
-        return hit
-    jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
-    open_cost = jutils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
-    )
-    max_pb = jutils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-    )
-    total = sum(s.st_size for s in stats) + open_cost * len(stats)
-    bytes_per_core = total / max(1, spark.sparkContext.defaultParallelism)
-    max_split = min(max_pb, max(open_cost, bytes_per_core))
-    est = max(1, math.ceil(total / max(1, max_split)))
-    _EST_CACHE[key] = est
-    return est
 
 
 def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -70,22 +16,11 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
 
     The shuffle only fires when the input has fewer than half the target
     partitions — a 100 TB scan with thousands of splits passes through
-    untouched, while a one-file local read fans out to all cores.
-
-    For a frame fresh off ``sources/tables.read_table`` (carrying its
-    ``_sg_scan_path`` breadcrumb) the partition count is ESTIMATED from
-    file sizes with Spark's own split-packing formula — pure os.stat,
-    no ``df.rdd`` physical-plan conversion (~40 ms of driver time per
-    call, which nearly every declared query paid once or twice).
-    Derived frames keep the exact ``df.rdd`` check.
+    untouched, while a one-file local read fans out to all cores. The
+    partition count is the one the scan itself reports.
     """
     spark = df.sparkSession
     target = min_parts or spark.sparkContext.defaultParallelism
-    floor = max(2, target // 2)
-    path = getattr(df, "_sg_scan_path", None)
-    n = _estimated_scan_partitions(spark, path) if path else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-    if n < floor:
+    if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df

@@ -62,12 +62,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ]
     for c in ntz_cols:
         df = df.withColumn(c, df[c].cast("timestamp"))
-    # breadcrumb for functions/partitioning.ensure_min_partitions: the
-    # scan's source path lets the under-partitioning check run as pure
-    # os.stat math instead of a df.rdd physical-plan conversion
-    # (~40 ms of driver time per call, paid by nearly every query).
-    # Derived frames drop the attribute, which is the correct signal.
-    df._sg_scan_path = path
     return df
 
 

@@ -203,3 +203,29 @@ def test_refresh_caches_are_released_with_its_tables(spark, staging_file, tmp_pa
     del tables
     gc.collect()
     assert jsc.getPersistentRDDs().size() <= base
+
+
+def _compiled_classes(spark) -> int:
+    """Generated classes the session's JVM has compiled so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_refresh_compiles_nothing(spark, staging):
+    """The daily refresh runs the same plan shapes every time, and the
+    session's generated-code cache holds all of them: a second refresh
+    in the same session compiles no new class. Each refresh's tables
+    are dropped before the next, so both see the same cached state."""
+
+    def refresh():
+        tables = run_pipeline(spark, staging, serve=True)
+        tables["ServeInitialReports"].collect()
+        for df in tables.values():
+            df.count()
+        del tables
+        gc.collect()
+
+    refresh()
+    before = _compiled_classes(spark)
+    refresh()
+    assert _compiled_classes(spark) - before == 0

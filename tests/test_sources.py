@@ -224,6 +224,19 @@ def test_read_table_normalizes_tz_naive_timestamps(spark, tmp_path):
         assert got[0].us == int(t0.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
 
 
+def test_small_single_file_read_fans_out(spark):
+    """A table read from one small parquet file is one scan partition,
+    so ``ensure_min_partitions`` fans it out to the target. The target
+    is passed explicitly: the session's own parallelism is high enough
+    that any under-partitioned read would fan out."""
+    from sfcrimedatapipeline_spark.functions.partitioning import ensure_min_partitions
+    from sfcrimedatapipeline_spark.sources.tables import read_table
+
+    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
+    assert docs.rdd.getNumPartitions() == 1
+    assert ensure_min_partitions(docs, 4).rdd.getNumPartitions() == 4
+
+
 def test_jsonl_permissive_quarantines_corrupt_lines(spark, tmp_path):
     """PERMISSIVE ingest: valid lines parse, malformed lines land whole
     in _corrupt_record with data columns NULL — every input line is
