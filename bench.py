@@ -6,11 +6,10 @@
      "n_queries": N, "queries": {<top-10 slowest>}, "sf": ...,
      "full": "BENCH_FULL_c32_sf0.1.json"}
 
-The stdout line is deliberately SMALL: rounds 4-6 shipped a driver
-artifact with ``"parsed": null`` because the full 300-query map made
-the single line longer than the driver's stdout capture, so the tail
-truncated mid-JSON (VERDICT r6 #1). The COMPLETE per-query map of an
-unfiltered run is written to ``BENCH_FULL_c{cpus}_sf{sf}.json`` at the
+The stdout line is deliberately SMALL: a line carrying the full
+per-query map is longer than a bounded stdout capture, which then cuts
+it mid-JSON and leaves nothing parseable. The COMPLETE per-query map
+of an unfiltered run is written to ``BENCH_FULL_c{cpus}_sf{sf}.json`` at the
 repo root (override with $SPARK_GRAFT_BENCH_OUT). An existing artifact
 is never overwritten: the next free ``_2``, ``_3``… suffix is taken,
 so runs at different core counts or scales cannot clobber each other.
@@ -29,11 +28,10 @@ number is the steady-state, data-proportional cost — the quantity that
 scales to the cluster.
 
 Each query is then timed ``$SPARK_GRAFT_BENCH_REPS`` times (default 3)
-and the MEDIAN is reported: this container shows real 10-20 s
-per-query variance spikes (round-1 bench recorded text_lang_id at
-10 s vs a 0.4-0.9 s steady state), and a median of 3 makes a single
-GC/compaction/noisy-neighbor event invisible instead of defining the
-recorded number. The artifact's ``compiles`` map counts the generated
+and the MEDIAN is reported: a container can show 10-20 s per-query
+variance spikes against a sub-second steady state, and a median of 3
+makes a single GC/compaction/noisy-neighbor event invisible instead of
+defining the recorded number. The artifact's ``compiles`` map counts the generated
 classes each query compiled during its timed runs; a nonzero count
 means the sf0.001 warm-up did not warm that query.
 """
@@ -81,11 +79,10 @@ BENCH_SKIP = {
 
 
 #: Queries whose OUTPUT is the full per-(key, period) spine — ~1M rows
-#: at sf0.1. For three rounds their "slowest query" bench lines were
-#: ~85% driver Row serialization under the collect contract, not
-#: operator dataflow (VERDICT r7 #4). These are measured with a noop
-#: sink (materializes every output column executor-side, zero driver
-#: transfer — the scale_probe discipline): at 100 TB a resampled
+#: at sf0.1. Under the collect contract their bench numbers are ~85%
+#: driver Row serialization, not operator dataflow. These are measured
+#: with a noop sink (materializes every output column executor-side,
+#: zero driver transfer — the scale_probe discipline): at 100 TB a resampled
 #: series feeds the next operator, it never collects to a driver. The
 #: bounded-output audit twin (events_resample_gap_stats) stays on the
 #: collect contract like every other query.
@@ -95,15 +92,11 @@ BENCH_NOOP_SINK = {
     "lineitem_unpivot_measures",
     "events_resample_locf",
     "events_resample_interp",
-    # OPTIMIZATION r12: the same audit applied to the whole surface
-    # (guide §1.4). Rule: output ≥ 250k rows at sf0.1 AND measured
-    # collect ≥ 2x the noop sink (medians of 3, one window — the
-    # per-query table is in OPTIMIZATION_r12.md). For these the
-    # recorded number was 55-85% driver Row pickling of a full join/
-    # pair/melt spine that at 100 TB feeds the next operator and never
-    # collects; a real compute regression would be invisible inside
-    # it. Old collect-contract numbers are kept in
-    # BENCH_FULL_r12_before.json and all prior BENCH_FULL_r* artifacts.
+    # Rule: output ≥ 250k rows at sf0.1 AND collect ≥ 2x the noop
+    # sink. Such a number is mostly driver Row pickling of a full
+    # join/pair/melt spine that at 100 TB feeds the next operator and
+    # never collects; a real compute regression would be invisible
+    # inside it. (The per-row ratios below were measured on 32 cores.)
     "j3_dim_aliased_twice",       # 600k rows, 4.4x
     "j5_composite_null_keys",     # 600k rows, 4.8x
     "j9_salted_skew_join",        # 600k rows, 2.6x

@@ -87,7 +87,18 @@ def fixpoint(state, step, rounds: int, probe=None, checkpoint_dir: str | None = 
     two rounds share one plan (a lazy cut in between would only add
     jobs — adaptive execution runs a plan's shuffle stages when the cut
     is taken), and the returned state no longer depends on the
-    caller's cached inputs."""
+    caller's cached inputs.
+
+    Without ``checkpoint_dir`` the cuts are ``localCheckpoint`` RDDs in
+    executor storage (listed as ``MapPartitionsRDD ... at
+    localCheckpoint`` among the persistent RDDs). Only the JVM
+    ContextCleaner frees them, once their state is garbage:
+    ``DataFrame.unpersist`` on a state does not reach them, and
+    unpersisting the checkpoint RDD itself makes every later read of
+    that state fail with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. So a
+    caller that drops its result (e.g. ``dedup.semantic_dedup``,
+    through ``corpus.connected_components``) leaves them listed until
+    the JVM collects them."""
     probes: list = []
     for r in range(rounds):
         prev = state

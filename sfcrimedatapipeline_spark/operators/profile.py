@@ -26,14 +26,12 @@ def exact_quantiles(df: DataFrame, col: str, probs: list[float]) -> DataFrame:
     """Exact linear-interpolation quantiles of a numeric column,
     computed distributed (no driver collect, no approximation).
 
-    Ranking is TWO-PHASE (the ``dense_ids`` recipe from
-    ``operators/keys.py``): range-repartition on the value so
-    partitions are globally ordered, ``row_number`` WITHIN each
-    partition, then add exact per-partition offsets from a one-row-
-    per-partition count aggregate broadcast back. No partition-less
-    window — the column is never funneled through one task, so the
-    operator survives a 100 TB column where the old global
-    ``row_number().over(Window.orderBy(...))`` form would not.
+    Ranking goes through ``operators/keys.py:dense_ids`` (the two-phase
+    prefix kernel: range-repartition on the value, a running count
+    within each partition, exact per-partition offsets). No
+    partition-less window — the column is never funneled through one
+    task, so the operator survives a 100 TB column where a global
+    ``row_number().over(Window.orderBy(...))`` would not.
 
     For each prob p: position h = p·(n-1) (0-based), value =
     v[floor(h)] + (v[ceil(h)] - v[floor(h)])·(h - floor(h)) — the
@@ -43,30 +41,13 @@ def exact_quantiles(df: DataFrame, col: str, probs: list[float]) -> DataFrame:
     last ulp. Engine-identical arithmetic: h is a product of exact
     doubles, the interpolation is 3 IEEE ops in a fixed order.
     """
-    from pyspark.sql import Window
+    from sfcrimedatapipeline_spark.operators.keys import dense_ids
 
     vals = df.select(F.col(col).cast("double").alias("__v"))
-    # phase 1: globally-ordered partitions + local 1-based rank.
-    # F.asc = NULLS FIRST, matching the old global window's default.
-    sorted_df = vals.repartitionByRange(F.asc("__v")).sortWithinPartitions(
-        F.asc("__v")
-    )
-    pid = F.spark_partition_id()
-    local_w = Window.partitionBy(pid).orderBy(F.asc("__v"))
-    with_local = sorted_df.select(
-        pid.alias("__pid"),
-        F.row_number().over(local_w).cast("long").alias("__local"),
-        "__v",
-    )
-    # phase 2: exact offsets — one row per partition, cumulated with a
-    # window-free triangular join (operators/keys.py:partition_offsets)
-    # and broadcast back.
-    from sfcrimedatapipeline_spark.operators.keys import partition_offsets
-
-    counts = with_local.groupBy("__pid").agg(F.max("__local").alias("__n"))
-    offsets = partition_offsets(counts)
-    ranked = with_local.join(F.broadcast(offsets), "__pid").select(
-        "__v", (F.col("__local") + F.col("__offset") - 1).alias("__r")
+    # 0-based rank; the Column F.asc keeps NULLS FIRST (dense_ids would
+    # put a bare column name NULLS LAST)
+    ranked = dense_ids(vals, [F.asc("__v")], "__id").select(
+        "__v", (F.col("__id") - 1).alias("__r")
     )
     n = df.count()  # driver scalar (an aggregate, not a row collect)
 
@@ -531,7 +512,7 @@ def validate_embeddings(
     # a NULL ELEMENT is its own failure mode: exists(isnan) over it
     # yields NULL→false, so without this check a [NULL, …] vector of
     # the right length would pass as valid and poison every downstream
-    # dot product with NULL (round-5 review)
+    # dot product with NULL
     has_null_elem = F.coalesce(
         F.exists(v, lambda x: x.isNull()), F.lit(False)
     )
@@ -908,18 +889,14 @@ def mann_whitney_u(
 
     Scale shape: ranks are never materialized per row. Values collapse
     to (value, count_a, count_b) — one map-side-combined aggregate —
-    and the rank-before-each-value prefix sum over the distinct-value
-    frame is TWO-PHASE (range-repartition + local running sum + exact
-    per-partition offsets via the triangular ``partition_offsets``
-    join): no partition-less window even when the distinct-value count
-    scales with the data. Tie handling is the textbook average-rank:
-    a value with t ties contributes c_a·(2·before + t + 1)/2 to
-    group a's rank sum — kept doubled (integer) until the end.
+    and each distinct value's doubled midrank comes from
+    :func:`_doubled_avg_ranks` (the two-phase prefix kernel over the
+    distinct-value frame): no partition-less window even when the
+    distinct-value count scales with the data. Tie handling is the
+    textbook average-rank: a value with t ties contributes
+    c_a·(2·before + t + 1)/2 to group a's rank sum — kept doubled
+    (integer) until the end.
     """
-    from pyspark.sql import Window
-
-    from sfcrimedatapipeline_spark.operators.keys import partition_offsets
-
     d = df.filter(F.col(group_col).isin([group_a, group_b])).select(
         F.col(value_col).cast("long").alias("__v"),
         F.when(F.col(group_col) == group_a, 1).otherwise(0).alias("__is_a"),
@@ -929,41 +906,8 @@ def mann_whitney_u(
         F.sum(1 - F.col("__is_a")).cast("long").alias("__c2"),
         F.count("*").alias("__t"),
     )
-    # eager lineage cut (round-10 adjudication of events_purchase_auc):
-    # downstream, vc is consumed THREE times per action — the range
-    # partitioner's sampling pass plus the with_run plan's two branches
-    # (the offsets aggregate and the main join) — so without this the
-    # full input scan+aggregate re-runs up to 3x. vc is one row per
-    # DISTINCT value (bounded by the value domain, not the data), so
-    # the checkpoint is tiny. At sf0.1 (100k input rows) the isolated
-    # wall is scheduling-overhead-dominated and unchanged within the
-    # ±25% noise band; the win is input-proportional — at cluster
-    # scale the input scan runs once instead of three times.
-    from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
-
-    vc = truncate_lineage(vc, eager=True)
-    sorted_df = vc.repartitionByRange(F.asc("__v")).sortWithinPartitions(
-        F.asc("__v")
-    )
-    pid = F.spark_partition_id()
-    local_w = (
-        Window.partitionBy(pid)
-        .orderBy(F.asc("__v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    with_run = sorted_df.select(
-        pid.alias("__pid"),
-        F.sum("__t").over(local_w).alias("__run"),
-        "__v",
-        "__c1",
-        "__c2",
-        "__t",
-    )
-    counts = with_run.groupBy("__pid").agg(F.max("__run").alias("__n"))
-    offsets = partition_offsets(counts)
-    g = with_run.join(F.broadcast(offsets), "__pid")
-    before = F.col("__run") - F.col("__t") + F.col("__offset")
-    avg2 = before * 2 + F.col("__t") + 1  # doubled average rank of the tie block
+    g = _doubled_avg_ranks(vc, "__v")
+    avg2 = F.col("__r2")  # doubled average rank of the tie block
     td = F.col("__t").cast("decimal(38,0)")
     base = g.agg(
         F.sum("__c1").cast("long").alias("n_a"),
@@ -1013,15 +957,10 @@ def kruskal_wallis(
     counts) in one map-side-combined aggregate (groups land as COLUMNS
     via conditional sums, the ANOVA pivot, so the cross-group reduction
     is a fixed expression tree, never a partition-order double sum);
-    the rank-before-each-value prefix over the distinct-value frame is
-    TWO-PHASE (range-repartition + local running sum + triangular
-    ``partition_offsets``) — no partition-less window even when the
+    each distinct value's doubled midrank comes from
+    :func:`_doubled_avg_ranks` — no partition-less window even when the
     distinct-value count scales with the data.
     """
-    from pyspark.sql import Window
-
-    from sfcrimedatapipeline_spark.operators.keys import partition_offsets
-
     k = len(groups)
     d = df.filter(F.col(group_col).isin(groups)).select(
         F.col(value_col).cast("long").alias("__v"), F.col(group_col).alias("__g")
@@ -1035,25 +974,8 @@ def kruskal_wallis(
         ],
         F.count("*").alias("__t"),
     )
-    sorted_df = vc.repartitionByRange(F.asc("__v")).sortWithinPartitions(
-        F.asc("__v")
-    )
-    pid = F.spark_partition_id()
-    local_w = (
-        Window.partitionBy(pid)
-        .orderBy(F.asc("__v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    with_run = sorted_df.select(
-        pid.alias("__pid"),
-        F.sum("__t").over(local_w).alias("__run"),
-        "*",
-    )
-    counts = with_run.groupBy("__pid").agg(F.max("__run").alias("__n"))
-    offsets = partition_offsets(counts)
-    g = with_run.join(F.broadcast(offsets), "__pid")
-    before = F.col("__run") - F.col("__t") + F.col("__offset")
-    avg2 = (before * 2 + F.col("__t") + 1).cast("decimal(38,0)")
+    g = _doubled_avg_ranks(vc, "__v")
+    avg2 = F.col("__r2").cast("decimal(38,0)")
     td = F.col("__t").cast("decimal(38,0)")
     base = g.agg(
         *[
@@ -1126,42 +1048,23 @@ def roc_auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     )
 
 
-def _doubled_avg_ranks(df: DataFrame, col: str) -> DataFrame:
-    """Per DISTINCT value of ``col``: the DOUBLED average (midrank)
-    ``2·bef + t + 1`` — kept integer exactly like mann_whitney_u's tie
-    blocks — via the same two-phase prefix sum (range repartition +
-    local running sum + triangular partition offsets; never a
-    partition-less window). Returns ``(col, __r2)``."""
-    from pyspark.sql import Window
+def _doubled_avg_ranks(vc: DataFrame, col: str) -> DataFrame:
+    """The one midrank helper of the rank tests. ``vc`` is a
+    per-DISTINCT-value count frame: one row per value of ``col`` with
+    its tie count ``__t`` (any other columns are kept). Returns ``vc``
+    plus ``__r2 = 2·before + t + 1``, the DOUBLED average rank of the
+    value's tie block (``before`` = rows with a smaller value), kept
+    integer until the caller's final formula. The prefix is
+    ``keys.running_total`` over ``col`` ascending (NULLS FIRST), whose
+    lineage cut runs the input scan and the distinct-value aggregate
+    once, however many branches read the ranked frame.
+    """
+    from sfcrimedatapipeline_spark.operators.keys import running_total
 
-    from sfcrimedatapipeline_spark.operators.keys import partition_offsets
-
-    vc = df.groupBy(col).agg(F.count("*").cast("long").alias("__t"))
-    # same 3x-rescan lineage cut as mann_whitney_u (range sampling +
-    # two with_run branches); distinct-value cardinality keeps it tiny
-    from sfcrimedatapipeline_spark.functions.caching import truncate_lineage
-
-    vc = truncate_lineage(vc, eager=True)
-    sorted_df = vc.repartitionByRange(F.asc(col)).sortWithinPartitions(
-        F.asc(col)
+    before = F.col("__run") - F.col("__t")
+    return running_total(vc, [F.asc(col)], "__t", "__run").select(
+        *vc.columns, (before * 2 + F.col("__t") + 1).alias("__r2")
     )
-    pid = F.spark_partition_id()
-    local_w = (
-        Window.partitionBy(pid)
-        .orderBy(F.asc(col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    with_run = sorted_df.select(
-        pid.alias("__pid"),
-        F.sum("__t").over(local_w).alias("__run"),
-        col,
-        "__t",
-    )
-    counts = with_run.groupBy("__pid").agg(F.max("__run").alias("__n"))
-    offsets = partition_offsets(counts)
-    g = with_run.join(F.broadcast(offsets), "__pid")
-    before = F.col("__run") - F.col("__t") + F.col("__offset")
-    return g.select(col, (before * 2 + F.col("__t") + 1).alias("__r2"))
 
 
 def spearman_rho(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
@@ -1185,12 +1088,13 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         F.col(col_a).cast("long").alias("__a"),
         F.col(col_b).cast("long").alias("__b"),
     )
-    ra = _doubled_avg_ranks(d, "__a").select(
-        "__a", F.col("__r2").alias("__ra2")
-    )
-    rb = _doubled_avg_ranks(d, "__b").select(
-        "__b", F.col("__r2").alias("__rb2")
-    )
+
+    def midranks(c: str, alias: str) -> DataFrame:
+        vc = d.groupBy(c).agg(F.count("*").cast("long").alias("__t"))
+        return _doubled_avg_ranks(vc, c).select(c, F.col("__r2").alias(alias))
+
+    ra = midranks("__a", "__ra2")
+    rb = midranks("__b", "__rb2")
     j = d.join(ra, "__a").join(rb, "__b")
     xd = F.col("__ra2").cast("decimal(38,0)")
     yd = F.col("__rb2").cast("decimal(38,0)")

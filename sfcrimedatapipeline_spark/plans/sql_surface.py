@@ -919,7 +919,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("long").alias("one"),
     )
     cum = running_totals(
-        daily, [F.asc("day")], {"cents": "cum_cents", "one": "k"}
+        daily, [F.asc("day")], [("cents", "cum_cents"), ("one", "k")]
     )
     tot = daily.agg(
         F.sum("cents").cast("long").alias("t_cents"),

@@ -768,7 +768,7 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("k2"),
     )
-    cum = running_totals(cells, [F.asc("c")], {"k1": "cum1", "k2": "cum2"})
+    cum = running_totals(cells, [F.asc("c")], [("k1", "cum1"), ("k2", "cum2")])
     tot = cells.agg(
         F.sum("k1").cast("long").alias("n1"), F.sum("k2").cast("long").alias("n2")
     )
@@ -1825,7 +1825,7 @@ def events_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("k2"),
     )
-    cum = running_totals(cells, [F.asc("c")], {"k1": "cum1", "k2": "cum2"})
+    cum = running_totals(cells, [F.asc("c")], [("k1", "cum1"), ("k2", "cum2")])
     ranked = dense_ids(cum.select("c", "cum1", "cum2"), ["c"], "__r")
     nxt = ranked.select(
         (F.col("__r") - 1).alias("__r"), F.col("c").alias("c_next")

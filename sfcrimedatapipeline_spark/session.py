@@ -19,7 +19,8 @@ the same configuration:
 - A generated-code cache that holds the engine's whole working set of
   plan shapes, so a repeated refresh or corpus chain compiles its Java
   once per session instead of once per run (see
-  ``_CODEGEN_CACHE_ENTRIES``).
+  ``_CODEGEN_CACHE_ENTRIES``); generated class names leave out the
+  whole-stage id, so the cache matches a pipeline whatever id it gets.
 """
 
 from __future__ import annotations
@@ -62,6 +63,11 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # the cache is keyed by source text, and by default the class name
+        # carries the whole-stage id, which adaptive execution assigns in
+        # stage-completion order: an unchanged pipeline that lands on
+        # another id recompiles (2-6 classes on some repeated refreshes)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.default.parallelism", str(n))
         .config("spark.sql.adaptive.enabled", "true")

@@ -9,6 +9,7 @@ import itertools
 import random
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from sfcrimedatapipeline_spark.operators.profile import (
@@ -105,16 +106,35 @@ def test_skyline_band_prune_bound(spark):
     assert len(cand) <= n // 20, f"candidates {len(cand)} exceed 5% of {n}"
 
 
-def test_kruskal_wallis_matches_pure_python(spark):
+# 1/7/16: the hand example under each input partitioning. "range":
+# 150k mostly-distinct values from spark.range — large enough that the
+# branches of the prefix kernel disagree on partitions unless they read
+# one range exchange (when each ran its own, the join back lost about
+# half the rows).
+@pytest.mark.parametrize("parts", [1, 7, 16, "range"])
+def test_kruskal_wallis_matches_pure_python(spark, parts):
     from sfcrimedatapipeline_spark.operators.profile import kruskal_wallis
 
-    data = {
-        "a": [1, 2, 3, 3],
-        "b": [2, 3, 4, 9],
-        "c": [10, 11, 11, 2],
-    }
-    rows = [(g, v) for g, vs in data.items() for v in vs]
-    df = spark.createDataFrame(rows, "grp string, v long")
+    if parts == "range":
+        n_rows, mult, mod = 150_000, 2654435761, 1_000_003
+        data = {
+            g: [i * mult % mod for i in range(k, n_rows, 3)]
+            for k, g in enumerate("abc")
+        }
+        df = spark.range(n_rows).select(
+            F.substring(F.lit("abc"), (F.col("id") % 3 + 1).cast("int"), 1).alias(
+                "grp"
+            ),
+            (F.col("id") * mult % mod).alias("v"),
+        )
+    else:
+        data = {
+            "a": [1, 2, 3, 3],
+            "b": [2, 3, 4, 9],
+            "c": [10, 11, 11, 2],
+        }
+        rows = [(g, v) for g, vs in data.items() for v in vs]
+        df = spark.createDataFrame(rows, "grp string, v long").repartition(parts)
     got = kruskal_wallis(df, "v", "grp", ["a", "b", "c"]).collect()[0]
 
     # textbook reference: average ranks over the pooled sample

@@ -568,7 +568,7 @@ def _is_partitioned(window_line: str) -> bool:
 def test_exact_quantiles_has_no_global_window(spark):
     # the r5 verdict's #1: the old form funneled the whole column
     # through ONE task via row_number().over(Window.orderBy(...)).
-    # The two-phase rank's only windows partition by spark_partition_id.
+    # The two-phase rank's only windows partition by the partition tag.
     from sfcrimedatapipeline_spark.operators.profile import exact_quantiles
 
     df = spark.range(1000).selectExpr("cast(id as double) as v")
@@ -597,7 +597,7 @@ def test_dense_ids_and_load_order_have_no_global_window(spark):
 def test_pareto_gini_pps_equidepth_have_no_global_window(spark):
     # every remaining global ranking/cumulation over a frame whose
     # cardinality SCALES with SF rides the two-phase recipe — the only
-    # windows left partition by spark_partition_id (or the group key)
+    # windows left partition by the partition tag (or the group key)
     from sfcrimedatapipeline_spark.plans import corpus_queries, sql_surface
 
     for name, mod in (

@@ -63,7 +63,7 @@ CROSS_OK: dict[str, str] = {
     "ann_sq8_topk": "crossJoin(broadcast(1-row per-dim bounds)) x2 + broadcast query codes",
     "docs_compaction_plan": "running_total's triangular offset join: bounded by partition count, never data",
     "events_ks_drift": "crossJoin(broadcast(1-row n1/n2 totals))",
-    "events_emd_drift": "crossJoin(broadcast(1-row n1/n2 totals)) + partition_offsets (P-bounded)",
+    "events_emd_drift": "crossJoin(broadcast(1-row n1/n2 totals)) + running_totals' partition_offsets (P-bounded)",
     "orders_assoc_rules": "crossJoin(broadcast(1-row n_orders total))",
     "orders_seasonal_indices": "crossJoin(broadcast(1-row grand totals))",
     "events_cusum_changepoint": "crossJoin(broadcast(1-row n/T totals))",
@@ -129,8 +129,9 @@ CROSS_OK: dict[str, str] = {
     "geo_radius_pairs": "documented grid-blocked pair join",
     # verified in-plan (2026-08-14 sweep): BNLJ build side is a 1-row
     # scalar aggregate or the P-bounded partition_offsets triangular
-    # join (operators/keys.py:45 — one row per shuffle partition)
-    "w2_load_order_id": "partition_offsets triangular join (P-bounded)",
+    # join (operators/keys.py:partition_offsets — one row per shuffle
+    # partition; called by running_totals and load_order_id only)
+    "w2_load_order_id": "load_order_id's partition_offsets triangular join (P-bounded)",
     "q11_important_stock": "TPC-H Q11: 1-row scalar threshold subquery",
     "events_funnel": "BNLJ of three 1-row step counts",
     "text_bigram_collocations": "crossJoin(broadcast(1-row corpus totals)) x2",
@@ -143,7 +144,7 @@ CROSS_OK: dict[str, str] = {
     "docs_paragraph_filter": "crossJoin(broadcast(1-row percentile cutoff))",
     "docs_paragraph_buckets": "crossJoin(broadcast(1-row percentile cutoff)) x2",
     "corpus_ccnet_e2e": "composes docs_paragraph_filter's 1-row cutoff broadcast",
-    "sample_pps": "partition_offsets triangular join + 1-row total",
+    "sample_pps": "running_total's partition_offsets triangular join + 1-row W aggregate",
     # round-6b additions (verified in-plan): each BNLJ build side is
     # aggregate-bounded, never a data-cardinality frame
     "skyline_parts": "dominance anti-join over O(frontier) band-pruned candidates",
