@@ -6,8 +6,8 @@ cache must survive until the CALLER materializes the returned plan, so
 the operator cannot unpersist before returning — but the caller holds
 no handle on the intermediates, so without help the cached frames
 outlive the query and accumulate executor storage for the life of the
-session (ADVICE r4: cross_corpus_contamination leaked its tf/ef caches,
-triangle_count its edge list, exact_quantiles_by its ranked frame).
+session: every cache an operator takes must be released with the frame
+it returns.
 
 ``unpersist_when_released`` ties the intermediates' cache lifetime to
 the result object itself: when the caller drops its last reference to
@@ -15,9 +15,10 @@ the returned frame — which in CPython happens deterministically, right
 after ``collect()``/``toPandas()``/write in every normal call shape —
 the intermediates are unpersisted (non-blocking). It is for one-shot
 lazy plans; iterative operators (connected components, pagerank, BFS,
-k-core, label propagation, HITS) run through :func:`fixpoint`, which
-cuts every round's lineage through :func:`truncate_lineage` on one
-cadence.
+k-core, label propagation, HITS) run inside :func:`loop_scope`, without
+adaptive execution and on shuffles sized from their edge count, and
+loop through :func:`fixpoint`, which cuts every round's lineage through
+:func:`truncate_lineage` on one cadence.
 
 On-disk intermediates a query reads lazily (a persisted index, a stream
 fixture directory) cannot be deleted when the query returns either;
@@ -28,12 +29,19 @@ them all at interpreter exit.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import shutil
 import tempfile
 import weakref
 
 #: temp dirs created by exit_temp_dir and not yet reaped
 _EXIT_DIRS: set[str] = set()
+
+#: the two session settings a graph loop owns while it runs
+_ADAPTIVE = "spark.sql.adaptive.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+#: edges per shuffle partition inside a loop
+_EDGES_PER_PARTITION = 1_000_000
 
 
 def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = False):
@@ -69,25 +77,67 @@ def truncate_lineage(df, checkpoint_dir: str | None = None, eager: bool = False)
     return df.localCheckpoint(eager=eager)
 
 
+@contextlib.contextmanager
+def loop_scope(spark):
+    """Run an iterative operator, from its first persist to its return,
+    without adaptive execution and on shuffles sized from its data.
+    Yields ``size(edges)``.
+
+    With adaptive execution on, every query stage of every round is
+    submitted as its own job and re-planned, and a lineage cut runs the
+    stages of the plan it cuts as soon as it is taken: a loop over a few
+    KB of state pays per job, not per byte. A cached plan is planned
+    when ``persist()`` is called, so the scope is entered before the
+    operator's first persist. Without adaptive coalescing the state is
+    partitioned explicitly instead: ``size(edges)`` counts the
+    loop-invariant edge list (which also materializes its cache) and
+    sets ``spark.sql.shuffle.partitions`` to ``min(defaultParallelism,
+    1 + edges // 1_000_000)``, about a million edges per partition and
+    at most one task per core, so a small graph runs one task per stage
+    while a cluster-scale graph still fans out. Shuffles before the first ``size`` call run at the caller's
+    partition count, so an operator persists a shuffle-free projection
+    first and sizes from it. The trade: inside the loop there is no
+    runtime skew-join split and no broadcast promotion.
+
+    On exit, also on an exception, both settings get back the values
+    they had on entry, so scopes nest. The settings are session-wide:
+    a query running concurrently on the same session sees them too."""
+    conf = spark.conf
+    saved = [(k, conf.get(k)) for k in (_ADAPTIVE, _SHUFFLE_PARTITIONS)]
+    conf.set(_ADAPTIVE, "false")
+
+    def size(edges) -> None:
+        n = edges.count()
+        parts = min(spark.sparkContext.defaultParallelism, 1 + n // _EDGES_PER_PARTITION)
+        conf.set(_SHUFFLE_PARTITIONS, str(parts))
+
+    try:
+        yield size
+    finally:
+        for k, v in saved:
+            conf.set(k, v)
+
+
 def fixpoint(state, step, rounds: int, probe=None, checkpoint_dir: str | None = None):
     """Iterate ``state = step(state)`` for at most ``rounds`` rounds →
     ``(state, probes)``. The one round loop behind every iterative
     graph operator: it owns the round cap, the lineage cut and its
     cadence, and the convergence stop.
 
-    Lineage is cut through :func:`truncate_lineage` (reliable under
-    ``checkpoint_dir``, else executor-local) on one cadence. With a
-    ``probe``, every round is cut lazily and ``probe(prev_state,
-    state)`` — an action over the new state — materializes the cut; its
-    value is appended to ``probes`` and the loop stops as soon as a
-    value equals the previous round's. A probe must therefore repeat
-    only at a fixed point (monotone scalars do; an exact check can live
-    in the value's ``__eq__``). Without a probe nothing would force a
-    lazy cut, so every second round and the last one are cut eagerly:
-    two rounds share one plan (a lazy cut in between would only add
-    jobs — adaptive execution runs a plan's shuffle stages when the cut
-    is taken), and the returned state no longer depends on the
-    caller's cached inputs.
+    Every round's lineage is cut lazily through :func:`truncate_lineage`
+    (reliable under ``checkpoint_dir``, else executor-local). Inside a
+    :func:`loop_scope` a lazy cut runs no job when it is taken, so the
+    cut only keeps each round's plan one round deep; the first job that
+    reads a state materializes it. With a ``probe``, ``probe(prev_state,
+    state)`` is that job — an action over the new state; its value is
+    appended to ``probes`` and the loop stops as soon as a value equals
+    the previous round's. A probe must therefore repeat only at a fixed
+    point (monotone scalars do; an exact check can live in the value's
+    ``__eq__``). Without a probe, the next round's broadcast of a small
+    state, or else the last round's cut, which is eager, runs the
+    rounds; the eager cut also frees the returned state from the
+    caller's cached inputs. Eager cuts on more rounds only add jobs
+    (two per five pagerank rounds, cutting every second round eagerly).
 
     Without ``checkpoint_dir`` the cuts are ``localCheckpoint`` RDDs in
     executor storage (listed as ``MapPartitionsRDD ... at
@@ -102,9 +152,8 @@ def fixpoint(state, step, rounds: int, probe=None, checkpoint_dir: str | None = 
     probes: list = []
     for r in range(rounds):
         prev = state
-        state = step(prev)
-        if probe is not None or r % 2 == 1 or r == rounds - 1:
-            state = truncate_lineage(state, checkpoint_dir, eager=probe is None)
+        last = probe is None and r == rounds - 1
+        state = truncate_lineage(step(prev), checkpoint_dir, eager=last)
         if probe is not None:
             probes.append(probe(prev, state))
             if len(probes) > 1 and probes[-1] == probes[-2]:

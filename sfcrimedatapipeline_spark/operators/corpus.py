@@ -18,7 +18,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-from sfcrimedatapipeline_spark.functions.caching import fixpoint, truncate_lineage
+from sfcrimedatapipeline_spark.functions.caching import (
+    fixpoint,
+    loop_scope,
+    truncate_lineage,
+)
 
 
 def connected_components(
@@ -66,44 +70,46 @@ def connected_components(
         return _cc_two_phase(pairs, src_col, dst_col, max_iters, checkpoint_dir)
     if algorithm != "label_prop":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
-    fwd = pairs.select(
-        F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
-    )
-    # persist the MIRRORED list: everything upstream (often a whole
-    # minhash dedup pipeline) must run exactly once — nodes and the
-    # self-looped edge list both derive from this cache
-    both = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    nodes = both.select(F.col("src").alias("id")).distinct().persist()
-    edges = (
-        both.union(nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-        .persist()
-    )
-
-    def _round(labels: DataFrame) -> DataFrame:
-        return (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
-            .withColumnRenamed("src", "id")
+    with loop_scope(pairs.sparkSession) as size:
+        fwd = pairs.select(
+            F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
+        )
+        # persist the MIRRORED list: everything upstream (often a whole
+        # minhash dedup pipeline) must run exactly once — nodes and the
+        # self-looped edge list both derive from this cache
+        both = fwd.union(
+            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).persist()
+        size(both)
+        nodes = both.select(F.col("src").alias("id")).distinct().persist()
+        edges = (
+            both.union(nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
+            .persist()
         )
 
-    def _label_sum(_, labels: DataFrame):
-        return labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
+        def _round(labels: DataFrame) -> DataFrame:
+            return (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src")
+                .agg(F.min("label").alias("label"))
+                .withColumnRenamed("src", "id")
+            )
 
-    labels, _ = fixpoint(
-        nodes.withColumn("label", F.col("id")),
-        _round,
-        max_iters,
-        _label_sum,
-        checkpoint_dir,
-    )
-    both.unpersist()
-    edges.unpersist()
-    nodes.unpersist()
+        def _label_sum(_, labels: DataFrame):
+            return labels.agg(
+                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+            ).first()["s"]
+
+        labels, _ = fixpoint(
+            nodes.withColumn("label", F.col("id")),
+            _round,
+            max_iters,
+            _label_sum,
+            checkpoint_dir,
+        )
+        both.unpersist()
+        edges.unpersist()
+        nodes.unpersist()
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("canonical_id")
     )
@@ -135,78 +141,80 @@ def _cc_two_phase(
     Convergence probe: :class:`_EdgeSet` — a cheap signature per
     round, confirmed by an exact anti-join on a match.
     """
-    raw = pairs.select(
-        F.col(src_col).cast("long").alias("a"),
-        F.col(dst_col).cast("long").alias("b"),
-    )
-    # node universe from the UNFILTERED pairs: a node that appears only
-    # in self-loop rows is its own singleton component and must still
-    # get an output row — label_prop emits it, so the "same output
-    # contract" parity demands this side does too
-    all_nodes = (
-        raw.select(F.col("a").alias("id"))
-        .union(raw.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    fwd = raw.filter(F.col("a") != F.col("b")).persist()
-    # canonical undirected representation: (hi, lo) with hi > lo
-    edges = fwd.select(
-        F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-    ).distinct()
-
-    def _round(edges: DataFrame) -> DataFrame:
-        # large-star: group the MIRRORED neighborhood of u (u on the
-        # "hi" slot, each neighbor w on "lo"); every strictly-larger
-        # neighbor points at the neighborhood min. Each undirected edge
-        # enters exactly one group with lo > hi, so the union over
-        # groups IS the full rewired edge set.
-        nbrs = edges.select("hi", "lo").union(
-            edges.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
+    with loop_scope(pairs.sparkSession) as size:
+        raw = pairs.select(
+            F.col(src_col).cast("long").alias("a"),
+            F.col(dst_col).cast("long").alias("b"),
         )
-        m = nbrs.groupBy("hi").agg(
-            F.least(F.min("lo"), F.col("hi")).alias("m")
-        )
-        edges = (
-            nbrs.join(m, "hi")
-            .filter(F.col("lo") > F.col("hi"))
-            .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
+        # node universe from the UNFILTERED pairs: a node that appears only
+        # in self-loop rows is its own singleton component and must still
+        # get an output row — label_prop emits it, so the "same output
+        # contract" parity demands this side does too
+        all_nodes = (
+            raw.select(F.col("a").alias("id"))
+            .union(raw.select(F.col("b").alias("id")))
             .distinct()
         )
-        # mid-round lineage cut: the small-star step consumes the
-        # large-star output TWICE (the m2 aggregate and the rewire
-        # join), so without materialization the whole large-star
-        # subtree — two shuffles deep — recomputes per consumer. Lazy:
-        # the round's probe materializes it.
-        edges = truncate_lineage(edges, checkpoint_dir)
+        fwd = raw.filter(F.col("a") != F.col("b")).persist()
+        size(fwd)
+        # canonical undirected representation: (hi, lo) with hi > lo
+        edges = fwd.select(
+            F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
+        ).distinct()
 
-        # small-star: edges already point hi→lo; every smaller neighbor
-        # (and u itself) points at the min smaller neighbor
-        m2 = edges.groupBy("hi").agg(F.min("lo").alias("m"))
-        rewired = (
-            edges.join(m2, "hi")
-            .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+        def _round(edges: DataFrame) -> DataFrame:
+            # large-star: group the MIRRORED neighborhood of u (u on the
+            # "hi" slot, each neighbor w on "lo"); every strictly-larger
+            # neighbor points at the neighborhood min. Each undirected edge
+            # enters exactly one group with lo > hi, so the union over
+            # groups IS the full rewired edge set.
+            nbrs = edges.select("hi", "lo").union(
+                edges.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
+            )
+            m = nbrs.groupBy("hi").agg(
+                F.least(F.min("lo"), F.col("hi")).alias("m")
+            )
+            edges = (
+                nbrs.join(m, "hi")
+                .filter(F.col("lo") > F.col("hi"))
+                .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+                .filter(F.col("hi") != F.col("lo"))
+                .distinct()
+            )
+            # mid-round lineage cut: the small-star step consumes the
+            # large-star output TWICE (the m2 aggregate and the rewire
+            # join), so without materialization the whole large-star
+            # subtree — two shuffles deep — recomputes per consumer. Lazy:
+            # the round's probe materializes it.
+            edges = truncate_lineage(edges, checkpoint_dir)
+
+            # small-star: edges already point hi→lo; every smaller neighbor
+            # (and u itself) points at the min smaller neighbor
+            m2 = edges.groupBy("hi").agg(F.min("lo").alias("m"))
+            rewired = (
+                edges.join(m2, "hi")
+                .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+            )
+            self_edge = m2.select(F.col("hi"), F.col("m").alias("lo"))
+            return (
+                rewired.union(self_edge)
+                .filter(F.col("hi") != F.col("lo"))
+                .distinct()
+            )
+
+        edges, _ = fixpoint(
+            edges, _round, max_iters, lambda _, e: _EdgeSet(e), checkpoint_dir
         )
-        self_edge = m2.select(F.col("hi"), F.col("m").alias("lo"))
-        return (
-            rewired.union(self_edge)
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
 
-    edges, _ = fixpoint(
-        edges, _round, max_iters, lambda _, e: _EdgeSet(e), checkpoint_dir
-    )
-
-    # converged: stars rooted at component minima; isolated-from-pairs
-    # nodes cannot occur (every input row is an edge), but nodes whose
-    # component collapsed entirely onto the root need a self row
-    parents = edges.select(F.col("hi").alias("doc_id"), F.col("lo").alias("canonical_id"))
-    roots = all_nodes.join(
-        parents, all_nodes.id == parents.doc_id, "left_anti"
-    ).select(F.col("id").alias("doc_id"), F.col("id").alias("canonical_id"))
-    out = parents.union(roots)
-    fwd.unpersist(blocking=False)
+        # converged: stars rooted at component minima; isolated-from-pairs
+        # nodes cannot occur (every input row is an edge), but nodes whose
+        # component collapsed entirely onto the root need a self row
+        parents = edges.select(F.col("hi").alias("doc_id"), F.col("lo").alias("canonical_id"))
+        roots = all_nodes.join(
+            parents, all_nodes.id == parents.doc_id, "left_anti"
+        ).select(F.col("id").alias("doc_id"), F.col("id").alias("canonical_id"))
+        out = parents.union(roots)
+        fwd.unpersist(blocking=False)
     return out
 
 

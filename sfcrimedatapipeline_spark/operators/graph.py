@@ -12,37 +12,59 @@ so only the node-cardinality ranks side shuffles) followed by a
 map-side-combined ``groupBy(dst).sum()``. On the undirected path the
 mirrored edge list gives every node in-degree ≥ 1, so the per-round
 "nodes LEFT JOIN contribs" backfill is provably a no-op and is
-skipped — two joins per round become one. The edge partition count
-tracks edge volume (bounded by the session parallelism) instead of
-inheriting the static shuffle setting, so a tiny graph schedules a
-handful of tasks per round while a cluster-scale graph still fans
-out. Every round loop here (pagerank, BFS, k-core, label propagation,
-HITS) and both connected-components loops run on one round loop,
-functions/caching.py:fixpoint: lineage is cut each round
-(executor-local by default, or a RELIABLE checkpoint dir via
-``checkpoint_dir=`` for cluster jobs), materialized by the convergence
-probe where there is one, else eagerly every second round and on the
-last. Dangling-node mass is redistributed uniformly via a 1-row
-aggregate, never a collect of rows.
+skipped — two joins per round become one. Every loop here (pagerank,
+BFS, k-core, label propagation, HITS) and both connected-components
+loops run inside functions/caching.py:loop_scope, from their first
+persist to their return: no adaptive re-planning per round, and every
+shuffle partition count tracks edge volume (bounded by the session
+parallelism) instead of the caller's static setting, so a tiny graph
+schedules one task per stage while a cluster-scale graph still fans
+out. They share one round loop, functions/caching.py:fixpoint:
+lineage is cut lazily each round (executor-local by default, or a
+RELIABLE checkpoint dir via ``checkpoint_dir=`` for cluster jobs) and
+materialized by the convergence probe where there is one, else by the
+next round's read and the eager cut of the last round. Dangling-node
+mass is redistributed uniformly via a 1-row aggregate, never a collect
+of rows.
 
-Rank values are IEEE double sums whose low bits depend on aggregation
-order, so the driver query is rows-only by design; the numeric
-contract (parity with a dense numpy power iteration to 1e-12, rank
-mass ≈ 1) is pinned in tests/test_graph.py.
+Without ``deterministic=True`` rank values are IEEE double sums whose
+low bits depend on aggregation order; with it every sum is fixed point
+and the ranks hash-gate. The numeric contract (parity with a dense
+numpy power iteration to 1e-12, rank mass ≈ 1) is pinned in
+tests/test_graph.py.
 """
 
 from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sfcrimedatapipeline_spark.functions.caching import (
     fixpoint,
+    loop_scope,
     truncate_lineage,
     unpersist_when_released,
 )
+
+
+def _projected(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """``(src, dst)`` longs: the shuffle-free first persist a loop sizes
+    its shuffles from (functions/caching.py:loop_scope)."""
+    return pairs.select(
+        F.col(src_col).cast("long").alias("src"),
+        F.col(dst_col).cast("long").alias("dst"),
+    )
+
+
+def _mirrored(fwd: DataFrame) -> DataFrame:
+    """Both directions of every non-self-loop edge, once each."""
+    return (
+        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -61,101 +83,90 @@ def pagerank(
     from executor-local blocks to a RELIABLE checkpoint under that path
     — the cluster setting, where losing an executor must not lose the
     iteration state (functions/caching.py:truncate_lineage)."""
-    fwd = pairs.select(
-        F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
-    )
-    edges = (
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        if undirected
-        else fwd
-    )
-    edges = edges.persist()  # upstream may be a whole dedup pipeline
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    # Fold the loop-invariant out-degree into the edge list ONCE, and
-    # pre-partition it by the join key so each round shuffles only the
-    # node-cardinality ranks frame. Partition count tracks edge volume
-    # (~1M edges/partition) up to the session parallelism — a static
-    # shuffle.partitions would schedule that many near-empty tasks per
-    # round on a small graph.
-    spark = edges.sparkSession
-    e_cnt = edges.count()
-    parts = max(1, min(spark.sparkContext.defaultParallelism, 1 + e_cnt // 1_000_000))
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_deg = (
-        edges.join(out_deg, "src").repartition(parts, "src").persist()
-    )
-    edges_deg.count()
-
-    # deterministic=True swaps the contribution sum for the Q40
-    # fixed-point aggregate (functions/fixedpoint.py): floor-quantized
-    # contributions sum exactly in any order, so the rank trace is
-    # bit-identical across partitionings AND engines — what upgraded
-    # pagerank_dup_graph from rows-only to value-hash gated (its old
-    # blocker was precisely "aggregation-order-dependent low bits").
-    # Quantization bias per round is ≤ in-degree·2^-40 ≈ 1e-10 on rank
-    # mass — far below any ranking decision.
+    # deterministic=True swaps every double sum (the contributions and
+    # the dangling mass) for the Q40 fixed-point aggregate
+    # (functions/fixedpoint.py): floor-quantized terms sum exactly in
+    # any order, so the rank trace is bit-identical across
+    # partitionings AND engines, which lets pagerank_dup_graph be
+    # value-hash gated. Quantization bias per round is
+    # ≤ in-degree·2^-40 ≈ 1e-10 on rank mass, far below any ranking
+    # decision.
     from sfcrimedatapipeline_spark.functions.fixedpoint import sql_fx, sql_unfx
 
-    def _round(ranks: DataFrame) -> DataFrame:
-        joined = edges_deg.join(ranks, edges_deg.src == ranks.id)
-        if deterministic:
-            contribs = (
-                joined.select(
-                    F.col("dst").alias("id"),
-                    F.expr(sql_fx("rank / CAST(deg AS DOUBLE)")).alias("c_fx"),
-                )
-                .groupBy("id")
-                .agg(F.expr(f"{sql_unfx('sum(c_fx)')} ").alias("contrib"))
-            )
-        else:
-            contribs = (
-                joined.select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("deg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("contrib"))
-            )
-        # mass parked on dangling nodes (no out-edges) spreads uniformly.
-        # An undirected graph cannot have dangling nodes (every node is
-        # an edge endpoint, so out_deg >= 1 after mirroring): skip the
-        # per-round aggregate action entirely — on a tiny graph the
-        # round's wall time is dominated by action count, not data.
-        if undirected:
-            dangling = 0.0
-        else:
-            dangling = (
-                ranks.join(out_deg, ranks.id == out_deg.src, "left_anti")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-                .first()["m"]
-            )
-        new_rank = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping)
-            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
-        ).alias("rank")
-        if undirected:
-            # mirrored edges ⇒ every node has in-degree ≥ 1 ⇒ contribs
-            # already covers the full node set; the backfill join is a
-            # provable no-op, so each round is one join + one agg.
-            return contribs.select("id", new_rank)
-        return nodes.join(contribs, "id", "left").select("id", new_rank)
+    with loop_scope(pairs.sparkSession) as size:
+        fwd = _projected(pairs, src_col, dst_col)
+        edges = (
+            fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            if undirected
+            else fwd
+        )
+        edges = edges.persist()  # upstream may be a whole dedup pipeline
+        size(edges)
+        nodes = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .persist()
+        )
+        n = nodes.count()
+        # Fold the loop-invariant out-degree into the edge list ONCE, and
+        # pre-partition it by the join key (into the loop's sized
+        # partition count) so each round shuffles only the
+        # node-cardinality ranks frame.
+        out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+        edges_deg = edges.join(out_deg, "src").repartition("src").persist()
+        edges_deg.count()
 
-    ranks, _ = fixpoint(
-        nodes.withColumn("rank", F.lit(1.0 / n)),
-        _round,
-        iters,
-        checkpoint_dir=checkpoint_dir,
-    )
-    edges.unpersist()
-    edges_deg.unpersist()
-    nodes.unpersist()
+        def _sum(col: str) -> Column:
+            if deterministic:
+                return F.expr(sql_unfx(f"sum({sql_fx(col)})"))
+            return F.sum(col)
+
+        def _round(ranks: DataFrame) -> DataFrame:
+            contribs = (
+                edges_deg.join(ranks, edges_deg.src == ranks.id)
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("rank") / F.col("deg").cast("double")).alias("c"),
+                )
+                .groupBy("id")
+                .agg(_sum("c").alias("contrib"))
+            )
+            # mass parked on dangling nodes (no out-edges) spreads
+            # uniformly. An undirected graph cannot have dangling nodes
+            # (every node is an edge endpoint, so out_deg >= 1 after
+            # mirroring): skip the per-round aggregate action entirely —
+            # on a tiny graph the round's wall time is dominated by
+            # action count, not data.
+            if undirected:
+                dangling = 0.0
+            else:
+                dangling = (
+                    ranks.join(out_deg, ranks.id == out_deg.src, "left_anti")
+                    .agg(F.coalesce(_sum("rank"), F.lit(0.0)).alias("m"))
+                    .first()["m"]
+                )
+            new_rank = (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping)
+                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
+            ).alias("rank")
+            if undirected:
+                # mirrored edges ⇒ every node has in-degree ≥ 1 ⇒ contribs
+                # already covers the full node set; the backfill join is a
+                # provable no-op, so each round is one join + one agg.
+                return contribs.select("id", new_rank)
+            return nodes.join(contribs, "id", "left").select("id", new_rank)
+
+        ranks, _ = fixpoint(
+            nodes.withColumn("rank", F.lit(1.0 / n)),
+            _round,
+            iters,
+            checkpoint_dir=checkpoint_dir,
+        )
+        edges.unpersist()
+        edges_deg.unpersist()
+        nodes.unpersist()
     return ranks.select(F.col("id").alias("doc_id"), "rank")
 
 
@@ -179,7 +190,7 @@ def triangle_count(
         )
         .filter(F.col("lo") < F.col("hi"))
         .distinct()
-        .persist()  # released when the result frame is (ADVICE r4)
+        .persist()  # released with the result frame, not at return
     )
     ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")
     tri = (
@@ -285,46 +296,41 @@ def bfs_distances(
     (unlike PageRank's float ranks). ``max_hops`` bounds the rounds;
     unreached nodes emit no row (mirroring the recursive-CTE oracle).
     """
-    fwd = pairs.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    edges = (
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = edges.select(F.col("src").alias("id")).distinct()
+    with loop_scope(pairs.sparkSession) as size:
+        fwd = _projected(pairs, src_col, dst_col).persist()
+        size(fwd)
+        edges = _mirrored(fwd).persist()
+        nodes = edges.select(F.col("src").alias("id")).distinct()
 
-    def _round(labels: DataFrame) -> DataFrame:
-        via_nbr = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg((F.min("distance") + 1).cast("int").alias("distance"))
-            .withColumnRenamed("src", "id")
+        def _round(labels: DataFrame) -> DataFrame:
+            via_nbr = (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src")
+                .agg((F.min("distance") + 1).cast("int").alias("distance"))
+                .withColumnRenamed("src", "id")
+            )
+            return labels.unionByName(via_nbr).groupBy("id").agg(
+                F.min("distance").alias("distance")
+            )
+
+        def _probe(_, labels: DataFrame) -> tuple:
+            row = labels.agg(
+                F.count("*").alias("n"),
+                F.sum(F.col("distance").cast("decimal(38,0)")).alias("s"),
+            ).first()
+            return (row["n"], row["s"])
+
+        labels, _ = fixpoint(
+            nodes.filter(seed_pred(F.col("id"))).withColumn(
+                "distance", F.lit(0).cast("int")
+            ),
+            _round,
+            max_hops,
+            _probe,
+            checkpoint_dir,
         )
-        return labels.unionByName(via_nbr).groupBy("id").agg(
-            F.min("distance").alias("distance")
-        )
-
-    def _probe(_, labels: DataFrame) -> tuple:
-        row = labels.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("distance").cast("decimal(38,0)")).alias("s"),
-        ).first()
-        return (row["n"], row["s"])
-
-    labels, _ = fixpoint(
-        nodes.filter(seed_pred(F.col("id"))).withColumn(
-            "distance", F.lit(0).cast("int")
-        ),
-        _round,
-        max_hops,
-        _probe,
-        checkpoint_dir,
-    )
-    edges.unpersist()
+        edges.unpersist()
+        fwd.unpersist()
     return labels.select(F.col("id").alias("doc_id"), "distance")
 
 
@@ -366,7 +372,7 @@ def k_core(
     pins the run-to-convergence semantics this fixed-round contract
     stands in for.
 
-    Convergence margin, MEASURED (VERDICT r9 #9): the dup graph's peel
+    Convergence margin, measured: the dup graph's peel
     depth (:func:`k_core_peel_depth`) is **1 round at sf0.001, sf0.01,
     and sf0.1** — LSH near-dup components are dense cliques plus
     degree-1 satellites, so one peel removes every sub-k node and the
@@ -380,7 +386,10 @@ def k_core(
     at both gate SFs each run, so silent erosion of the margin fails
     CI before it can break the gate.
     """
-    core, _ = _k_core_loop(pairs, k, src_col, dst_col, max_iters, checkpoint_dir)
+    with loop_scope(pairs.sparkSession) as size:
+        core, _ = _k_core_loop(
+            pairs, k, src_col, dst_col, max_iters, checkpoint_dir, size
+        )
     return core.select(F.col("src").alias("doc_id"), "degree")
 
 
@@ -395,14 +404,17 @@ def k_core_peel_depth(
     """Measured PEEL DEPTH of the k-core fixed point: the number of
     productive peel rounds before the survivor count stabilizes — the
     quantity the fixed-round gate contract (``KCORE_ROUNDS``) must
-    dominate for the unrolled oracle to equal run-to-convergence
-    (VERDICT r9 #9). Raises if ``max_iters`` rounds don't converge, so
-    a passing call IS a convergence proof at that bound."""
-    _, sizes = _k_core_loop(pairs, k, src_col, dst_col, max_iters, checkpoint_dir)
-    if len(sizes) < 2 or sizes[-1] != sizes[-2]:
-        raise RuntimeError(
-            f"k-core peel did not converge within {max_iters} rounds"
+    dominate for the unrolled oracle to equal run-to-convergence.
+    Raises if ``max_iters`` rounds don't converge, so a passing call IS
+    a convergence proof at that bound."""
+    with loop_scope(pairs.sparkSession) as size:
+        _, sizes = _k_core_loop(
+            pairs, k, src_col, dst_col, max_iters, checkpoint_dir, size
         )
+        if len(sizes) < 2 or sizes[-1] != sizes[-2]:
+            raise RuntimeError(
+                f"k-core peel did not converge within {max_iters} rounds"
+            )
     # the closing equal-count round is the idempotence witness, not a
     # productive round
     return len(sizes) - 1
@@ -415,23 +427,18 @@ def _k_core_loop(
     dst_col: str,
     max_iters: int,
     checkpoint_dir: str | None,
+    size,
 ) -> tuple[DataFrame, list[int]]:
-    """Shared peel loop → (survivors ``(src, degree)``, per-round
+    """Shared peel loop, run inside the caller's ``loop_scope`` (whose
+    ``size`` it takes) → (survivors ``(src, degree)``, per-round
     survivor counts). The state is the survivor set: survivor sets only
     shrink, so a round's alive edges are exactly the input edges with
     both endpoints in the previous survivors. Round 1 starts from every
     node, so the counts are the survivors of peel 1, 2, … and the loop
     stops on the first unchanged count."""
-    fwd = pairs.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    edges = (
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
+    fwd = _projected(pairs, src_col, dst_col).persist()
+    size(fwd)
+    edges = _mirrored(fwd).persist()
 
     def _peel(survivors: DataFrame) -> DataFrame:
         keep = survivors.select("src")
@@ -449,6 +456,7 @@ def _k_core_loop(
         checkpoint_dir,
     )
     edges.unpersist()
+    fwd.unpersist()
     return core, sizes
 
 
@@ -479,7 +487,7 @@ def label_propagation(
     (``checkpoint_dir`` switches to reliable checkpoints for the
     cluster setting).
 
-    Round-count guidance (VERDICT r6 #5): a fixed ``rounds`` keeps the
+    Round-count guidance: a fixed ``rounds`` keeps the
     output deterministic and hash-gateable, but label information only
     travels ``rounds`` hops — on a graph whose communities have larger
     diameter, a too-small count fragments them silently. Before fixing
@@ -509,9 +517,9 @@ def lpa_convergence(
     rounds: int = 3,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Convergence probe for :func:`label_propagation` (VERDICT r6 #5):
-    runs the SAME synchronous rounds and returns one row per round —
-    ``(round_no, n_changed)``, the count of nodes whose label differs
+    """Convergence probe for :func:`label_propagation`, to pick its
+    ``rounds`` on a new corpus: runs the SAME synchronous rounds and
+    returns one row per round — ``(round_no, n_changed)``, the count of nodes whose label differs
     from the previous round. ``n_changed`` hitting its plateau tells
     you the fixed round count has reached the fixpoint; a value still
     falling at the last round means communities are fragmented and
@@ -546,47 +554,41 @@ def _lpa_run(
 ) -> tuple[DataFrame, list]:
     """Shared synchronous-LPA rounds → (final labels, per-round probe
     values from :func:`fixpoint`)."""
-    fwd = pairs.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    spark = edges.sparkSession
-    e_cnt = edges.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, 1 + e_cnt // 1_000_000)
-    )
-    edges_p = edges.repartition(parts, "src").persist()
-    edges_p.count()
+    with loop_scope(pairs.sparkSession) as size:
+        fwd = _projected(pairs, src_col, dst_col)
+        edges = fwd.union(
+            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).persist()
+        size(edges)
+        edges_p = edges.repartition("src").persist()
+        edges_p.count()
 
-    def _round(labels: DataFrame) -> DataFrame:
-        nb = edges_p.join(labels, edges_p.src == labels.id).select(
-            F.col("dst").alias("node"), "label"
-        )
-        cnt = nb.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-        return (
-            cnt.groupBy("node")
-            .agg(
-                F.max(
-                    F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
-                ).alias("m")
+        def _round(labels: DataFrame) -> DataFrame:
+            nb = edges_p.join(labels, edges_p.src == labels.id).select(
+                F.col("dst").alias("node"), "label"
             )
-            .select(F.col("node").alias("id"), (-F.col("m.neg")).alias("label"))
-        )
+            cnt = nb.groupBy("node", "label").agg(F.count("*").alias("cnt"))
+            return (
+                cnt.groupBy("node")
+                .agg(
+                    F.max(
+                        F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
+                    ).alias("m")
+                )
+                .select(F.col("node").alias("id"), (-F.col("m.neg")).alias("label"))
+            )
 
-    labels, probes = fixpoint(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id")),
-        _round,
-        rounds,
-        probe,
-        checkpoint_dir,
-    )
-    edges.unpersist()
-    edges_p.unpersist()
+        labels, probes = fixpoint(
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id")),
+            _round,
+            rounds,
+            probe,
+            checkpoint_dir,
+        )
+        edges.unpersist()
+        edges_p.unpersist()
     return labels, probes
 
 
@@ -625,81 +627,81 @@ def hits(
 
     if iters < 1:
         # zero rounds would return the unnormalized start vector with
-        # no authorities; half a round is also not HITS (ADVICE r9)
+        # no authorities; half a round is also not HITS
         raise ValueError(f"hits() needs iters >= 1, got {iters}")
 
-    edges = (
-        pairs.select(
-            F.greatest(
-                F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-            ).alias("src"),
-            F.least(
-                F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-            ).alias("dst"),
+    with loop_scope(pairs.sparkSession) as size:
+        fwd = (
+            _projected(pairs, src_col, dst_col)
+            .select(
+                F.greatest("src", "dst").alias("src"),
+                F.least("src", "dst").alias("dst"),
+            )
+            .filter(F.col("src") != F.col("dst"))
+            .persist()
         )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    nodes.count()
-
-    fx_sum_v = sql_unfx("sum(" + sql_fx("v") + ")") + " + 0.0"
-    fx_sum_raw = sql_unfx("sum(" + sql_fx("raw") + ")") + " + 0.0"
-
-    # the loop works on SPARSE vectors (only nodes with a nonzero
-    # value): a missing entry is exactly 0 and contributes nothing to
-    # the next half-round's join, so the per-round dense spine backfill
-    # would be a provable no-op — the dense frame materializes ONCE at
-    # output. The raw frame feeds both its L1 total and the division
-    # (and the round's output through two consumers), so it is cut
-    # lazily; the total's broadcast materializes it.
-    def _half(vec: DataFrame, frm: str, to: str) -> DataFrame:
-        g = edges.join(vec, edges[frm] == vec.id).groupBy(F.col(to).alias("id"))
-        raw_sum = F.expr(fx_sum_v) if deterministic else F.sum("v")
-        raw = truncate_lineage(g.agg(raw_sum.alias("raw")), checkpoint_dir)
-        tot_sum = F.expr(fx_sum_raw) if deterministic else F.sum("raw")
-        tot = raw.agg(tot_sum.alias("t"))
-        return raw.crossJoin(F.broadcast(tot)).select(
-            "id", (F.col("raw") / F.col("t")).alias("v")
+        size(fwd)
+        edges = fwd.distinct().persist()
+        nodes = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .persist()
         )
+        nodes.count()
 
-    # one state frame per round: the hub and authority vectors stacked
-    # under a ``side`` tag, so the whole round is one fixpoint step
-    def _side(state: DataFrame, name: str) -> DataFrame:
-        return state.filter(F.col("side") == name).select("id", "v")
+        fx_sum_v = sql_unfx("sum(" + sql_fx("v") + ")") + " + 0.0"
+        fx_sum_raw = sql_unfx("sum(" + sql_fx("raw") + ")") + " + 0.0"
 
-    def _round(state: DataFrame) -> DataFrame:
-        a = _half(_side(state, "h"), "src", "dst")
-        h = _half(a, "dst", "src")
-        return h.withColumn("side", F.lit("h")).unionByName(
-            a.withColumn("side", F.lit("a"))
+        # the loop works on SPARSE vectors (only nodes with a nonzero
+        # value): a missing entry is exactly 0 and contributes nothing to
+        # the next half-round's join, so the per-round dense spine backfill
+        # would be a provable no-op — the dense frame materializes ONCE at
+        # output. The raw frame feeds both its L1 total and the division
+        # (and the round's output through two consumers), so it is cut
+        # lazily; the total's broadcast materializes it.
+        def _half(vec: DataFrame, frm: str, to: str) -> DataFrame:
+            g = edges.join(vec, edges[frm] == vec.id).groupBy(F.col(to).alias("id"))
+            raw_sum = F.expr(fx_sum_v) if deterministic else F.sum("v")
+            raw = truncate_lineage(g.agg(raw_sum.alias("raw")), checkpoint_dir)
+            tot_sum = F.expr(fx_sum_raw) if deterministic else F.sum("raw")
+            tot = raw.agg(tot_sum.alias("t"))
+            return raw.crossJoin(F.broadcast(tot)).select(
+                "id", (F.col("raw") / F.col("t")).alias("v")
+            )
+
+        # one state frame per round: the hub and authority vectors stacked
+        # under a ``side`` tag, so the whole round is one fixpoint step
+        def _side(state: DataFrame, name: str) -> DataFrame:
+            return state.filter(F.col("side") == name).select("id", "v")
+
+        def _round(state: DataFrame) -> DataFrame:
+            a = _half(_side(state, "h"), "src", "dst")
+            h = _half(a, "dst", "src")
+            return h.withColumn("side", F.lit("h")).unionByName(
+                a.withColumn("side", F.lit("a"))
+            )
+
+        state, _ = fixpoint(
+            nodes.select("id", F.lit(1.0).alias("v"), F.lit("h").alias("side")),
+            _round,
+            iters,
+            checkpoint_dir=checkpoint_dir,
         )
-
-    state, _ = fixpoint(
-        nodes.select("id", F.lit(1.0).alias("v"), F.lit("h").alias("side")),
-        _round,
-        iters,
-        checkpoint_dir=checkpoint_dir,
-    )
-    out = (
-        nodes.join(_side(state, "h").withColumnRenamed("v", "hub"), "id", "left")
-        .join(_side(state, "a").withColumnRenamed("v", "authority"), "id", "left")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
+        out = (
+            nodes.join(_side(state, "h").withColumnRenamed("v", "hub"), "id", "left")
+            .join(_side(state, "a").withColumnRenamed("v", "authority"), "id", "left")
+            .select(
+                F.col("id").alias("doc_id"),
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
+            )
         )
-    )
+        fwd.unpersist()
     # the final left-joins against edges/nodes are LAZY: unpersisting
     # here would make every downstream action re-derive the distinct
-    # mirrored edge list and node spine from source (ADVICE r9). Tie
-    # the caches' lifetime to the returned frame instead — the last
-    # round's state is already eagerly cut, so the output joins read
-    # cached inputs exactly once per action.
+    # edge list and node spine from source. Tie the caches' lifetime to
+    # the returned frame instead — the last round's state is already
+    # eagerly cut, so the output joins read cached inputs exactly once
+    # per action.
     return unpersist_when_released(out, edges, nodes)

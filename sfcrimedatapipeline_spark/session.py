@@ -7,6 +7,10 @@ once, here, so every entry point (tests, bench, driver harness) runs
 the same configuration:
 
 - AQE on (runtime coalescing + skew-join splitting) — the 100 TB story.
+  One exception: an iterative graph operator runs without it, on
+  shuffles sized from its edge count, from its first persist to its
+  return (``functions/caching.py:loop_scope``), because adaptive
+  execution submits every query stage of every round as its own job.
 - Shuffle partitions sized to the local core count; at cluster scale
   AQE re-coalesces, so a too-high static number is safe, a too-low one
   is not.

@@ -3,6 +3,8 @@ iteration, rank-mass conservation, and dangling-node handling."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -81,7 +83,7 @@ def test_cc_two_phase_matches_label_prop(spark):
 
 
 def test_cc_two_phase_long_chain_beats_diameter(spark):
-    """The adversarial long chain (VERDICT r4 #8): a 256-node path has
+    """The adversarial long chain: a 256-node path has
     diameter 255 — label-prop needs ~255 rounds (here capped far below
     and returns a WRONG, unconverged labeling), while the star
     algorithm converges in O(log^2) rounds and must be exact."""
@@ -140,6 +142,175 @@ def test_reliable_checkpoint_dir_matches_local(spark, tmp_path, consumer):
     assert [f for _, _, fs in os.walk(ckpt) for f in fs], (
         f"no reliable checkpoint files written for {consumer}"
     )
+
+
+_ADAPTIVE = "spark.sql.adaptive.enabled"
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@contextlib.contextmanager
+def _session_settings(spark, adaptive: str, partitions: str):
+    """The caller's side of a loop: both settings a loop scope owns, set
+    for the block and put back after it."""
+    saved = {k: spark.conf.get(k) for k in (_ADAPTIVE, _PARTITIONS)}
+    spark.conf.set(_ADAPTIVE, adaptive)
+    spark.conf.set(_PARTITIONS, partitions)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _settings(spark) -> tuple[str, str]:
+    return spark.conf.get(_ADAPTIVE), spark.conf.get(_PARTITIONS)
+
+
+@pytest.mark.parametrize("consumer", list(_FIXPOINT_CONSUMERS))
+def test_fixpoint_consumer_ignores_and_restores_caller_settings(spark, consumer):
+    """Every fixpoint consumer runs inside functions/caching.py:loop_scope:
+    its output is the same whether the caller has adaptive execution on
+    or off and 1 or 7 shuffle partitions, and both settings read back
+    unchanged after the call."""
+    run = _FIXPOINT_CONSUMERS[consumer]
+    # two cliques bridged by a path, a tail, and a separate pair
+    pairs = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (5, 6), (5, 7), (6, 7)]
+    pairs += [(7, 8), (8, 9), (10, 11), (1, 12), (12, 13)]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long").repartition(3)
+    outputs = {}
+    for adaptive in ("true", "false"):
+        for partitions in ("1", "7"):
+            with _session_settings(spark, adaptive, partitions):
+                out = sorted(tuple(r) for r in run(df, None).collect())
+                assert _settings(spark) == (adaptive, partitions)
+            outputs[adaptive, partitions] = out
+    first = next(iter(outputs.values()))
+    assert first and all(out == first for out in outputs.values()), outputs
+
+
+def test_loop_scope_restores_settings_on_non_convergence(spark):
+    """``k_core_peel_depth`` raises inside its loop scope when the peel
+    has not converged; the caller's settings still come back."""
+    from sfcrimedatapipeline_spark.operators.graph import k_core_peel_depth
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    with _session_settings(spark, "true", "7"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            k_core_peel_depth(chain, k=2, max_iters=2)
+        assert _settings(spark) == ("true", "7")
+
+
+def test_loop_scopes_nest(spark):
+    """An inner scope (``semantic_dedup`` reaching connected components)
+    hands back the outer scope's settings, the outer one the caller's."""
+    from sfcrimedatapipeline_spark.functions.caching import loop_scope
+
+    edges = spark.range(10)
+    with _session_settings(spark, "true", "7"):
+        with loop_scope(spark) as outer_size:
+            outer_size(edges)
+            assert _settings(spark) == ("false", "1")
+            spark.conf.set(_PARTITIONS, "3")
+            with loop_scope(spark) as inner_size:
+                inner_size(edges)
+                assert _settings(spark) == ("false", "1")
+            assert _settings(spark) == ("false", "3")
+        assert _settings(spark) == ("true", "7")
+
+
+def test_directed_pagerank_deterministic_across_shuffle_partitions(spark):
+    """``pagerank(undirected=False, deterministic=True)`` is bit-identical
+    across shuffle partition counts, and to a pure-Python Q40 replay of
+    the same update math: the per-round dangling mass, like the
+    contributions, is summed in fixed point, not as a double sum in
+    partition order. The graph has many sinks, so that sum has many
+    terms."""
+    import math
+
+    from sfcrimedatapipeline_spark.functions.fixedpoint import FX_SCALE
+
+    rng = np.random.default_rng(7)
+    n = 300
+    edges = sorted(
+        {
+            (int(a), int(b))
+            for a, b in rng.integers(0, n, size=(900, 2))
+            if a != b and a % 3 != 0  # nodes 0, 3, 6, ... have no out-edges
+        }
+    )
+    ranks = {}
+    for partitions in ("1", "4", "32"):
+        with _session_settings(spark, "true", partitions):
+            df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+            df = df.repartition(int(partitions))
+            ranks[partitions] = dict(
+                pagerank(df, undirected=False, deterministic=True).collect()
+            )
+    assert ranks["1"] == ranks["4"] == ranks["32"]
+
+    out_deg = {}
+    for a, _ in edges:
+        out_deg[a] = out_deg.get(a, 0) + 1
+    nodes = sorted({v for e in edges for v in e})
+    r = {v: 1.0 / len(nodes) for v in nodes}
+    for _ in range(10):
+        fx = {}
+        for a, b in edges:
+            fx[b] = fx.get(b, 0) + math.floor(r[a] / float(out_deg[a]) * FX_SCALE)
+        sinks = sum(math.floor(r[v] * FX_SCALE) for v in nodes if v not in out_deg)
+        dangling = sinks / FX_SCALE
+        r = {
+            v: (1.0 - 0.85) / len(nodes)
+            + 0.85 * ((fx[v] / FX_SCALE if v in fx else 0.0) + dangling / len(nodes))
+            for v in nodes
+        }
+    assert ranks["1"] == r
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_graph_loop_job_counts(spark):
+    """Job-count floor of the three loops the corpus benchmark runs, on
+    one fixed pair graph (four 3-cliques, a 6-node path, a pair), each
+    under its own job group, the result collected. With adaptive
+    execution on, every shuffle stage of every round was its own job and
+    every lineage cut ran the stages of the plan it cut: before the
+    loops ran inside a loop scope the counts were label_prop 29,
+    two_phase 46 and pagerank(deterministic=True, iters=10) 37."""
+    pairs = [(c + i, c + j) for c in (0, 10, 20, 30) for i, j in ((0, 1), (1, 2), (0, 2))]
+    pairs += [(40 + i, 41 + i) for i in range(5)] + [(50, 51)]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long").persist()
+    df.count()
+    counts = {
+        "label_prop": _jobs_in_group(
+            spark,
+            "jobs.cc_label_prop",
+            lambda: connected_components(df, algorithm="label_prop").collect(),
+        ),
+        "two_phase": _jobs_in_group(
+            spark,
+            "jobs.cc_two_phase",
+            lambda: connected_components(df, algorithm="two_phase").collect(),
+        ),
+        "pagerank": _jobs_in_group(
+            spark,
+            "jobs.pagerank",
+            lambda: pagerank(df, iters=10, deterministic=True).collect(),
+        ),
+    }
+    df.unpersist()
+    floor = {"label_prop": 14, "two_phase": 18, "pagerank": 16}
+    assert all(counts[k] <= floor[k] for k in floor), counts
 
 
 def test_bfs_multi_source_and_unreachable(spark):
@@ -450,12 +621,11 @@ def test_hits_rejects_zero_iters(spark):
 
 
 def test_hits_output_survives_repeated_actions(spark):
-    """ADVICE r9: hits() used to unpersist edges/nodes BEFORE the
-    returned lazy frame was actioned, so every downstream action
-    re-derived the distinct mirrored edge list from source. The fix
-    ties the caches to the returned frame (unpersist_when_released):
-    holding the result, two successive actions must agree and the
-    edge/node inputs must still be cached (storageLevel.useMemory)."""
+    """hits() ties its edge/node caches to the returned lazy frame
+    (unpersist_when_released) instead of unpersisting them before the
+    frame is actioned, which made every downstream action re-derive the
+    distinct edge list from source: holding the result, two successive
+    actions must agree and the edge/node inputs must still be cached."""
     from sfcrimedatapipeline_spark.operators.graph import hits
 
     df = spark.createDataFrame(
